@@ -5,8 +5,10 @@ PY ?= python
 test:
 	$(PY) -m pytest tests/ -x -q
 
+# one seeded run of each workload in BENCHMARK.json; prints one JSON line each
 bench:
-	$(PY) bench.py
+	$(PY) perfbench/run.py --workload bulk_ingest --seed 1 --seconds 15
+	$(PY) perfbench/run.py --workload query_serve --seed 1 --seconds 15
 
 # spark-submit --py-files payload
 package:

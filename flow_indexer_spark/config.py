@@ -57,10 +57,7 @@ class IndexerSpec:
     #: file subset; each Spark indexer a different row subset)
     filter: str | None = None
     salt: int = 16
-    chunk_mode: str | None = "salt"
-    chunk_size: int | None = None
     postings_layout: str = "range"
-    incremental: bool = True
     #: optional netblock dimension: [[name, cidr], ...] — every routed
     #: row gets longest-prefix-match (block_name, prefix_len) columns
     #: (operators/ipblocks.py; in-row LPM, validated at load time so a
@@ -71,10 +68,7 @@ class IndexerSpec:
         return PipelineConfig(
             output_root=self.output,
             n_salt=self.salt,
-            chunk_mode=self.chunk_mode,
-            chunk_size=self.chunk_size,
             postings_layout=self.postings_layout,
-            incremental=self.incremental,
             ip_blocks=tuple(tuple(b) for b in self.ip_blocks)
             if self.ip_blocks
             else None,

@@ -200,22 +200,11 @@ def normalize_ip_joined_udf(cands: pd.Series) -> pd.Series:
     return cands.map(norm)
 
 
-def extract_ip_candidates_native(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """text -> exploded candidate IP tokens (native, JVM-side)."""
-    return df.withColumn(
-        "entity_raw", F.explode(F.regexp_extract_all(F.col(text_col), F.lit(IP_PATTERN), F.lit(0)))
-    )
-
-
 @pandas_udf(ArrayType(StringType()))
 def _extract_ips_pandas(text: pd.Series) -> pd.Series:
     """Differential twin of the native candidate path (same pattern, Python re)."""
     rx = re.compile(IP_PATTERN)
     return text.map(lambda t: rx.findall(t) if isinstance(t, str) else [])
-
-
-def extract_ip_candidates_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("entity_raw", F.explode(_extract_ips_pandas(F.col(text_col))))
 
 
 def _clean_distinct(arr):

@@ -37,9 +37,7 @@ def fold_posting_chunks(postings):
     /root/reference/store/leveldb.go:261-278, done as one batch groupBy).
     Batches index disjoint documents, so flatten (no distinct) is exact;
     a hot entity still merges as n_salt parallel chunk groups, not one
-    serial task. Non-chunked tables pass through unchanged."""
-    if "chunk_id" not in postings.columns:
-        return postings
+    serial task."""
     return (
         postings.groupBy("entity_class", "entity_key", "chunk_id")
         .agg(
@@ -64,10 +62,7 @@ def recompute_ts_bounds(folded, turn_ts):
     aggregating, no per-key arrays beyond the postings rows themselves.
     That is a full-table pass, which is exactly what compaction already
     is; it adds no new asymptotics to the rewrite."""
-    keys = [
-        c for c in ("entity_class", "entity_key", "chunk_id")
-        if c in folded.columns
-    ]
+    keys = ["entity_class", "entity_key", "chunk_id"]
     # routed stores a turn once per entity class it contains; ts is a
     # per-turn fact, so any representative is exact
     turn_ts = turn_ts.groupBy("conv_id", "turn_idx").agg(F.max("ts").alias("_ts"))

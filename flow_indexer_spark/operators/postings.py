@@ -1,19 +1,20 @@
-"""Inverted-index build: entity -> sorted posting list of (conv_id, turn_idx).
+"""Inverted-index build: entity -> sorted posting chunks of (conv_id, turn_idx).
 
 Reference analogue: ``store.AddDocument`` read-modify-write of per-entity
 bitsets in LevelDB (/root/reference/store/leveldb.go:70-96, 261-278), with
-codecs in store/codec.go. In Spark the index is a **recomputed aggregate**,
-not a mutable store: one salted two-phase groupBy produces the whole table,
-and Parquet/Iceberg delta+RLE encodings on the sorted arrays replace the
-hand-rolled bitset/msgpack codecs (store/codec.go:25-220 — measured ~2-3.5x
-there; free here).
+codecs in store/codec.go. In Spark the index is an **appended aggregate**,
+not a mutable store: each ingest batch groups its own rows into pre-sorted
+salt-chunk rows and appends them; the posting union happens at query time
+(explode) and offline in ``compact.fold_posting_chunks``. Parquet/Iceberg
+delta+RLE encodings on the sorted arrays replace the hand-rolled
+bitset/msgpack codecs (store/codec.go:25-220 — measured ~2-3.5x there;
+free here).
 
 Skew: a hot entity present in ~every turn (the dense-bitset case the
 reference documents in experiments/convert_to_msgpack.go:10-12) would put
-one groupBy key on one reducer. The two-phase salted aggregate bounds the
-per-task state: phase 1 groups on (entity, salt) with partial collect_set,
-phase 2 merges the <= n_salt partial arrays per entity. Map-side partial
-aggregation applies in both phases.
+one groupBy key on one reducer. Salting the group key by a hash of the
+document splits it into n_salt chunk rows of ~N/n_salt postings each, so
+no task holds or sorts a whole hot list.
 """
 
 from __future__ import annotations
@@ -27,104 +28,54 @@ def build_postings(
     extracted: DataFrame,
     *,
     n_salt: int = 16,
-    chunk_size: int | None = None,
-    chunk_mode: str | None = None,
-    assume_unique: bool = True,
+    chunk_mode: str = "salt",
 ) -> DataFrame:
-    """Salted skew-aware inverted-index aggregate.
+    """Salted skew-aware inverted-index aggregate, one row per salt chunk.
 
-    Input: long-format entity rows (one per (turn, entity), already deduped
-    per turn). Output schema:
-      entity_class, entity_key, postings: array<struct<conv_id,turn_idx>>,
-      ndocs, ts_min, ts_max.
+    Input: long-format entity rows with at most one row per
+    (entity_class, entity_key, conv_id, turn_idx) — ``extract_entities``
+    guarantees this via its per-turn dropDuplicates. Output schema:
+      entity_class, entity_key, chunk_id, postings:
+      array<struct<conv_id,turn_idx>>, ndocs, ts_min, ts_max.
 
-    ``postings`` is sorted by (conv_id, turn_idx) — the stable-turn-ordering
-    invariant; array_sort on structs orders by fields left-to-right, which
-    matches the reference's sorted doc-id bitsets.
+    Each (entity, salt) bucket becomes its own chunk row, so the build is
+    ONE shuffle with no merge groupBy, and a hot entity's list is sorted
+    as n_salt parallel ~N/n_salt-element sorts instead of one serial
+    N-element sort (a key present in ~every turn is 10^12 elements at
+    target scale, impossible as one array row anyway). ``postings`` is
+    sorted by (conv_id, turn_idx) *within* each chunk — array_sort on
+    structs orders by fields left-to-right, matching the reference's
+    sorted doc-id bitsets. Chunks of one entity interleave (salt is a
+    hash of the doc key), exactly like the reference's per-month DBs
+    interleave doc ids across stores; queries explode chunks, and
+    ``entity_totals`` sums their ndocs. The input's uniqueness makes
+    collect_list exact without array_distinct, which over array<struct>
+    is an O(n^2) nested loop in Spark.
 
-    With ``chunk_size`` set, giant posting lists are split into fixed-size
-    chunks (entity_key, chunk_id, postings) to bound row size — the analogue
-    of the reference's "partition dbs so unique-ips/day fits" guidance
-    (/root/reference/README.md:44-48).
-
-    ``assume_unique=True`` (default) requires the input to carry at most one
-    row per (entity_class, entity_key, conv_id, turn_idx) — which
-    ``extract_entities`` guarantees via its per-turn dropDuplicates. Salt
-    buckets then partition each entity's postings disjointly, so the merge
-    is a plain flatten+sort with **no** array_distinct: array_distinct over
-    array<struct> is an O(n^2) nested-loop in Spark (no hashing for struct
-    elements) and is catastrophic on hot keys — measured 140s vs 5s on an
-    8-key x 100k-posting skew case. With ``assume_unique=False`` the dedup
-    happens up front as a scalable hash-shuffle dropDuplicates instead.
-
-    ``chunk_mode='salt'`` is the **scale path**: each salt bucket becomes
-    its own pre-sorted chunk row (entity_class, entity_key, chunk_id,
-    postings) and the final merge groupBy disappears — ONE shuffle total,
-    and a hot entity's list is sorted as n_salt parallel ~N/n_salt-element
-    sorts instead of one serial N-element sort (the serial tail that caps
-    scaling: a key present in ~every turn — the reference's dense-bitset
-    case, experiments/convert_to_msgpack.go:10-12 — is 10^12 elements at
-    target scale, impossible as one array row anyway). Postings are sorted
-    *within* each chunk; chunks of one entity interleave (salt is a hash of
-    the doc key), exactly like the reference's per-month DBs interleave
-    doc ids across stores. Query/explode semantics are unchanged.
+    ``chunk_mode`` accepts only ``'salt'``, the one posting format.
     """
-    if chunk_mode == "salt" and chunk_size:
+    if chunk_mode != "salt":
         raise ValueError(
-            "chunk_size only applies to chunk_mode=None (merged arrays); "
-            "chunk_mode='salt' bounds chunk rows to ~N/n_salt postings by "
-            "construction — tune n_salt instead"
+            f"chunk_mode must be 'salt' (the only posting format), got {chunk_mode!r}"
         )
-    if not assume_unique:
-        extracted = extracted.dropDuplicates(
-            ["entity_class", "entity_key", "conv_id", "turn_idx"]
+    return (
+        extracted.withColumn(
+            "chunk_id", F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt))
         )
-    salted = extracted.withColumn(
-        "_salt", F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt))
+        .groupBy("entity_class", "entity_key", "chunk_id")
+        .agg(
+            F.array_sort(F.collect_list(F.expr(POSTING_STRUCT))).alias("postings"),
+            F.min("ts").alias("ts_min"),
+            F.max("ts").alias("ts_max"),
+        )
+        .withColumn("ndocs", F.size("postings"))
     )
-    if chunk_mode == "salt":
-        out = (
-            salted.groupBy("entity_class", "entity_key", "_salt")
-            .agg(
-                F.array_sort(F.collect_list(F.expr(POSTING_STRUCT))).alias("postings"),
-                F.min("ts").alias("ts_min"),
-                F.max("ts").alias("ts_max"),
-            )
-            .withColumnRenamed("_salt", "chunk_id")
-            .withColumn("ndocs", F.size("postings"))
-        )
-        return out
-    partial = salted.groupBy("entity_class", "entity_key", "_salt").agg(
-        F.collect_list(F.expr(POSTING_STRUCT)).alias("_p"),
-        F.min("ts").alias("_ts_min"),
-        F.max("ts").alias("_ts_max"),
-    )
-    final = partial.groupBy("entity_class", "entity_key").agg(
-        F.array_sort(F.flatten(F.collect_list("_p"))).alias("postings"),
-        F.min("_ts_min").alias("ts_min"),
-        F.max("_ts_max").alias("ts_max"),
-    )
-    out = final.withColumn("ndocs", F.size("postings"))
-    if chunk_size:
-        # slice the sorted array into chunks; chunk_id preserves global order
-        n_chunks = F.ceil(F.size("postings") / F.lit(chunk_size)).cast("int")
-        out = (
-            out.withColumn("chunk_id", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
-            .withColumn(
-                "postings",
-                F.slice("postings", F.col("chunk_id") * chunk_size + 1, chunk_size),
-            )
-            .withColumn("ndocs", F.size("postings"))
-        )
-    return out
 
 
 def entity_totals(postings: DataFrame) -> DataFrame:
-    """Per-entity totals over a (possibly chunked) postings table:
+    """Per-entity totals over a chunked postings table:
     (entity_class, entity_key, ndocs). Cheap second-level aggregate — the
     per-chunk rows are already tiny relative to the corpus."""
-    if "chunk_id" not in postings.columns:
-        return postings.select("entity_class", "entity_key", "ndocs")
     return postings.groupBy("entity_class", "entity_key").agg(
         F.sum("ndocs").alias("ndocs")
     )

@@ -31,7 +31,8 @@ unpublished dirs before working (sources/manifest.py).
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,26 +56,20 @@ from flow_indexer_spark.sources.manifest import (
 class PipelineConfig:
     """One 'indexer' in reference terms
     (/root/reference/flowindexer/flowindexer.go:26-37): where to read,
-    where to route, how to aggregate."""
+    where to route, how to aggregate. Postings are always pre-sorted salt
+    chunks (n_salt per entity at most), and every batch APPENDS its own
+    chunk rows — O(delta) per increment (see build_postings)."""
+
+    #: the one posting format, readable as ``cfg.chunk_mode`` by callers
+    #: that pass it on to build_postings; a constant, not a field
+    chunk_mode: ClassVar[str] = "salt"
 
     output_root: str
     n_salt: int = 16
-    #: only with chunk_mode=None: slice merged arrays into fixed-size
-    #: chunk rows. Setting it alongside chunk_mode='salt' raises (salt
-    #: chunks are bounded via n_salt instead — see build_postings).
-    chunk_size: int | None = None
-    #: 'salt' (default, the scale path): postings stored as pre-sorted salt
-    #: chunks — one shuffle, no serial hot-key merge, and incremental
-    #: batches APPEND chunk rows (O(delta) per increment). None: single
-    #: fully merged sorted array per entity (small-scale /
-    #: reference-identical; incremental runs rebuild from full history).
-    chunk_mode: str | None = "salt"
     #: postings file layout: 'range' (non-overlapping key ranges, extra
     #: shuffle) or 'local' (sorted files, one less shuffle; compaction
     #: restores range layout offline) — see write_postings.
     postings_layout: str = "range"
-    use_pandas_ip_extractor: bool = False
-    incremental: bool = True
     #: optional (name, cidr) netblock dimension: every routed row's
     #: entity_key gets longest-prefix-match (block_name, prefix_len)
     #: columns via the join-free in-row LPM (operators/ipblocks.py
@@ -82,7 +77,6 @@ class PipelineConfig:
     #: codegen span, zero extra shuffles on the ingest hot path).
     #: config.py exposes this as the per-indexer ``ip_blocks`` key.
     ip_blocks: tuple[tuple[str, str], ...] | None = None
-    extra: dict = field(default_factory=dict)
 
     @property
     def routed_path(self) -> str:
@@ -104,7 +98,7 @@ def run_ingest(
     tool_registry: DataFrame | None = None,
     role_taxonomy: DataFrame | None = None,
     *,
-    use_manifest_antijoin: bool | None = None,
+    use_manifest_antijoin: bool = True,
     extra_manifest_rows: list[dict] | None = None,
 ) -> dict:
     """Run one ingest batch. Returns metrics dict (turns/entities/errors).
@@ -114,11 +108,10 @@ def run_ingest(
     output dirs are deleted before new work (retry). Single writer per
     output_root assumed (the reference runs one daemon per config too).
 
-    ``use_manifest_antijoin`` overrides the date-level anti-join without
-    touching ``config.incremental`` — Structured Streaming's foreachBatch
-    sets it False because the checkpoint already delivers each file
-    exactly once, while the date-level unit would drop later same-day
-    batches (streaming/ingest.py).
+    ``use_manifest_antijoin=False`` disables the date-level anti-join —
+    Structured Streaming's foreachBatch sets it because the checkpoint
+    already delivers each file exactly once, while the date-level unit
+    would drop later same-day batches (streaming/ingest.py).
 
     ``extra_manifest_rows`` are committed atomically with this batch's
     lineage rows (same manifest append, same run_id) — the streaming layer
@@ -144,13 +137,11 @@ def run_ingest(
     _mark("orphan_cleanup")
 
     src = with_src_partition(transcripts)
-    antijoin = config.incremental if use_manifest_antijoin is None else use_manifest_antijoin
-    if antijoin and have_manifest:
+    if use_manifest_antijoin and have_manifest:
         src = pending_partitions(src, manifest)
 
     extracted = extract_entities(
         src,
-        use_pandas_ip_extractor=config.use_pandas_ip_extractor,
         carry_cols=("conv_id", "turn_idx", "role", "text", "tool", "ts", "src_partition"),
         keep_empty_turns=True,  # routed retains every turn -> exact lineage counts
     )
@@ -192,20 +183,14 @@ def run_ingest(
     # lineage pass is a 3-column pruned scan + map-side-combined partial
     # aggregation — shuffle bytes O(partitions), not O(turns).
     #
-    # In the delta path (salt chunks + incremental — the scale default)
-    # the lineage job OVERLAPS the postings job (one Spark session runs
+    # The lineage job OVERLAPS the postings job (one Spark session runs
     # concurrent actions from separate threads; the small lineage agg
     # drains in the postings scan's slack instead of serializing ~0.3 s
-    # of wall before it). Safe w.r.t. the empty-batch skip there: the
-    # postings APPEND lands under this run's unpublished batch_id dir,
-    # so if lineage turns out empty we return without the manifest
-    # commit and remove the just-written dirs (clean_orphan_batches
-    # would equally reclaim them on the next run — write-audit-publish).
-    # Merged mode must NOT overlap: its postings write is an OVERWRITE
-    # rebuild keyed to this run_id, and reclaiming that as an orphan
-    # after an empty batch would drop published history — it keeps the
-    # serial lineage-first order and the early return.
-    delta_mode = config.chunk_mode == "salt" and config.incremental
+    # of wall before it). Safe w.r.t. the empty-batch skip: the postings
+    # APPEND lands under this run's unpublished batch_id dir, so if
+    # lineage turns out empty we return without the manifest commit and
+    # remove the just-written dirs (clean_orphan_batches would equally
+    # reclaim them on the next run — write-audit-publish).
     head = F.col("_turn_head")
     lineage_df = batch_rows.groupBy("src_partition").agg(
         F.sum(head.cast("long")).alias("n_turns"),
@@ -220,42 +205,27 @@ def run_ingest(
         except BaseException as e:  # re-raised on the caller thread
             lineage_box["err"] = e
 
-    if delta_mode:
-        lineage_thread = threading.Thread(target=_collect_lineage, daemon=True)
-        lineage_thread.start()
-    else:
-        _collect_lineage()
-        lineage_thread = None
-        if "err" in lineage_box:
-            raise lineage_box["err"]
-        if not lineage_box["rows"]:
-            _mark("lineage_metrics")
-            return {"skipped": True, "n_turns": 0, "n_entities": 0,
-                    "n_errors": 0, "wall_ms": timer.ms()}
+    lineage_thread = threading.Thread(target=_collect_lineage, daemon=True)
+    lineage_thread.start()
 
-    # Postings index. Scale path (salt chunks + incremental): aggregate
-    # THIS batch only and append its chunk rows — O(delta). Merged-array
-    # mode can't append (one row per entity), so it rebuilds from history.
-    postings_src = (batch_rows if delta_mode else routed_back).filter(
-        F.col("entity_key").isNotNull()
-    )
+    # Postings index: aggregate THIS batch only and append its salt-chunk
+    # rows — O(delta), never a rebuild from history.
     postings = build_postings(
-        postings_src.select("entity_class", "entity_key", "conv_id", "turn_idx", "ts"),
+        batch_rows.filter(F.col("entity_key").isNotNull()).select(
+            "entity_class", "entity_key", "conv_id", "turn_idx", "ts"
+        ),
         n_salt=config.n_salt,
-        chunk_size=config.chunk_size,
-        chunk_mode=config.chunk_mode,
     )
     write_postings(
         postings.withColumn("batch_id", F.lit(run_id)),
         config.postings_path,
-        mode="append" if delta_mode else "overwrite",
+        mode="append",
         layout=config.postings_layout,
         partition_cols=("batch_id", "entity_class"),
     )
     _mark("postings_index")
 
-    if lineage_thread is not None:
-        lineage_thread.join()
+    lineage_thread.join()
     if "err" in lineage_box:
         raise lineage_box["err"]
     lineage = lineage_box["rows"]
@@ -323,7 +293,7 @@ def forget_conversations(
     partitions by ``exists(postings, x -> x.conv_id IN ids)`` — NOT by
     the routed rows' batch_ids, because postings batch_ids diverge from
     routed batch_ids after ``compact_postings`` (everything lands under
-    ``batch_id=compact-*``) and under merged rebuilds. Entity-free
+    ``batch_id=compact-*``). Entity-free
     turns live under the Hive null partition, so entity_class is
     coalesced to ``__HIVE_DEFAULT_PARTITION__`` on both sides of every
     partition-membership test (concat_ws silently drops NULLs) and in
@@ -399,8 +369,8 @@ def forget_conversations(
                 )
 
         # Postings are scoped by CONTENT, independently of the routed
-        # pairs: after compaction or a merged rebuild the postings live
-        # under batch_ids the routed table has never heard of.
+        # pairs: after compaction the postings live under batch_ids the
+        # routed table has never heard of.
         post = spark.read.parquet(config.postings_path)
         touched = F.exists("postings", lambda x: x["conv_id"].isin(ids))
         post_pairs = {

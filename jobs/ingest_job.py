@@ -12,7 +12,7 @@ Cluster usage (north_rule: "runs via spark-submit --py-files across N and
         jobs/ingest_job.py \
         --input /path/to/transcripts_parquet \
         --output /path/to/index_root \
-        [--streaming] [--salt 16] [--no-incremental]
+        [--streaming] [--salt 16] [--compact]
 
 Local smoke run (this sandbox):
 
@@ -34,21 +34,6 @@ def main() -> None:
     ap.add_argument("--input", required=False, default=None, help="transcripts parquet path/table (not needed with --forget)")
     ap.add_argument("--output", required=True, help="index output root")
     ap.add_argument("--salt", type=int, default=16, help="postings agg salt buckets")
-    ap.add_argument(
-        "--chunk-size",
-        type=int,
-        default=None,
-        help="posting chunk rows; only valid with --chunk-mode none "
-        "(salt mode bounds chunks via --salt instead)",
-    )
-    ap.add_argument(
-        "--chunk-mode",
-        choices=["salt", "none"],
-        default="salt",
-        help="'salt' (default scale path: pre-sorted per-salt chunk rows) or "
-        "'none' (fully merged arrays; combine with --chunk-size to bound rows)",
-    )
-    ap.add_argument("--no-incremental", action="store_true")
     ap.add_argument("--streaming", action="store_true", help="AvailableNow stream tick")
     ap.add_argument(
         "--forget",
@@ -71,13 +56,7 @@ def main() -> None:
         app_name="flow-indexer-ingest",
         master=f"local[{args.cpus}]" if args.cpus else None,
     )
-    cfg = PipelineConfig(
-        output_root=args.output,
-        n_salt=args.salt,
-        chunk_size=args.chunk_size,
-        chunk_mode=None if args.chunk_mode == "none" else args.chunk_mode,
-        incremental=not args.no_incremental,
-    )
+    cfg = PipelineConfig(output_root=args.output, n_salt=args.salt)
     if args.forget:
         from flow_indexer_spark.plans.pipeline import forget_conversations
 

@@ -46,6 +46,21 @@ def test_load_config_valid(tmp_path):
     assert cfg.indexers[0].pipeline_config().n_salt == 16
 
 
+def test_load_config_parses_shipped_example():
+    """The example config in the repo root stays loadable by the strict
+    loader (a removed knob left in it would make it raise)."""
+    from pathlib import Path
+
+    example = Path(__file__).resolve().parents[1] / "example_pipeline_config.json"
+    cfg = load_config(str(example))
+    assert cfg.http_bind == "127.0.0.1:8081"
+    assert [ix.name for ix in cfg.indexers] == ["conn", "tool_turns"]
+    pc = cfg.indexers[0].pipeline_config()
+    assert (pc.n_salt, pc.postings_layout, pc.chunk_mode) == (16, "range", "salt")
+    assert len(pc.ip_blocks) == 4
+    assert cfg.indexers[1].filter == "role = 'tool'"
+
+
 @pytest.mark.parametrize(
     "doc, msg",
     [
@@ -57,6 +72,10 @@ def test_load_config_valid(tmp_path):
                        {"name": "a", "input": "/a", "output": "/c"}]},
          "duplicate indexer name"),
         ({"indexerz": []}, "unknown config keys"),
+        ({"indexers": [{"name": "a", "input": "/a", "output": "/b",
+                        "chunk_mode": "salt"}]}, "unknown keys"),
+        ({"indexers": [{"name": "a", "input": "/a", "output": "/b",
+                        "incremental": False}]}, "unknown keys"),
     ],
 )
 def test_load_config_rejects(tmp_path, doc, msg):

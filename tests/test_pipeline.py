@@ -65,14 +65,28 @@ def test_enrich_columns_and_null_path(spark, pipeline_out):
 
 
 def test_manifest_resume_idempotent(spark, transcripts, dims, tmp_path):
+    """Re-running a batch is a no-op on BOTH sinks: no routed row is
+    appended twice, and no posting entry is indexed twice (neither
+    inside one chunk row nor across the entity's chunk rows)."""
     cfg = PipelineConfig(output_root=str(tmp_path / "out"))
     tr, rt = dims
+
+    def ndocs_total():
+        post = spark.read.parquet(cfg.postings_path)
+        return post.agg(F.sum("ndocs")).first()[0]
+
     m1 = run_ingest(spark, transcripts, cfg, tr, rt)
     n_routed_1 = spark.read.parquet(cfg.routed_path).count()
+    ndocs_1 = ndocs_total()
     m2 = run_ingest(spark, transcripts, cfg, tr, rt)
     n_routed_2 = spark.read.parquet(cfg.routed_path).count()
     assert m1["skipped"] is False and m2["skipped"] is True
     assert n_routed_1 == n_routed_2  # no duplicate appends
+    assert ndocs_total() == ndocs_1 > 0
+    entries = spark.read.parquet(cfg.postings_path).select(
+        "entity_class", "entity_key", F.explode("postings").alias("p")
+    )
+    assert entries.count() == entries.distinct().count()
 
 
 def test_incremental_new_partition_only(spark, transcripts, dims, tmp_path):
