@@ -160,28 +160,31 @@ def bt_oracle_sql(
     """The identical MM recurrence unrolled in ANSI SQL (DuckDB), same
     fold orders (``SUM(... ORDER BY ...)``) and the same single
     round(dp) per round.  Ends with CTE ``fin(item, rating)``; append a
-    SELECT."""
+    SELECT.  Every CTE is MATERIALIZED: each round reads the previous
+    round's ratings twice, so an inlined chain would re-evaluate the
+    duel scan ~4**n_iter times (DuckDB inlines CTEs by default)."""
     parts = [
-        f"duels AS ({duels_cte})",
-        f"""pc AS (
+        f"duels AS MATERIALIZED ({duels_cte})",
+        f"""pc AS MATERIALIZED (
           SELECT LEAST({winner_col}, {loser_col}) AS item_a,
                  GREATEST({winner_col}, {loser_col}) AS item_b,
                  COUNT(*) AS n_duels,
                  SUM(CASE WHEN {winner_col} < {loser_col} THEN 1 ELSE 0 END) AS wins_a
           FROM duels GROUP BY 1, 2)""",
-        f"""dir AS (
+        f"""dir AS MATERIALIZED (
           SELECT item_a AS item, item_b AS other,
                  n_duels + 2.0 * {smooth} AS n, wins_a + {smooth} AS w FROM pc
           UNION ALL
           SELECT item_b, item_a,
                  n_duels + 2.0 * {smooth}, n_duels - wins_a + {smooth} FROM pc)""",
-        "wins AS (SELECT item, SUM(w ORDER BY other) AS wins FROM dir GROUP BY item)",
-        f"""r0 AS (SELECT item,
+        """wins AS MATERIALIZED (
+          SELECT item, SUM(w ORDER BY other) AS wins FROM dir GROUP BY item)""",
+        f"""r0 AS MATERIALIZED (SELECT item,
              round(1.0 / (SELECT COUNT(*) FROM wins), {dp}) AS p FROM wins)""",
     ]
     for i in range(n_iter):
         parts.append(
-            f"""d{i} AS (
+            f"""d{i} AS MATERIALIZED (
               SELECT dir.item,
                      SUM(dir.n / (ra.p + rb.p) ORDER BY dir.other) AS den
               FROM dir
@@ -190,15 +193,15 @@ def bt_oracle_sql(
               GROUP BY dir.item)"""
         )
         parts.append(
-            f"""q{i} AS (
+            f"""q{i} AS MATERIALIZED (
               SELECT wins.item, wins.wins / d{i}.den AS q
               FROM wins JOIN d{i} ON d{i}.item = wins.item)"""
         )
         parts.append(
-            f"""r{i + 1} AS (
+            f"""r{i + 1} AS MATERIALIZED (
               SELECT item,
                      round(q / (SELECT SUM(q ORDER BY item) FROM q{i}), {dp}) AS p
               FROM q{i})"""
         )
-    parts.append(f"fin AS (SELECT item, p AS rating FROM r{n_iter})")
+    parts.append(f"fin AS MATERIALIZED (SELECT item, p AS rating FROM r{n_iter})")
     return "WITH " + ",\n".join(parts)
