@@ -2,8 +2,10 @@ PY ?= python
 
 .PHONY: test bench package smoke
 
+# the ROADMAP tier-1 command: same env, timeout and flags as the gate
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # one seeded run of each workload in BENCHMARK.json; prints one JSON line each
 bench:

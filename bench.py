@@ -101,12 +101,11 @@ def _session(cpus: int, shuffle_partitions: int | None = None):
 
 
 def _cfg(out_root: str):
-    """Ingest-throughput production config: salt-chunked postings (no
-    serial hot-key merge) + 'local' file layout (one less shuffle; offline
-    compaction restores the range layout — operators/compact.py)."""
+    """Production config: salt-chunked postings (no serial hot-key merge)
+    written in the one range-partitioned, key-sorted file layout."""
     from flow_indexer_spark.plans.pipeline import PipelineConfig
 
-    return PipelineConfig(output_root=out_root, postings_layout="local")
+    return PipelineConfig(output_root=out_root)
 
 
 def _steal_sample() -> tuple[int, int]:

@@ -57,7 +57,6 @@ class IndexerSpec:
     #: file subset; each Spark indexer a different row subset)
     filter: str | None = None
     salt: int = 16
-    postings_layout: str = "range"
     #: optional netblock dimension: [[name, cidr], ...] — every routed
     #: row gets longest-prefix-match (block_name, prefix_len) columns
     #: (operators/ipblocks.py; in-row LPM, validated at load time so a
@@ -68,7 +67,6 @@ class IndexerSpec:
         return PipelineConfig(
             output_root=self.output,
             n_salt=self.salt,
-            postings_layout=self.postings_layout,
             ip_blocks=tuple(tuple(b) for b in self.ip_blocks)
             if self.ip_blocks
             else None,

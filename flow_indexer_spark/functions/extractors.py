@@ -56,10 +56,10 @@ _IPV6 = (
 IP_PATTERN_STRICT = r"(?<![\w.:])(?:" + _IPV4 + "|" + _IPV6 + r")(?![\w.:])"
 
 # The SCAN pattern is deliberately LOOSER: extraction always validates
-# candidates afterwards (ipaddress semantics in normalize_ip_array_udf /
-# the _V4_FULL gate in the hybrid), so the scan only has to (a) honor the
-# same boundary guards and (b) match every valid address form a
-# boundary-delimited run can spell. The change is CORRECTNESS-driven:
+# candidates afterwards (ipaddress semantics in the normalizer UDFs), so
+# the scan only has to (a) honor the same boundary guards and (b) match
+# every valid address form a boundary-delimited run can spell. The change
+# is CORRECTNESS-driven:
 # the strict alternation drops general v4-embedded IPv6 like
 # 64:ff9b::1.2.3.4 (it only special-cased ::ffff:v4); the loose scan +
 # run-enumeration oracle tests pin exact parity with "every maximal
@@ -114,11 +114,9 @@ def normalize_ip_array_udf(cands: pd.Series) -> pd.Series:
     occurrence (order is irrelevant downstream — postings re-sort).
     Colon-free tokens take the :func:`_v4_fast_key` fast path (~8x
     cheaper than ipaddress object construction; candidates are
-    overwhelmingly v4 in the usual log/transcript mix) — it is what
-    keeps this all-Python normalizer at parity with the JVM-v4 hybrid
-    even under the loose scan's junk candidates; ipaddress remains the
-    authority for every colon-bearing token (:: expansion, v4-mapped,
-    zone-less v6) and the differential tests pin fast-path ==
+    overwhelmingly v4 in the usual log/transcript mix); ipaddress
+    remains the authority for every colon-bearing token (:: expansion,
+    v4-mapped, zone-less v6) and the differential tests pin fast-path ==
     ipaddress on the fixtures."""
 
     def norm(arr):
@@ -210,65 +208,6 @@ def _extract_ips_pandas(text: pd.Series) -> pd.Series:
 def _clean_distinct(arr):
     """array -> distinct non-null non-empty elements (in-row dedup)."""
     return F.array_distinct(F.filter(arr, lambda x: x.isNotNull() & (x != "")))
-
-
-#: full-match guard for a candidate token being plain dotted-quad IPv4
-_V4_FULL = "^" + _IPV4 + "$"
-
-
-def _ipv4_token_to_key(tok):
-    """Dotted-quad token -> 8-hex key, pure JVM (split + lpad(hex)).
-    Safe without ipaddress validation: the extraction regex only emits
-    canonical octets (no 999s, no leading zeros), so conversion == packed
-    bytes. Matches functions.keys.ip_to_key output exactly (differential
-    test in tests/test_keys.py)."""
-    parts = F.split(tok, r"\.")
-    return F.lower(
-        F.concat(
-            *[
-                F.lpad(F.hex(F.element_at(parts, i + 1).cast("int")), 2, "0")
-                for i in range(4)
-            ]
-        )
-    )
-
-
-def _v6_plausible(t):
-    """JVM-side structural gate for candidates that deserve the Python
-    ipaddress authority: contains a colon AND ("::" present, or exactly
-    8 colon-split parts, or 7 parts with an embedded dotted quad) —
-    the same exact rule as the normalizer's exception-free pre-reject.
-    Everything else (timestamps, ports, dotted junk) dies in codegen."""
-    return t.contains(":") & (
-        t.contains("::")
-        | (
-            F.size(F.split(t, ":", -1))
-            == F.when(t.contains("."), F.lit(7)).otherwise(F.lit(8))
-        )
-    )
-
-
-def normalize_ip_candidates(cands):
-    """Candidate token array -> distinct canonical hex keys, hybrid path:
-    IPv4 tokens convert in the JVM (the hot path — most log/transcript
-    IPs are v4); only STRUCTURALLY PLAUSIBLE v6 candidates cross the
-    Arrow boundary for ipaddress-based validation/canonicalization
-    (:: expansion, v4-embedded forms). The structural ``_v6_plausible``
-    gate keeps the Python payload tiny, and on PRE-MATERIALIZED
-    candidate arrays this path wins big (0.6 s vs 3.1 s full-UDF on 32M
-    candidates — Arrow->Python object conversion is ~1-2 us/token
-    regardless of what Python does with it). But FUSED with the regex
-    scan in one whole-stage pipeline it LOSES (5.8 s vs 3.9 s at 2M
-    turns, local[32], clean steal window): the per-token ``rlike`` /
-    ``split`` HOF passes re-run in the JVM hot loop while the UDF's
-    Arrow transfer overlaps the scan for free. Kept as the tested
-    alternative for workflows that normalize stored candidate columns;
-    ``extract_entities`` uses the all-Python normalizer."""
-    v4_keys = F.transform(
-        F.filter(cands, lambda t: t.rlike(_V4_FULL)), _ipv4_token_to_key
-    )
-    v6_keys = normalize_ip_array_udf(F.filter(cands, _v6_plausible))
-    return F.array_distinct(F.concat(v4_keys, v6_keys))
 
 
 def extract_entities(

@@ -11,20 +11,16 @@ string column gets Parquet min/max + dictionary + bloom-filter support.
 
 Query-time helpers (``ip_to_key``, ``cidr_to_key_range``) run driver-side
 and produce literals for ``between`` — never in the data plane. Data-plane
-normalization is an Arrow-batched pandas UDF (``normalize_ip_udf``); a
-native-SQL IPv4-only variant exists for the differential test
-(reference keeps two nfdump implementations and cross-checks them,
+normalization lives with extraction: the Arrow-batched pandas UDF
+``functions.extractors.normalize_ip_joined_udf``, cross-checked against
+its array-shaped twin ``normalize_ip_array_udf`` (the reference keeps two
+nfdump implementations and cross-checks them,
 /root/reference/backend/nfdump_test.go:30-55).
 """
 
 from __future__ import annotations
 
 import ipaddress
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 V4_KEY_LEN = 8
 V6_KEY_LEN = 32
@@ -63,25 +59,3 @@ def cidr_to_key_range(cidr: str) -> tuple[str, str]:
     """
     net = ipaddress.ip_network(cidr, strict=False)
     return net.network_address.packed.hex(), net[-1].packed.hex()
-
-
-def _normalize_series(s: pd.Series) -> pd.Series:
-    """Vectorized (Arrow-batched) candidate -> key; invalid -> None."""
-    return s.map(lambda x: ip_to_key(x) if isinstance(x, str) else None)
-
-
-normalize_ip_udf = pandas_udf(_normalize_series, returnType=StringType())
-
-
-def ipv4_to_key_native(col):
-    """Native-SQL IPv4 dotted-quad -> 8-hex key (no Python).
-
-    Used by the differential test against ``normalize_ip_udf`` and as the
-    JVM-side fast path when the extraction pattern guarantees valid v4.
-    """
-    parts = F.split(col, r"\.")
-    return F.lower(
-        F.concat(
-            *[F.lpad(F.hex(F.element_at(parts, i + 1).cast("int")), 2, "0") for i in range(4)]
-        )
-    )

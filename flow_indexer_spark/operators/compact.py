@@ -8,8 +8,9 @@ into many small files and many chunk rows per entity, which at 100 TB
 scale means catalog pressure and poor scan locality. On Iceberg this is
 ``rewrite_data_files``; on plain parquet we rewrite the whole table into
 a single ``batch_id=compact-*`` directory, folding same-(entity, chunk)
-rows into one merged sorted row each, preserving the sorted-by-entity_key
-layout that makes range queries file-skipping scans.
+rows into one merged sorted row each, written by ``write_postings`` in the
+one sorted-by-entity_key layout that makes range queries file-skipping
+scans.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ import tempfile
 import uuid
 
 from pyspark.sql import SparkSession, functions as F
+
+from flow_indexer_spark.operators.postings import write_postings
 
 
 def _parquet_file_count(path: str) -> int:
@@ -87,19 +90,16 @@ def compact_postings(
     path: str,
     *,
     min_files: int = 8,
-    sort_col: str = "entity_key",
-    partition_col: str = "entity_class",
     routed_path: str | None = None,
 ) -> dict:
     """Rewrite the postings table if fragmented: read, fold chunk rows,
-    range-repartition on (partition, sort) keys, re-sort within
-    partitions, atomic swap via a sibling temp dir + rename. Returns
-    {files_before, files_after, compacted}.
+    write them with ``write_postings`` into a sibling temp dir, then swap
+    it in by rename. Returns {files_before, files_after, compacted}.
 
-    The rewrite preserves the write-layout invariants of
-    ``write_postings``: one writer per key range -> non-overlapping
-    parquet min/max on ``sort_col`` -> range queries keep skipping files.
-    The output lands under a fresh ``batch_id=compact-*`` directory —
+    ``write_postings`` gives the rewrite the same layout as every ingest
+    batch: files range-partitioned on (entity_class, entity_key), each
+    sorted by entity_key, so range queries keep skipping files. The
+    output lands under one fresh ``batch_id=compact-*`` directory —
     ingest's orphan cleanup treats compact ids as always-published, so a
     compacted table survives subsequent incremental runs.
 
@@ -123,14 +123,7 @@ def compact_postings(
     parent = os.path.dirname(os.path.abspath(path))
     tmp = tempfile.mkdtemp(prefix="_compact_", dir=parent)
     tmp_out = os.path.join(tmp, "data")
-    (
-        out.repartitionByRange(partition_col, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .option(f"parquet.bloom.filter.enabled#{sort_col}", "true")
-        .partitionBy("batch_id", partition_col)
-        .parquet(tmp_out)
-    )
+    write_postings(out, tmp_out, partition_cols=("batch_id", "entity_class"))
     # local-POSIX-only swap (at S3/HDFS scale this is an Iceberg
     # rewrite_data_files snapshot commit instead); clear any stale _old
     # left by a prior crash-after-rename so the swap can't wedge.

@@ -108,43 +108,40 @@ def write_postings(
     layout: str = "range",
     partition_cols: tuple[str, ...] = ("entity_class",),
 ) -> None:
-    """Routed, sorted sink for the postings table.
+    """The one writer of the postings table (ingest, compaction and
+    forget all call it), with one layout: the reference's per-class
+    LevelDB roots + sorted keys (/root/reference/example_config.json:5-46,
+    store/leveldb.go:85).
 
-    Layout = the reference's per-class LevelDB roots + sorted keys
-    (/root/reference/example_config.json:5-46, store/leveldb.go:85):
-    partitioned by entity_class, files sorted by entity_key so Parquet
-    min/max stats (and Iceberg sort order in production) make point/range
-    lookups file-skipping scans.
+    - ``repartitionByRange(entity_class, entity_key)``: one writer task
+      per key range, so within a partition directory the files' min/max
+      ranges do not overlap and range scans skip whole files;
+    - each file sorted by ``entity_key``, so Parquet row-group min/max
+      stats prune inside a file too;
+    - a bloom filter on ``entity_key`` for point lookups.
 
-    ``layout='range'``: repartitionByRange keeps one writer per key range
-    -> non-overlapping min/max across files (optimal pruning). Costs one
-    extra shuffle plus a persist (repartitionByRange samples its input to
-    compute bounds; without persistence the sampling pass re-executes the
-    whole upstream extract+aggregate job a second time).
+    The sort leads with ``partition_cols``: Spark's planned write sorts
+    each task by the partition columns unless its input already is, and
+    that sort is not stable, so a plain ``entity_key`` sort would be
+    reshuffled inside each directory. Sorting by ``(*partition_cols,
+    entity_key)`` satisfies the writer and keeps every file key-sorted.
 
-    ``layout='local'``: sort within the aggregation's existing hash
-    partitions and write directly — no extra shuffle, no persist. Files
-    are each sorted but their key ranges overlap across files; point
-    lookups still skip via bloom filters + row-group stats, range scans
-    prune less sharply. The ingest-throughput-optimal choice; compaction
-    (operators.compact, the Iceberg rewrite_data_files analogue) restores
-    the range layout offline.
+    ``postings`` is persisted around the write: repartitionByRange samples
+    its input to compute bounds, and without persistence the sampling
+    pass re-executes the whole upstream job a second time.
+
+    ``layout`` accepts only ``'range'``, the one file layout.
     """
-    if layout == "local":
-        (
-            postings.sortWithinPartitions("entity_class", "entity_key")
-            .write.mode(mode)
-            .option("parquet.bloom.filter.enabled#entity_key", "true")
-            .partitionBy(*partition_cols)
-            .parquet(path)
+    if layout != "range":
+        raise ValueError(
+            f"layout must be 'range' (the only postings layout), got {layout!r}"
         )
-        return
     postings.persist()
     try:
         postings.count()
         (
             postings.repartitionByRange("entity_class", "entity_key")
-            .sortWithinPartitions("entity_key")
+            .sortWithinPartitions(*partition_cols, "entity_key")
             .write.mode(mode)
             .option("parquet.bloom.filter.enabled#entity_key", "true")
             .partitionBy(*partition_cols)

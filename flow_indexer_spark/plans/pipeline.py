@@ -58,18 +58,19 @@ class PipelineConfig:
     (/root/reference/flowindexer/flowindexer.go:26-37): where to read,
     where to route, how to aggregate. Postings are always pre-sorted salt
     chunks (n_salt per entity at most), and every batch APPENDS its own
-    chunk rows — O(delta) per increment (see build_postings)."""
+    chunk rows — O(delta) per increment (see build_postings). Every
+    postings file has one layout, written only by ``write_postings``:
+    range-partitioned on (entity_class, entity_key), sorted by
+    entity_key, with a bloom filter on entity_key."""
 
-    #: the one posting format, readable as ``cfg.chunk_mode`` by callers
-    #: that pass it on to build_postings; a constant, not a field
+    #: the one posting format and the one file layout, readable as
+    #: ``cfg.chunk_mode`` / ``cfg.postings_layout`` by callers that pass
+    #: them on to build_postings / write_postings; constants, not fields
     chunk_mode: ClassVar[str] = "salt"
+    postings_layout: ClassVar[str] = "range"
 
     output_root: str
     n_salt: int = 16
-    #: postings file layout: 'range' (non-overlapping key ranges, extra
-    #: shuffle) or 'local' (sorted files, one less shuffle; compaction
-    #: restores range layout offline) — see write_postings.
-    postings_layout: str = "range"
     #: optional (name, cidr) netblock dimension: every routed row's
     #: entity_key gets longest-prefix-match (block_name, prefix_len)
     #: columns via the join-free in-row LPM (operators/ipblocks.py
@@ -220,7 +221,6 @@ def run_ingest(
         postings.withColumn("batch_id", F.lit(run_id)),
         config.postings_path,
         mode="append",
-        layout=config.postings_layout,
         partition_cols=("batch_id", "entity_class"),
     )
     _mark("postings_index")
@@ -299,9 +299,11 @@ def forget_conversations(
     partition-membership test (concat_ws silently drops NULLs) and in
     the directory paths. Posting chunks are rewritten by an in-row
     ``filter()`` over the postings array; chunks left empty are
-    dropped. ts_min/ts_max stay as-is: after deletion they remain
-    VALID OUTER BOUNDS (deletion can only shrink the true range), so
-    time pruning stays correct, merely conservative — exactness comes
+    dropped, and the rest go back through ``write_postings`` so the
+    rewritten partitions keep the table's one file layout. ts_min/ts_max
+    stay as-is: after deletion they remain VALID OUTER BOUNDS (deletion
+    can only shrink the true range), so time pruning stays correct,
+    merely conservative — exactness comes
     back at the next compaction (``compact_postings(...,
     routed_path=...)`` -> ``recompute_ts_bounds``, tested by
     test_compact.py::test_compact_tightens_ts_bounds_after_forget). Partitions whose every row is
@@ -411,9 +413,12 @@ def forget_conversations(
                 .filter(F.size("postings") > 0)
                 .localCheckpoint(eager=True)
             )
-            new_post.write.mode("overwrite").partitionBy(
-                "batch_id", "entity_class"
-            ).parquet(config.postings_path)
+            write_postings(
+                new_post,
+                config.postings_path,
+                mode="overwrite",
+                partition_cols=("batch_id", "entity_class"),
+            )
             kept_post_pairs = {
                 (r.ec, r.batch_id)
                 for r in new_post.select(ecn.alias("ec"), "batch_id")

@@ -52,7 +52,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flow_indexer_spark import health
-from flow_indexer_spark.functions.keys import V4_KEY_LEN, V6_KEY_LEN, key_to_ip
+from flow_indexer_spark.functions.keys import key_to_ip
 from flow_indexer_spark.operators import queries as Q
 
 
@@ -97,16 +97,15 @@ def parse_bucket_param(bucket: str | None) -> tuple[str, str | None]:
     raise ValueError(f"invalid bucket parameter: {bucket!r}")
 
 
-def _display_entity(key: str) -> str:
-    """Postings key -> display form: IP keys render dotted/colon form
-    (ExpandCIDR prints addresses, web.go:106-111), name-keyed classes
-    (tool/role) are already display strings."""
-    if len(key) in (V4_KEY_LEN, V6_KEY_LEN):
-        try:
-            return key_to_ip(key)
-        except ValueError:
-            return key
-    return key
+def display_entity(query: str, key: str) -> str:
+    """Postings key matched by ``query`` -> display form, chosen by the
+    query's entity class: ``tool:``/``role:`` keys are already display
+    strings, IP keys render dotted/colon form (ExpandCIDR prints
+    addresses, web.go:106-111). A key's length cannot decide this: the
+    tool ``deadbeef`` is as long as an IPv4 key."""
+    if query.startswith(("tool:", "role:")):
+        return key
+    return key_to_ip(key)
 
 
 def query_stat(handle: IndexerHandle, query: str, bucket: str | None) -> dict:
@@ -215,7 +214,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._lines(f"{r['conv_id']}\t{r['turn_idx']}" for r in rows)
         elif route == "/expandcidr":
             rows = Q.expand(handle.postings, query).collect()
-            self._lines(_display_entity(r["entity_key"]) for r in rows)
+            self._lines(display_entity(query, r["entity_key"]) for r in rows)
         elif route == "/stats":
             self._json(query_stat(handle, query, params.get("bucket")))
         elif route == "/dump":

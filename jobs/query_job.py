@@ -38,7 +38,7 @@ def main() -> None:
 
     from flow_indexer_spark.session import get_spark
     from flow_indexer_spark.operators import queries as Q
-    from flow_indexer_spark.functions.keys import key_to_ip
+    from flow_indexer_spark.server import display_entity
 
     spark = get_spark(
         app_name="flow-indexer-query",
@@ -55,8 +55,7 @@ def main() -> None:
         out([r.asDict() for r in Q.search(postings, args.query).collect()])
     elif args.cmd == "expand":
         keys = [r["entity_key"] for r in Q.expand(postings, args.query).collect()]
-        display = "/" in args.query or not args.query.startswith(("tool:", "role:"))
-        out([{"entity_key": k, "entity": key_to_ip(k) if display else k} for k in keys])
+        out([{"entity_key": k, "entity": display_entity(args.query, k)} for k in keys])
     elif args.cmd in ("stats", "dump"):
         if not args.transcripts:
             ap.error(f"{args.cmd} requires --transcripts")

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from flow_indexer_spark.operators.compact import _parquet_file_count, compact_postings
 from flow_indexer_spark.operators.queries import search
+from tests.layout import assert_postings_layout
 
 
 def _counts(spark, path):
@@ -66,6 +67,7 @@ def test_compact_folds_incremental_batch_chunks(spark, transcripts, dims, tmp_pa
         )
 
     before = exploded(cfg.postings_path)
+    assert_postings_layout(cfg.postings_path)
     # the hot entity appears in both batches -> duplicate (entity, chunk) rows
     hot_rows_before = (
         spark.read.parquet(cfg.postings_path)
@@ -78,6 +80,7 @@ def test_compact_folds_incremental_batch_chunks(spark, transcripts, dims, tmp_pa
 
     res = compact_postings(spark, cfg.postings_path, min_files=1)
     assert res["compacted"]
+    assert_postings_layout(cfg.postings_path)
     post = spark.read.parquet(cfg.postings_path)
     assert exploded(cfg.postings_path) == before
     assert (

@@ -76,6 +76,8 @@ def test_load_config_parses_shipped_example():
                         "chunk_mode": "salt"}]}, "unknown keys"),
         ({"indexers": [{"name": "a", "input": "/a", "output": "/b",
                         "incremental": False}]}, "unknown keys"),
+        ({"indexers": [{"name": "a", "input": "/a", "output": "/b",
+                        "postings_layout": "range"}]}, "unknown keys"),
     ],
 )
 def test_load_config_rejects(tmp_path, doc, msg):

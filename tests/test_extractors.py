@@ -96,30 +96,6 @@ def test_zero_entity_turns_produce_role_only(spark):
     assert _keys(out, "role") == ["system"]
 
 
-def test_differential_hybrid_vs_pure_python_normalize(spark, transcripts):
-    """The hybrid JVM-v4/Python-v6 normalizer must equal the all-Python
-    ipaddress path on the full fixture (nfdump two-implementations
-    analogue, /root/reference/backend/nfdump_test.go:30-55)."""
-    from pyspark.sql import functions as F
-
-    from flow_indexer_spark.functions.extractors import (
-        IP_PATTERN,
-        normalize_ip_array_udf,
-        normalize_ip_candidates,
-    )
-
-    cands = F.regexp_extract_all(
-        F.coalesce(F.col("text"), F.lit("")), F.lit(IP_PATTERN), F.lit(0)
-    )
-    df = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.array_sort(normalize_ip_candidates(cands)).alias("hybrid"),
-        F.array_sort(normalize_ip_array_udf(cands)).alias("python"),
-    )
-    assert df.filter(F.col("hybrid") != F.col("python")).count() == 0
-
-
 def test_differential_joined_vs_array_normalize(spark, transcripts):
     """The joined-string Arrow boundary (round-4 extract hot path:
     array_join -> str UDF -> split/array_remove) must produce the exact

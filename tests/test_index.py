@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flow_indexer_spark.functions.extractors import extract_entities
-from flow_indexer_spark.operators.postings import build_postings
+from flow_indexer_spark.operators.postings import build_postings, write_postings
 from flow_indexer_spark.operators import queries as Q
 from tests.oracle import extract_oracle, postings_oracle
 
@@ -126,6 +126,12 @@ def test_salting_invariance(spark, transcripts):
 def test_build_postings_rejects_other_chunk_modes(spark, transcripts):
     with pytest.raises(ValueError, match="chunk_mode"):
         build_postings(extract_entities(transcripts), chunk_mode="none")
+
+
+def test_write_postings_rejects_other_layouts(mini_postings, tmp_path):
+    with pytest.raises(ValueError, match="layout"):
+        write_postings(mini_postings, str(tmp_path / "p"), layout="local")
+    assert not (tmp_path / "p").exists()
 
 
 def test_multi_entity_and_search(mini_postings):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from flow_indexer_spark.generator import make_transcripts
 from flow_indexer_spark.plans.pipeline import PipelineConfig, run_ingest
+from tests.layout import assert_postings_layout
 from tests.oracle import extract_oracle
 
 
@@ -48,6 +49,13 @@ def test_routed_row_equality(spark, pipeline_out, transcripts_pdf):
     for r in routed.itertuples():
         s = src.loc[(r.conv_id, r.turn_idx)]
         assert r.text == s["text"] and r.role == s["role"] and r.tool == s["tool"]
+
+
+def test_postings_files_sorted_with_disjoint_key_ranges(pipeline_out):
+    """Every postings file is sorted by entity_key and, within one
+    batch/class directory, covers a key range no other file overlaps."""
+    cfg, _ = pipeline_out
+    assert assert_postings_layout(cfg.postings_path) > 0
 
 
 def test_enrich_columns_and_null_path(spark, pipeline_out):
@@ -315,6 +323,7 @@ def test_forget_conversations_purges_both_sinks(spark, transcripts, dims, tmp_pa
     assert (leaked or 0) == 0
     # no empty chunks survive, and search semantics stay intact
     assert post_after.filter(F.size("postings") == 0).count() == 0
+    assert_postings_layout(cfg.postings_path)
     hot = Q.search(post_after, "10.0.0.1")
     assert hot.filter(F.col("conv_id") == victim).count() == 0
     assert hot.count() > 0  # other conversations still indexed

@@ -3,6 +3,7 @@ query layer (the web.go contract, /root/reference/flowindexer/web.go)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import threading
 import urllib.error
@@ -12,21 +13,40 @@ import pytest
 
 from flow_indexer_spark.functions.keys import key_to_ip
 from flow_indexer_spark.operators import queries as Q
+from flow_indexer_spark.operators.postings import build_postings
 from flow_indexer_spark.server import IndexerHandle, make_server
 
 
-@pytest.fixture(scope="module")
-def server(spark, postings, transcripts):
-    srv = make_server(
-        spark,
-        {"conn": IndexerHandle(postings=postings, transcripts=transcripts)},
-    )
+def _serve(spark, indexers):
+    srv = make_server(spark, indexers)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     host, port = srv.server_address[:2]
     yield f"http://{host}:{port}"
     srv.shutdown()
     srv.server_close()
+
+
+@pytest.fixture(scope="module")
+def server(spark, postings, transcripts):
+    yield from _serve(
+        spark, {"conn": IndexerHandle(postings=postings, transcripts=transcripts)}
+    )
+
+
+@pytest.fixture(scope="module")
+def hex_server(spark):
+    """One index holding deadbeef both as a tool name and as the IPv4
+    key of 222.173.190.239."""
+    ts = datetime.datetime(2024, 1, 1)
+    postings = build_postings(
+        spark.createDataFrame(
+            [("tool", "deadbeef", "c0", 0, ts), ("ip", "deadbeef", "c0", 1, ts)],
+            "entity_class string, entity_key string, conv_id string, "
+            "turn_idx int, ts timestamp",
+        )
+    )
+    yield from _serve(spark, {"hex": IndexerHandle(postings=postings)})
 
 
 def _get(url: str) -> tuple[int, str]:
@@ -84,6 +104,15 @@ def test_expandcidr_renders_addresses(server, postings):
     code, body = _get(f"{server}/expandcidr?i=conn&q=10.0.0.0/8")
     assert code == 200
     assert body.splitlines() == [key_to_ip(k) for k in keys]
+
+
+def test_expandcidr_display_follows_query_class(hex_server):
+    """An 8-hex tool name has the length of an IPv4 key: the query's
+    entity class, not the key's length, picks the display form."""
+    code, body = _get(f"{hex_server}/expandcidr?i=hex&q=tool:dead*")
+    assert (code, body.splitlines()) == (200, ["deadbeef"])
+    code, body = _get(f"{hex_server}/expandcidr?i=hex&q=222.173.190.0/24")
+    assert (code, body.splitlines()) == (200, ["222.173.190.239"])
 
 
 def test_stats_document_shape_and_parity(server, postings, transcripts):
