@@ -26,8 +26,8 @@ pipeline:
   tick is the IndexRecent analogue — O(new partitions), not O(history).
 * ``open_indexers`` — indexer name -> server.IndexerHandle for the
   HTTP layer (RefreshStores analogue: parquet file listings are
-  snapshotted into the DataFrame plan at open time, so the daemon
-  re-opens handles after each tick).
+  snapshotted into each handle at open time, so the daemon re-opens
+  handles after each tick).
 
 ``jobs/daemon_job.py`` wires these into the long-running process.
 """
@@ -41,7 +41,7 @@ from typing import Callable
 from pyspark.sql import SparkSession
 
 from flow_indexer_spark.plans.pipeline import PipelineConfig, run_ingest
-from flow_indexer_spark.server import IndexerHandle
+from flow_indexer_spark.server import IndexerHandle, open_indexer
 
 
 @dataclass(frozen=True)
@@ -189,13 +189,13 @@ def open_indexers(
 ) -> dict[str, IndexerHandle]:
     """name -> IndexerHandle for the HTTP layer. The indexer's input
     table doubles as the transcripts side of /stats and /dump. Re-call
-    after each ingest tick: a DataFrame snapshots the parquet file
-    listing when opened (RefreshStores analogue,
+    after each ingest tick: a handle snapshots the parquet file listing
+    when opened (RefreshStores analogue,
     /root/reference/flowindexer/flowindexer.go:281-316).
 
     Per-indexer failure isolation, matching ``index_all``'s: an indexer
     whose ingest failed (or hasn't run yet) has no readable postings
-    output, and ``spark.read.parquet`` on it raises. That must not take
+    output, and ``server.open_indexer`` on it raises. That must not take
     the daemon down — the reference's RunDaemon keeps every other
     indexer serving when one breaks. On open failure the indexer keeps
     its ``previous`` handle (stale-but-serving) or, with none, is
@@ -207,10 +207,7 @@ def open_indexers(
     previous = previous or {}
     for spec in cfg.indexers:
         try:
-            out[spec.name] = IndexerHandle(
-                postings=spark.read.parquet(f"{spec.output}/postings"),
-                transcripts=_read_input(spark, spec),
-            )
+            out[spec.name] = open_indexer(spark, spec.output, _read_input(spark, spec))
         except Exception as e:  # noqa: BLE001 - per-indexer isolation
             print(
                 f"open_indexers: indexer {spec.name!r} not readable "

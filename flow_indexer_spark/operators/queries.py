@@ -11,13 +11,24 @@ Reference entry points re-expressed as DataFrame library functions:
            matched files, emit matching raw lines) — here a semi-join back
            to the transcripts table.
 
-Every function returns a DataFrame (composable, lazily planned); the HTTP
-layer of the reference (web.go) is out of engine scope.
+Each of these returns a DataFrame (composable, lazily planned).
+``search`` and ``expand`` are the batch and composition path (AND / OR /
+NOT search, resolution against transcripts) and the oracle for the
+interactive path: ``search_files`` and ``expand_files`` answer the same
+queries in-process with pyarrow, straight from the key-sorted postings
+files, without a Spark job — the reference's LevelDB ``Get`` / range
+iterator. Both paths take their predicate from one parser,
+``parse_query``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from dataclasses import dataclass
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import Column, DataFrame, functions as F
 
 from flow_indexer_spark.functions.keys import (
     V4_KEY_LEN,
@@ -42,36 +53,80 @@ DEFAULT_COUNT_FOR = {
 }
 
 
-def _key_range_filter(query: str):
-    """Entity query string -> (predicate on entity_key, entity_class).
+@dataclass(frozen=True)
+class KeyQuery:
+    """A parsed entity query: the entity class plus exactly one key
+    predicate — a ``point`` key, an inclusive ``key_range`` of
+    ``(lo, hi, key_len)`` (the length is the family guard), or a name
+    ``prefix``."""
+
+    klass: str
+    point: str | None = None
+    key_range: tuple[str, str, int] | None = None
+    prefix: str | None = None
+
+
+def parse_query(query: str) -> KeyQuery:
+    """Entity query string -> KeyQuery, the one grammar of both query paths.
 
     '1.2.3.4' / 'fe80::1'  -> point lookup on the hex key
-    '1.2.3.0/24'           -> inclusive between-range + family-length guard
+    '1.2.3.0/24'           -> inclusive key range + family-length guard
                               (the reference's same-byte-length filter,
                               /root/reference/store/leveldb.go:170-174)
     'tool:NAME'/'role:NAME'-> point lookup in that class
     'tool:PRE*'            -> prefix range scan (the CIDR-range analogue for
-                              name-keyed classes; StringStartsWith pushes
-                              down to the parquet scan like `between` does)
+                              name-keyed classes)
+
+    Anything else raises ``ValueError('not an IP/CIDR/tool:/role: query')``.
     """
     for klass in ("tool", "role"):
         prefix = f"{klass}:"
         if query.startswith(prefix):
             name = query[len(prefix):]
             if name.endswith("*"):
-                return F.col("entity_key").startswith(name[:-1]), klass
-            return F.col("entity_key") == name, klass
-    if "/" in query:
-        lo, hi = cidr_to_key_range(query)
-        family_len = V4_KEY_LEN if len(lo) == V4_KEY_LEN else V6_KEY_LEN
-        return (
-            F.col("entity_key").between(lo, hi)
-            & (F.length("entity_key") == family_len)
-        ), "ip"
-    key = ip_to_key(query)
+                return KeyQuery(klass, prefix=name[:-1])
+            return KeyQuery(klass, point=name)
+    try:
+        if "/" in query:
+            lo, hi = cidr_to_key_range(query)
+            key_len = V4_KEY_LEN if len(lo) == V4_KEY_LEN else V6_KEY_LEN
+            return KeyQuery("ip", key_range=(lo, hi, key_len))
+        key = ip_to_key(query)
+    except ValueError:
+        key = None
     if key is None:
         raise ValueError(f"not an IP/CIDR/tool:/role: query: {query!r}")
-    return F.col("entity_key") == key, "ip"
+    return KeyQuery("ip", point=key)
+
+
+def _spark_filter(q: KeyQuery) -> Column:
+    """KeyQuery -> Spark predicate. entity_class equality prunes partition
+    directories; ``==``/``between``/``startswith`` push down to the
+    parquet scan's min/max and bloom-filter pruning."""
+    key = F.col("entity_key")
+    if q.point is not None:
+        pred = key == q.point
+    elif q.prefix is not None:
+        pred = key.startswith(q.prefix)
+    else:
+        lo, hi, key_len = q.key_range
+        pred = key.between(lo, hi) & (F.length(key) == key_len)
+    return (F.col("entity_class") == q.klass) & pred
+
+
+def _arrow_filter(q: KeyQuery) -> pc.Expression:
+    """KeyQuery -> pyarrow dataset filter, the same predicate as
+    ``_spark_filter``: partition pruning on entity_class, row-group
+    min/max pruning on entity_key."""
+    key = pc.field("entity_key")
+    if q.point is not None:
+        pred = key == q.point
+    elif q.prefix is not None:
+        pred = pc.starts_with(key, q.prefix)
+    else:
+        lo, hi, key_len = q.key_range
+        pred = (key >= lo) & (key <= hi) & (pc.utf8_length(key) == key_len)
+    return (pc.field("entity_class") == q.klass) & pred
 
 
 def search(postings: DataFrame, query: str) -> DataFrame:
@@ -81,9 +136,8 @@ def search(postings: DataFrame, query: str) -> DataFrame:
     via Parquet min/max (the table is written sorted by entity_key) — the
     Spark analogue of the reference's LevelDB range iterator.
     """
-    pred, klass = _key_range_filter(query)
     return (
-        postings.filter((F.col("entity_class") == klass) & pred)
+        postings.filter(_spark_filter(parse_query(query)))
         .select(F.explode("postings").alias("p"))
         .select("p.conv_id", "p.turn_idx")
         .dropDuplicates()
@@ -96,12 +150,57 @@ def expand(postings: DataFrame, cidr: str) -> DataFrame:
     Byte order == numeric order by key construction, so a plain orderBy on
     the hex key reproduces the reference's numerically sorted output
     (/root/reference/ipset/ipset.go:96-105)."""
-    pred, klass = _key_range_filter(cidr)
     return (
-        postings.filter((F.col("entity_class") == klass) & pred)
+        postings.filter(_spark_filter(parse_query(cidr)))
         .select("entity_key")
         .distinct()
         .orderBy("entity_key")
+    )
+
+
+def open_postings_files(path: str) -> ds.Dataset:
+    """The postings table at ``path`` as a pyarrow dataset for
+    ``search_files`` / ``expand_files``: hive partition directories,
+    listed once here. Like a DataFrame, the dataset keeps the file
+    listing it was opened with."""
+    return ds.dataset(path, format="parquet", partitioning="hive")
+
+
+def search_files(files: ds.Dataset, query: str) -> pa.Table:
+    """``search`` answered in-process from the postings files: the
+    distinct (conv_id, turn_idx) hits as an Arrow table, sorted in byte
+    order like ``search``'s ``orderBy``. Reads only the ``postings``
+    column of rows that survive partition and row-group pruning, on the
+    calling thread: a lookup touches a few KB, and the daemon already
+    serves requests concurrently."""
+    chunks = files.to_table(
+        columns=["postings"],
+        filter=_arrow_filter(parse_query(query)),
+        use_threads=False,
+    )["postings"].combine_chunks()  # a miss yields no chunks at all
+    return (
+        pa.Table.from_struct_array(pc.list_flatten(chunks))
+        .group_by(["conv_id", "turn_idx"], use_threads=False)
+        .aggregate([])
+        .sort_by(
+            [("conv_id", "ascending"), ("turn_idx", "ascending")],
+            null_placement="at_start",  # where Spark's ascending orderBy puts nulls
+        )
+    )
+
+
+def expand_files(files: ds.Dataset, cidr: str) -> pa.Table:
+    """``expand`` answered in-process from the postings files: the
+    distinct matching ``entity_key``s as an Arrow table, sorted."""
+    keys = files.to_table(
+        columns=["entity_key"],
+        filter=_arrow_filter(parse_query(cidr)),
+        use_threads=False,
+    )
+    return (
+        keys.group_by("entity_key", use_threads=False)
+        .aggregate([])
+        .sort_by("entity_key")
     )
 
 
@@ -127,8 +226,8 @@ def stats(
     group matched docs by coarse bucket, count *distinct* fine buckets within
     each — their sorted single-pass transition counter is exactly
     ``count_distinct(date_trunc(fine, ts))`` per coarse bucket.
-    Returns one row per coarse bucket: (bucket, hits) plus total-matched
-    min/max available via ``stats_summary``.
+    Returns one row per coarse bucket: (bucket, hits); the matched total
+    and first/last are ``server.query_stat``'s.
     """
     if group_by not in GRANULARITIES or count not in (*GRANULARITIES, None):
         raise ValueError(f"bucket granularity must be one of {GRANULARITIES}")
@@ -139,17 +238,6 @@ def stats(
         matched.groupBy(F.date_trunc(group_by, "ts").alias("bucket"))
         .agg(F.count_distinct(F.date_trunc(count, "ts")).alias("hits"))
         .orderBy("bucket")
-    )
-
-
-def stats_summary(postings: DataFrame, transcripts: DataFrame, query: str) -> DataFrame:
-    """hits / first / last over matched turns (A5,
-    /root/reference/flowindexer/flowindexer.go:352-366)."""
-    matched = search_turns(postings, transcripts, query)
-    return matched.agg(
-        F.count("*").alias("hits"),
-        F.min("ts").alias("first"),
-        F.max("ts").alias("last"),
     )
 
 

@@ -30,17 +30,20 @@ parameter is a 400 ``Missing parameter: <name>`` (web.go:24-31); any
 engine error (unknown indexer, unparseable query, bad bucket
 granularity) is a 500 carrying the error text (web.go:33-42).
 
-Execution model (the scale story): the daemon holds ONE long-lived
-SparkSession; each request composes a lazy DataFrame and collects at
-the API layer — exactly the split SURVEY §2 K4 documents. All
-distributed work (partition-pruned postings scan, semi-join back to
-transcripts) runs on the cluster; the driver only renders result rows.
-Requests are served from a thread pool (``ThreadingHTTPServer``) —
-Spark's scheduler interleaves concurrent driver-side actions, and the
-postings/transcripts handles are immutable DataFrames so there is no
-shared mutable state beyond the JVM session itself. Point lookups stay
-interactive because ``search`` is a pushed-down key-range scan over the
-sorted postings partitions, not a full-table pass (PLANS.md §3).
+Execution model: the daemon holds ONE long-lived SparkSession and, per
+indexer, an ``IndexerHandle`` opened once. ``/search`` and
+``/expandcidr`` run no Spark job: they read the key-sorted postings
+files in-process through the handle's pyarrow dataset — partition
+pruning on the entity class, footer min/max pruning on the key, then an
+Arrow flatten, dedup and sort (``queries.search_files`` /
+``expand_files``), like the reference's LevelDB ``Get`` and range
+iterator. ``/stats`` and ``/dump`` join hits back to the transcripts
+table, so each composes a lazy DataFrame and collects it at the API
+layer — the split SURVEY §2 K4 documents. Requests are served from a
+thread pool (``ThreadingHTTPServer``); Spark's scheduler interleaves
+concurrent actions, and a handle's DataFrames and dataset
+are immutable, so there is no shared mutable state beyond the JVM
+session itself.
 """
 
 from __future__ import annotations
@@ -49,6 +52,9 @@ import json
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flow_indexer_spark import health
@@ -58,25 +64,34 @@ from flow_indexer_spark.operators import queries as Q
 
 @dataclass(frozen=True)
 class IndexerHandle:
-    """One registered indexer: its postings table plus (optionally) the
-    transcripts table that /stats and /dump resolve hits against —
-    the Indexer struct analogue (/root/reference/flowindexer/
-    flowindexer.go:48-54)."""
+    """One registered indexer: its postings table, opened both as a
+    DataFrame (/stats, /dump) and as a pyarrow dataset (/search,
+    /expandcidr), plus (optionally) the transcripts table that /stats
+    and /dump resolve hits against — the reference's Indexer struct
+    analogue (flowindexer/flowindexer.go:48-54)."""
 
     postings: DataFrame
+    postings_files: ds.Dataset
     transcripts: DataFrame | None = None
 
 
 def open_indexer(
-    spark: SparkSession, index_root: str, transcripts_path: str | None = None
+    spark: SparkSession,
+    index_root: str,
+    transcripts: str | DataFrame | None = None,
 ) -> IndexerHandle:
-    """Open an ingest-job output directory as an IndexerHandle. The
-    parquet footers are read once here, not per request."""
+    """Open an ingest-job output directory as an IndexerHandle; the one
+    constructor of handles. ``transcripts`` is a parquet path or an
+    already-read DataFrame. The postings DataFrame and dataset each
+    snapshot the file listing here, once, not per request. Raises if the
+    postings table is not readable."""
+    postings_path = f"{index_root}/postings"
+    if isinstance(transcripts, str):
+        transcripts = spark.read.parquet(transcripts)
     return IndexerHandle(
-        postings=spark.read.parquet(f"{index_root}/postings"),
-        transcripts=(
-            spark.read.parquet(transcripts_path) if transcripts_path else None
-        ),
+        postings=spark.read.parquet(postings_path),
+        postings_files=Q.open_postings_files(postings_path),
+        transcripts=transcripts,
     )
 
 
@@ -106,6 +121,20 @@ def display_entity(query: str, key: str) -> str:
     if query.startswith(("tool:", "role:")):
         return key
     return key_to_ip(key)
+
+
+def _doc_name_lines(hits: pa.Table) -> str:
+    """The /search body, one ``conv_id<TAB>turn_idx`` line per hit,
+    joined in Arrow: building a hot key's ~10^4 lines as Python strings
+    holds the interpreter lock for ~20 ms, which every concurrent request
+    waits out."""
+    names = pc.binary_join_element_wise(
+        hits["conv_id"], pc.cast(hits["turn_idx"], pa.string()), "\t"
+    ).combine_chunks()
+    if not len(names):
+        return ""
+    one_list = pa.ListArray.from_arrays([0, len(names)], names)
+    return pc.binary_join(one_list, "\n")[0].as_py() + "\n"
 
 
 def query_stat(handle: IndexerHandle, query: str, bucket: str | None) -> dict:
@@ -210,11 +239,11 @@ class _Handler(BaseHTTPRequestHandler):
             return
 
         if route == "/search":
-            rows = Q.search(handle.postings, query).collect()
-            self._lines(f"{r['conv_id']}\t{r['turn_idx']}" for r in rows)
+            hits = Q.search_files(handle.postings_files, query)
+            self._send(200, _doc_name_lines(hits), "text/plain")
         elif route == "/expandcidr":
-            rows = Q.expand(handle.postings, query).collect()
-            self._lines(display_entity(query, r["entity_key"]) for r in rows)
+            keys = Q.expand_files(handle.postings_files, query)["entity_key"]
+            self._lines(display_entity(query, k) for k in keys.to_pylist())
         elif route == "/stats":
             self._json(query_stat(handle, query, params.get("bucket")))
         elif route == "/dump":

@@ -9,7 +9,9 @@
     python jobs/query_job.py --index /tmp/idx --transcripts <parquet> \
         dump tool:search --contains error
 
-Output: JSON lines on stdout (the web.go text/JSON responses analogue).
+Output: JSON lines on stdout (the web.go text/JSON responses analogue);
+``stats`` prints the daemon's /stats document. ``search`` and ``expand``
+read the postings files with pyarrow and start no Spark session.
 """
 
 from __future__ import annotations
@@ -36,38 +38,39 @@ def main() -> None:
     p.add_argument("--contains", default=None)
     args = ap.parse_args()
 
-    from flow_indexer_spark.session import get_spark
     from flow_indexer_spark.operators import queries as Q
     from flow_indexer_spark.server import display_entity
+
+    def out(rows):
+        for r in rows:
+            print(json.dumps(r, default=str))
+
+    # search/expand read the postings files in-process; no JVM starts
+    if args.cmd in ("search", "expand"):
+        files = Q.open_postings_files(f"{args.index}/postings")
+        if args.cmd == "search":
+            out(Q.search_files(files, args.query).to_pylist())
+        else:
+            keys = Q.expand_files(files, args.query)["entity_key"].to_pylist()
+            out([{"entity_key": k, "entity": display_entity(args.query, k)} for k in keys])
+        return
+
+    if not args.transcripts:
+        ap.error(f"{args.cmd} requires --transcripts")
+    from flow_indexer_spark.server import open_indexer, query_stat
+    from flow_indexer_spark.session import get_spark
 
     spark = get_spark(
         app_name="flow-indexer-query",
         master=f"local[{args.cpus}]" if args.cpus else None,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    postings = spark.read.parquet(f"{args.index}/postings")
-
-    def out(rows):
-        for r in rows:
-            print(json.dumps(r, default=str))
-
-    if args.cmd == "search":
-        out([r.asDict() for r in Q.search(postings, args.query).collect()])
-    elif args.cmd == "expand":
-        keys = [r["entity_key"] for r in Q.expand(postings, args.query).collect()]
-        out([{"entity_key": k, "entity": display_entity(args.query, k)} for k in keys])
-    elif args.cmd in ("stats", "dump"):
-        if not args.transcripts:
-            ap.error(f"{args.cmd} requires --transcripts")
-        t = spark.read.parquet(args.transcripts)
-        if args.cmd == "stats":
-            group, _, count = args.bucket.partition("/")
-            s = Q.stats(postings, t, args.query, group, count or None).collect()
-            summary = Q.stats_summary(postings, t, args.query).head()
-            print(json.dumps(summary.asDict(), default=str))
-            out([r.asDict() for r in s])
-        else:
-            out([r.asDict() for r in Q.dump(postings, t, args.query, args.contains).collect()])
+    handle = open_indexer(spark, args.index, args.transcripts)
+    if args.cmd == "stats":
+        print(json.dumps(query_stat(handle, args.query, args.bucket)))
+    else:
+        rows = Q.dump(handle.postings, handle.transcripts, args.query, args.contains)
+        out([r.asDict() for r in rows.collect()])
     spark.stop()
 
 

@@ -8,8 +8,9 @@ cmd/daemon.go): serve /indexers /search /stats /expandcidr /dump
 
 Prints one JSON line ``{"listening": "host:port", "indexers": [...]}``
 on stdout once bound, then serves until interrupted. One long-lived
-SparkSession; every request is a lazy DataFrame collected at the API
-layer (SURVEY.md K4).
+SparkSession for /stats and /dump, which collect a lazy DataFrame at the
+API layer (SURVEY.md K4); /search and /expandcidr read the postings
+files in-process and run no Spark job.
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ from flow_indexer_spark.functions.extractors import extract_entities
 from flow_indexer_spark.operators.postings import build_postings, write_postings
 from flow_indexer_spark.operators import queries as Q
 from tests.oracle import extract_oracle, postings_oracle
+from tests.query_paths import hit_tuples
 
 
 def _mini_transcripts(spark):
@@ -33,6 +34,15 @@ def _mini_transcripts(spark):
 def mini_postings(spark):
     t = _mini_transcripts(spark)
     return build_postings(extract_entities(t), n_salt=4).cache()
+
+
+@pytest.fixture(scope="module")
+def mini_files(mini_postings, tmp_path_factory):
+    """``mini_postings`` written as the postings table and opened for
+    the in-process Arrow query path."""
+    path = str(tmp_path_factory.mktemp("mini") / "postings")
+    write_postings(mini_postings, path)
+    return Q.open_postings_files(path)
 
 
 QUERY_TABLE = [
@@ -64,6 +74,11 @@ def test_query_table(mini_postings, query, expected):
     assert got == expected
 
 
+@pytest.mark.parametrize("query,expected", QUERY_TABLE)
+def test_query_table_files(mini_files, query, expected):
+    assert hit_tuples(Q.search_files(mini_files, query)) == expected
+
+
 EXPAND_TABLE = [
     # (cidr, expected sorted IPs) — store_test.go:41-58 style
     ("1.2.3.0/24", ["1.2.3.4", "1.2.3.200"]),
@@ -79,6 +94,29 @@ def test_expand_table(mini_postings, cidr, expected):
 
     got = [key_to_ip(r.entity_key) for r in Q.expand(mini_postings, cidr).collect()]
     assert got == expected
+
+
+@pytest.mark.parametrize("cidr,expected", EXPAND_TABLE)
+def test_expand_table_files(mini_files, cidr, expected):
+    from flow_indexer_spark.functions.keys import key_to_ip
+
+    keys = Q.expand_files(mini_files, cidr)["entity_key"].to_pylist()
+    assert [key_to_ip(k) for k in keys] == expected
+
+
+@pytest.mark.parametrize("query", ["not-an-ip", "1.2.3", "1.2.3.0/99", "foo/8", "tool"])
+def test_bad_query_same_error_on_both_paths(mini_postings, mini_files, query):
+    """One parser, one error text, whichever path answers."""
+    want = f"not an IP/CIDR/tool:/role: query: {query!r}"
+    for call in (
+        lambda: Q.search(mini_postings, query),
+        lambda: Q.expand(mini_postings, query),
+        lambda: Q.search_files(mini_files, query),
+        lambda: Q.expand_files(mini_files, query),
+    ):
+        with pytest.raises(ValueError) as err:
+            call()
+        assert str(err.value) == want
 
 
 def test_postings_sorted_and_distinct(postings):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 import json
 import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -13,8 +14,8 @@ import pytest
 
 from flow_indexer_spark.functions.keys import key_to_ip
 from flow_indexer_spark.operators import queries as Q
-from flow_indexer_spark.operators.postings import build_postings
-from flow_indexer_spark.server import IndexerHandle, make_server
+from flow_indexer_spark.operators.postings import build_postings, write_postings
+from flow_indexer_spark.server import make_server, open_indexer
 
 
 def _serve(spark, indexers):
@@ -28,25 +29,28 @@ def _serve(spark, indexers):
 
 
 @pytest.fixture(scope="module")
-def server(spark, postings, transcripts):
-    yield from _serve(
-        spark, {"conn": IndexerHandle(postings=postings, transcripts=transcripts)}
-    )
+def server(spark, pipeline_out, transcripts):
+    cfg, _ = pipeline_out
+    yield from _serve(spark, {"conn": open_indexer(spark, cfg.output_root, transcripts)})
 
 
 @pytest.fixture(scope="module")
-def hex_server(spark):
+def hex_server(spark, tmp_path_factory):
     """One index holding deadbeef both as a tool name and as the IPv4
     key of 222.173.190.239."""
     ts = datetime.datetime(2024, 1, 1)
-    postings = build_postings(
-        spark.createDataFrame(
-            [("tool", "deadbeef", "c0", 0, ts), ("ip", "deadbeef", "c0", 1, ts)],
-            "entity_class string, entity_key string, conv_id string, "
-            "turn_idx int, ts timestamp",
-        )
+    root = str(tmp_path_factory.mktemp("hex"))
+    write_postings(
+        build_postings(
+            spark.createDataFrame(
+                [("tool", "deadbeef", "c0", 0, ts), ("ip", "deadbeef", "c0", 1, ts)],
+                "entity_class string, entity_key string, conv_id string, "
+                "turn_idx int, ts timestamp",
+            )
+        ),
+        f"{root}/postings",
     )
-    yield from _serve(spark, {"hex": IndexerHandle(postings=postings)})
+    yield from _serve(spark, {"hex": open_indexer(spark, root)})
 
 
 def _get(url: str) -> tuple[int, str]:
@@ -182,3 +186,63 @@ def test_concurrent_requests(server, postings):
     for t in threads:
         t.join()
     assert results == [want] * 4
+
+
+def _settled_job_ids(spark) -> set[int]:
+    """Job ids the status tracker holds, read once two reads 0.2 s apart
+    agree: job events reach the tracker asynchronously."""
+    tracker = spark.sparkContext.statusTracker()
+    ids = set(tracker.getJobIdsForGroup(None))
+    for _ in range(50):
+        time.sleep(0.2)
+        now = set(tracker.getJobIdsForGroup(None))
+        if now == ids:
+            return ids
+        ids = now
+    raise AssertionError("Spark jobs kept starting while the test waited")
+
+
+def test_fast_routes_run_no_spark_job(spark, server):
+    """/search and /expandcidr read the postings files in-process: a
+    burst of them starts no Spark job, while one /stats request does."""
+    before = _settled_job_ids(spark)
+    for q in ("10.0.0.1", "10.0.0.0/8", "0.0.0.0/0", "tool:*", "9.9.9.9"):
+        for route in ("search", "expandcidr", "v1/search"):
+            code, body = _get(f"{server}/{route}?i=conn&q={q}")
+            assert code == 200, body
+    assert _settled_job_ids(spark) == before
+    code, _ = _get(f"{server}/stats?i=conn&q=10.0.0.1")
+    assert code == 200
+    assert _settled_job_ids(spark) - before, "the /stats witness ran no job"
+
+
+def test_concurrent_file_lookups_agree(server):
+    """The handle's one Arrow dataset serves every handler thread: more
+    threads than cores, with frequent thread switches, all get the
+    single-threaded answer."""
+    import sys
+
+    urls = [
+        f"{server}/search?i=conn&q=10.0.0.1",
+        f"{server}/search?i=conn&q=10.0.0.0/8",
+        f"{server}/expandcidr?i=conn&q=0.0.0.0/0",
+    ]
+    want = {u: _get(u) for u in urls}
+    assert all(code == 200 and body for code, body in want.values())
+    got: list[bool] = []
+
+    def hit(url):
+        got.append(_get(url) == want[url])
+
+    threads = [threading.Thread(target=hit, args=(urls[i % 3],)) for i in range(12)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [True] * 12

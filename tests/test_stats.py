@@ -6,8 +6,9 @@ import pandas as pd
 import pytest
 
 from flow_indexer_spark.functions.extractors import extract_entities
-from flow_indexer_spark.operators.postings import build_postings
+from flow_indexer_spark.operators.postings import build_postings, write_postings
 from flow_indexer_spark.operators import queries as Q
+from flow_indexer_spark.server import open_indexer, query_stat
 
 
 @pytest.fixture(scope="module")
@@ -59,12 +60,17 @@ def test_month_day_default_count(stats_fixture):
     assert got == {"2015-04": 1, "2016-05": 2}
 
 
-def test_stats_summary_first_last(stats_fixture):
+def test_query_stat_first_last(spark, stats_fixture, tmp_path):
+    """hits / first / last of the /stats document, which
+    ``query_job stats`` prints too."""
     postings, transcripts = stats_fixture
-    row = Q.stats_summary(postings, transcripts, "7.7.7.7").collect()[0]
-    assert row.hits == 7
-    assert row.first.strftime("%Y-%m-%d %H:%M") == "2015-04-02 10:00"
-    assert row.last.strftime("%Y-%m-%d %H:%M") == "2016-05-04 09:15"
+    write_postings(postings, str(tmp_path / "postings"))
+    handle = open_indexer(spark, str(tmp_path), transcripts)
+    stat = query_stat(handle, "7.7.7.7", None)
+    assert stat["hits"] == 7
+    assert stat["first_time"] == "2015-04-02 10:00:00"
+    assert stat["last_time"] == "2016-05-04 09:15:00"
+    assert (stat["first"], stat["last"]) == ("c0\t0", "c6\t0")
 
 
 def test_stats_bad_granularity(stats_fixture):
