@@ -1666,7 +1666,7 @@ def _q_events_topk_per_user(spark, sf_dir):
 def _q_docs_and_search(spark, sf_dir):
     """Multi-entity AND search (the intersect extension the reference
     lacks, SURVEY §2.6): union per-entity hit lists, keep docs hit by
-    every query — same topology as queries.multi_entity_search."""
+    every query (a union, a group on the doc key, a count filter)."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     hits = None
@@ -1718,7 +1718,7 @@ def _q_docs_or_search(spark, sf_dir):
 )
 def _q_docs_not_search(spark, sf_dir):
     """NOT-search: include-hits anti-joined against exclude-hits (the
-    J2 anti-join shape at query time — queries.exclude_entity_search)."""
+    J2 anti-join shape at query time)."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     inc = toks.filter(F.col("token") == "spark").select("doc_id").distinct()

@@ -6,23 +6,29 @@ cmd/compact.go:8-15). Incremental ingest appends one batch directory of
 salt-chunk rows per run; after many batches the postings table fragments
 into many small files and many chunk rows per entity, which at 100 TB
 scale means catalog pressure and poor scan locality. On Iceberg this is
-``rewrite_data_files``; on plain parquet we rewrite the whole table into
-a single ``batch_id=compact-*`` directory, folding same-(entity, chunk)
-rows into one merged sorted row each, written by ``write_postings`` in the
-one sorted-by-entity_key layout that makes range queries file-skipping
-scans.
+``rewrite_data_files``; on plain parquet we fold the live postings
+batches into one new batch, same-(entity, chunk) rows merged into one
+sorted row each, written by ``write_postings`` in the one
+sorted-by-entity_key layout that makes range queries file-skipping
+scans, and published by the protocol in sources/manifest.py.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import SparkSession, functions as F
 
 from flow_indexer_spark.operators.postings import write_postings
+from flow_indexer_spark.sources.manifest import (
+    clean_orphan_batches,
+    commit_partitions,
+    live_batch_dirs,
+    new_batch_id,
+    read_live,
+    superseded_rows,
+    writer_lock,
+)
 
 
 def _parquet_file_count(path: str) -> int:
@@ -92,46 +98,43 @@ def compact_postings(
     min_files: int = 8,
     routed_path: str | None = None,
 ) -> dict:
-    """Rewrite the postings table if fragmented: read, fold chunk rows,
-    write them with ``write_postings`` into a sibling temp dir, then swap
-    it in by rename. Returns {files_before, files_after, compacted}.
-
-    ``write_postings`` gives the rewrite the same layout as every ingest
-    batch: files range-partitioned on (entity_class, entity_key), each
-    sorted by entity_key, so range queries keep skipping files. The
-    output lands under one fresh ``batch_id=compact-*`` directory —
-    ingest's orphan cleanup treats compact ids as always-published, so a
-    compacted table survives subsequent incremental runs.
+    """Rewrite the postings table at ``path`` if fragmented: fold the
+    live batches into one new batch, written by ``write_postings`` in
+    every batch's layout, and publish it as superseding them in the
+    manifest next to ``path`` (protocol: sources/manifest.py). Returns
+    {files_before, files_after, compacted}.
 
     ``routed_path``: when given, ts_min/ts_max are recomputed exactly
-    from the routed turns (see :func:`recompute_ts_bounds`) instead of
-    folded from the stored outer bounds — this is what re-tightens time
-    pruning after ``forget_conversations`` deliberately left them stale.
+    from the live routed turns (see :func:`recompute_ts_bounds`) instead
+    of folded from the stored outer bounds — this is what re-tightens
+    time pruning after ``forget_conversations`` deliberately left them
+    stale.
     """
-    before = _parquet_file_count(path)
-    if before < min_files:
-        return {"files_before": before, "files_after": before, "compacted": False}
+    root, table = os.path.split(os.path.abspath(path))
+    with writer_lock(root):
+        clean_orphan_batches([path])
+        live = live_batch_dirs(path)
+        before = sum(_parquet_file_count(d) for d in live)
+        if before < min_files:
+            return {"files_before": before, "files_after": before, "compacted": False}
 
-    df = spark.read.parquet(path)
-    folded = fold_posting_chunks(df.drop("batch_id") if "batch_id" in df.columns else df)
-    if routed_path is not None:
-        turn_ts = spark.read.parquet(routed_path).select(
-            "conv_id", "turn_idx", "ts"
+        folded = fold_posting_chunks(read_live(spark, path).drop("batch_id"))
+        if routed_path is not None:
+            turn_ts = read_live(spark, routed_path).select("conv_id", "turn_idx", "ts")
+            folded = recompute_ts_bounds(folded, turn_ts)
+        run_id = new_batch_id()
+        write_postings(
+            folded.withColumn("batch_id", F.lit(run_id)),
+            path,
+            mode="append",
+            partition_cols=("batch_id", "entity_class"),
         )
-        folded = recompute_ts_bounds(folded, turn_ts)
-    out = folded.withColumn("batch_id", F.lit("compact-" + uuid.uuid4().hex[:8]))
-    parent = os.path.dirname(os.path.abspath(path))
-    tmp = tempfile.mkdtemp(prefix="_compact_", dir=parent)
-    tmp_out = os.path.join(tmp, "data")
-    write_postings(out, tmp_out, partition_cols=("batch_id", "entity_class"))
-    # local-POSIX-only swap (at S3/HDFS scale this is an Iceberg
-    # rewrite_data_files snapshot commit instead); clear any stale _old
-    # left by a prior crash-after-rename so the swap can't wedge.
-    old = path.rstrip("/") + "_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp_out, path)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    after = _parquet_file_count(path)
+        commit_partitions(
+            spark,
+            os.path.join(root, "manifest"),
+            superseded_rows(table, [d.rsplit("batch_id=", 1)[1] for d in live]),
+            run_id=run_id,
+        )
+        clean_orphan_batches([path])
+        after = _parquet_file_count(os.path.join(path, f"batch_id={run_id}"))
     return {"files_before": before, "files_after": after, "compacted": True}

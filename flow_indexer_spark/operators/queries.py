@@ -12,17 +12,17 @@ Reference entry points re-expressed as DataFrame library functions:
            to the transcripts table.
 
 Each of these returns a DataFrame (composable, lazily planned).
-``search`` and ``expand`` are the batch and composition path (AND / OR /
-NOT search, resolution against transcripts) and the oracle for the
-interactive path: ``search_files`` and ``expand_files`` answer the same
-queries in-process with pyarrow, straight from the key-sorted postings
-files, without a Spark job — the reference's LevelDB ``Get`` / range
-iterator. Both paths take their predicate from one parser,
-``parse_query``.
+``search`` and ``expand`` are the batch and composition path (resolution
+against transcripts) and the oracle for the interactive path:
+``search_files`` and ``expand_files`` answer the same queries in-process
+with pyarrow, straight from the key-sorted postings files, without a
+Spark job — the reference's LevelDB ``Get`` / range iterator. Both paths
+take their predicate from one parser, ``parse_query``.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -36,6 +36,7 @@ from flow_indexer_spark.functions.keys import (
     cidr_to_key_range,
     ip_to_key,
 )
+from flow_indexer_spark.sources.manifest import live_batch_dirs
 
 #: bucket-granularity name -> Spark date_trunc unit; reference supports
 #: minute/hour/day/month/year (/root/reference/flowindexer/util.go:92-117)
@@ -160,10 +161,24 @@ def expand(postings: DataFrame, cidr: str) -> DataFrame:
 
 def open_postings_files(path: str) -> ds.Dataset:
     """The postings table at ``path`` as a pyarrow dataset for
-    ``search_files`` / ``expand_files``: hive partition directories,
-    listed once here. Like a DataFrame, the dataset keeps the file
-    listing it was opened with."""
-    return ds.dataset(path, format="parquet", partitioning="hive")
+    ``search_files`` / ``expand_files``: the files of its live batches
+    (``manifest.live_batch_dirs``), listed once here, with their hive
+    partition columns. Like a DataFrame, the dataset keeps the file
+    listing it was opened with. Raises ValueError when the table has no
+    live batch."""
+    dirs = live_batch_dirs(path)
+    if not dirs:
+        raise ValueError(f"no live batches under {path}")
+    files = [
+        os.path.join(root, f)
+        for d in dirs
+        for root, _dirs, names in os.walk(d)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    return ds.dataset(
+        files, format="parquet", partitioning="hive", partition_base_dir=path
+    )
 
 
 def search_files(files: ds.Dataset, query: str) -> pa.Table:
@@ -251,49 +266,3 @@ def dump(
     if contains is not None:
         rows = rows.filter(F.col("text").contains(contains))
     return rows
-
-
-def multi_entity_search(postings: DataFrame, queries: list[str]) -> DataFrame:
-    """AND-search: turns containing ALL the given entities — a cheap Spark
-    extension the reference lacks (SURVEY.md §2.6): union hit lists, group
-    on the turn key, keep turns hit by every query."""
-    hit_sets = None
-    for i, q in enumerate(queries):
-        h = search(postings, q).withColumn("_q", F.lit(i))
-        hit_sets = h if hit_sets is None else hit_sets.unionByName(h)
-    return (
-        hit_sets.groupBy("conv_id", "turn_idx")
-        .agg(F.count_distinct("_q").alias("_n"))
-        .filter(F.col("_n") == len(queries))
-        .select("conv_id", "turn_idx")
-        .orderBy("conv_id", "turn_idx")
-    )
-
-
-def any_entity_search(postings: DataFrame, queries: list[str]) -> DataFrame:
-    """OR-search: turns containing ANY of the given entities (U1 union
-    semantics across queries instead of across partitions)."""
-    hit_sets = None
-    for q in queries:
-        h = search(postings, q)
-        hit_sets = h if hit_sets is None else hit_sets.unionByName(h)
-    return hit_sets.dropDuplicates().orderBy("conv_id", "turn_idx")
-
-
-def exclude_entity_search(
-    postings: DataFrame, include: str, exclude: list[str]
-) -> DataFrame:
-    """NOT-search: turns matching ``include`` but none of ``exclude`` —
-    the union of all exclude hit-lists anti-joined ONCE (one shuffle
-    instead of k chained anti-joins; the reference has no except operator,
-    J2's anti-join shape reused at query time)."""
-    hits = search(postings, include)
-    if not exclude:
-        return hits
-    excluded = None
-    for q in exclude:
-        h = search(postings, q)
-        excluded = h if excluded is None else excluded.unionByName(h)
-    return hits.join(
-        excluded, on=["conv_id", "turn_idx"], how="left_anti"
-    ).orderBy("conv_id", "turn_idx")

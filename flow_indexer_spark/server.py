@@ -43,7 +43,10 @@ layer — the split SURVEY §2 K4 documents. Requests are served from a
 thread pool (``ThreadingHTTPServer``); Spark's scheduler interleaves
 concurrent actions, and a handle's DataFrames and dataset
 are immutable, so there is no shared mutable state beyond the JVM
-session itself.
+session itself. A handle lists the files of the live batches when it is
+opened; once a compaction or forget deletes batches it listed, the next
+request through it fails with a not-found error, and the daemon reopens
+the handle once and answers from the new one.
 """
 
 from __future__ import annotations
@@ -60,16 +63,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from flow_indexer_spark import health
 from flow_indexer_spark.functions.keys import key_to_ip
 from flow_indexer_spark.operators import queries as Q
+from flow_indexer_spark.sources.manifest import read_live
 
 
 @dataclass(frozen=True)
 class IndexerHandle:
-    """One registered indexer: its postings table, opened both as a
-    DataFrame (/stats, /dump) and as a pyarrow dataset (/search,
-    /expandcidr), plus (optionally) the transcripts table that /stats
-    and /dump resolve hits against — the reference's Indexer struct
-    analogue (flowindexer/flowindexer.go:48-54)."""
+    """One registered indexer: its index root, its postings table opened
+    both as a DataFrame (/stats, /dump) and as a pyarrow dataset
+    (/search, /expandcidr), plus (optionally) the transcripts table that
+    /stats and /dump resolve hits against — the reference's Indexer
+    struct analogue (flowindexer/flowindexer.go:48-54)."""
 
+    root: str
     postings: DataFrame
     postings_files: ds.Dataset
     transcripts: DataFrame | None = None
@@ -83,15 +88,24 @@ def open_indexer(
     """Open an ingest-job output directory as an IndexerHandle; the one
     constructor of handles. ``transcripts`` is a parquet path or an
     already-read DataFrame. The postings DataFrame and dataset each
-    snapshot the file listing here, once, not per request. Raises if the
-    postings table is not readable."""
+    snapshot the live batches' files (``manifest.live_batch_dirs``)
+    here, once, not per request. Raises if the postings table has no
+    live batch."""
     postings_path = f"{index_root}/postings"
     if isinstance(transcripts, str):
         transcripts = spark.read.parquet(transcripts)
     return IndexerHandle(
-        postings=spark.read.parquet(postings_path),
+        root=index_root,
+        postings=read_live(spark, postings_path),
         postings_files=Q.open_postings_files(postings_path),
         transcripts=transcripts,
+    )
+
+
+def _file_gone(e: Exception) -> bool:
+    """Whether a read failed on a deleted file (pyarrow or Spark)."""
+    return isinstance(e, FileNotFoundError) or any(
+        s in str(e) for s in ("FILE_NOT_EXIST", "FileNotFoundException")
     )
 
 
@@ -237,7 +251,19 @@ class _Handler(BaseHTTPRequestHandler):
         if handle is None:
             self._error(500, f"no such indexer: {name}")
             return
+        try:
+            self._answer(route, handle, query, params)
+        except Exception as e:
+            if not _file_gone(e):
+                raise
+            # a compaction or forget superseded the handle's files
+            handle = open_indexer(self.spark, handle.root, handle.transcripts)
+            self.indexers[name] = handle
+            self._answer(route, handle, query, params)
 
+    def _answer(
+        self, route: str, handle: IndexerHandle, query: str, params: dict[str, str]
+    ) -> None:
         if route == "/search":
             hits = Q.search_files(handle.postings_files, query)
             self._send(200, _doc_name_lines(hits), "text/plain")

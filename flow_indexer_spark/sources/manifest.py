@@ -1,4 +1,5 @@
-"""Ingest manifest: checkpoint / resume / lineage + batch publish protocol.
+"""Ingest manifest: checkpoint / resume / lineage, and the one publish
+protocol of the index.
 
 Reference analogues: per-store HasDocument dedup check
 (/root/reference/store/leveldb.go:58-68, flowindexer/index.go:17-24) and
@@ -8,16 +9,24 @@ the transcripts table), not a file: processed partitions are recorded with
 metrics, and ingest anti-joins the manifest so re-runs only process new
 partitions — resumable-from-checkpoint per the north_rule.
 
-Write-audit-publish: every ingest writes its routed/postings output under
-a per-batch partition directory (``batch_id=bXXXX``) and the manifest
-commit at the END of the run is the publish step. A crash between the
-data writes and the commit leaves orphan batch directories; the next run
-deletes any batch dir whose id is not in the manifest before doing new
-work (:func:`clean_orphan_batches`), so a retry can never double-index —
-the reference's per-doc ``HasDocument`` guard re-expressed at batch
-granularity. On Iceberg this whole protocol is a snapshot commit + WAP;
-the directory dance below is its local-parquet approximation (single
-writer per index root, like the reference's one daemon per config).
+Publish protocol. The manifest alone decides which ``batch_id=``
+directories of a table (``routed``, ``postings``) are table contents.
+Ingest, compaction and forget all change the index the same way:
+
+1. write the new rows under a fresh ``batch_id=`` directory in the table;
+2. append one manifest commit whose rows carry the new id as ``run_id``
+   (publishing it) and supersede ``(table, batch_id)`` pairs, one
+   ``state='superseded'``, ``src_partition='<table>/<batch_id>'`` row each;
+3. delete the superseded directories.
+
+A batch of a table is live when its id is published and not superseded
+for that table (supersession is per table: compaction retires postings
+batches only). Every reader and every writer's input lists files through
+:func:`live_batch_dirs`, and each writer first deletes what is not live
+(:func:`clean_orphan_batches`), so a crash at any step leaves an index
+that reads as the last commit. Writers hold an exclusive ``flock`` on
+``<root>/.lock`` (:func:`writer_lock`). This is LevelDB's MANIFEST edit,
+or an Iceberg ``rewrite_data_files`` snapshot commit.
 
 Error records: rows whose ``ts`` cannot be bucketed (null) route to the
 reserved ``_invalid_ts`` partition and are counted as ``n_errors`` in the
@@ -29,10 +38,12 @@ indexes files whose timestamps fail to parse too; time only feeds stats).
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -56,6 +67,9 @@ MANIFEST_SCHEMA = StructType(
 
 #: reserved partition for rows whose ts is null/unbucketable (error channel)
 INVALID_TS_PARTITION = "_invalid_ts"
+
+#: manifest state of a row that retires one ``<table>/<batch_id>``
+SUPERSEDED = "superseded"
 
 
 def new_batch_id() -> str:
@@ -97,9 +111,8 @@ def _local_manifest_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
 def manifest_exists(path: str) -> bool:
     """Cheap local-FS existence probe (this module's lifecycle ops are
     local-FS by design — see clean_orphan_batches; on Iceberg these are
-    catalog calls). Lets first-run callers skip both the exception-path
-    Spark read and the committed-run-ids collect job (~0.4 s of pure
-    driver latency per ingest on a fresh output root)."""
+    catalog calls). Lets first-run callers skip the exception-path Spark
+    read and the manifest anti-join on a fresh output root."""
     return os.path.exists(path)
 
 
@@ -120,8 +133,8 @@ def pending_partitions(df: DataFrame, manifest: DataFrame) -> DataFrame:
 
 
 def committed_run_ids(manifest: DataFrame) -> set[str]:
-    """All run ids ever published (any state) — the set of batch dirs that
-    are legitimate table contents."""
+    """All run ids ever published (any state), from a Spark manifest
+    DataFrame."""
     return {
         r["run_id"]
         for r in manifest.select("run_id").distinct().collect()
@@ -129,32 +142,97 @@ def committed_run_ids(manifest: DataFrame) -> set[str]:
     }
 
 
-def clean_orphan_batches(paths: list[str], committed: set[str]) -> list[str]:
-    """Delete batch directories not published in the manifest (crash
-    leftovers). ``compact-*`` ids are maintenance rewrites published by the
-    compactor's atomic swap, not by the manifest — always kept. Local-FS
-    walk; on Iceberg this is snapshot expiry / remove_orphan_files."""
+def _batch_dirs(table_path: str) -> list[tuple[str, str]]:
+    """(batch_id, directory) of every ``batch_id=`` directory under the
+    table. The walk stops at each one (they never nest), so it is
+    O(partitions), not O(files), and skips ``_``/``.`` temp dirs."""
+    out = []
+    for root, dirs, _files in os.walk(table_path):
+        for d in list(dirs):
+            if d.startswith("batch_id="):
+                out.append((d.split("=", 1)[1], os.path.join(root, d)))
+            if d.startswith(("batch_id=", "_", ".")):
+                dirs.remove(d)
+    return sorted(out)
+
+
+def live_batch_dirs(table_path: str) -> list[str]:
+    """The directories of the table's live batches, per the manifest
+    next to the table (``<root>/manifest``), read with pyarrow: no JVM.
+    An unpublished ``compact-*`` directory holds a whole table that a
+    compaction from before this protocol swapped in: an error, not an
+    orphan."""
+    import pyarrow.dataset as ds
+
+    root, table = os.path.split(os.path.abspath(table_path))
+    published: set[str] = set()
+    superseded: set[str] = set()
+    mpath = os.path.join(root, "manifest")
+    if os.path.isdir(mpath):
+        rows = ds.dataset(mpath, format="parquet").to_table(
+            columns=["src_partition", "state", "run_id"]
+        ).to_pylist()
+        published = {r["run_id"] for r in rows if r["run_id"]}
+        superseded = {
+            r["src_partition"][len(table) + 1:]
+            for r in rows
+            if r["state"] == SUPERSEDED and r["src_partition"].startswith(table + "/")
+        }
+    live = []
+    for batch, d in _batch_dirs(table_path):
+        if batch in published and batch not in superseded:
+            live.append(d)
+        elif batch.startswith("compact-") and batch not in published:
+            raise ValueError(
+                f"{d}: compacted before the manifest publish protocol; publish "
+                f"it with a manifest row whose run_id is {batch!r}, or re-ingest"
+            )
+    return live
+
+
+def read_live(spark: SparkSession, table_path: str) -> DataFrame:
+    """The table's live batches as one DataFrame (partition columns
+    included). Raises ValueError when the table has none."""
+    dirs = live_batch_dirs(table_path)
+    if not dirs:
+        raise ValueError(f"no live batches under {table_path}")
+    return spark.read.option("basePath", table_path).parquet(*dirs)
+
+
+def clean_orphan_batches(
+    paths: list[str], committed: set[str] | None = None
+) -> list[str]:
+    """Delete every batch directory under ``paths`` that is not live
+    (unpublished crash leftovers, superseded batches); returns their ids.
+    ``committed``, a set of ids, also deletes batches outside it. On
+    Iceberg this is snapshot expiry / remove_orphan_files."""
     removed: list[str] = []
     for path in paths:
-        if not os.path.isdir(path):
-            continue
-        for root, dirs, _files in os.walk(path):
-            for d in list(dirs):
-                if not d.startswith("batch_id="):
-                    continue
-                val = d.split("=", 1)[1]
-                # batch dirs never nest inside batch dirs, so the walk
-                # never needs to descend into one — pruning here keeps
-                # the scan O(partitions), not O(files): kept batches'
-                # part files (the bulk of a grown table) are never
-                # listed (measured ~0.4 s -> ~0.05 s on the bench
-                # table's ~400 part files).
-                dirs.remove(d)
-                if val.startswith("compact-") or val in committed:
-                    continue
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                removed.append(val)
+        live = set(live_batch_dirs(path))
+        for batch, d in _batch_dirs(path):
+            if d not in live or (committed is not None and batch not in committed):
+                shutil.rmtree(d, ignore_errors=True)
+                removed.append(batch)
     return removed
+
+
+def superseded_rows(table: str, batch_ids) -> list[dict]:
+    """Manifest rows by which a commit supersedes ``batch_ids`` of
+    ``table`` (step 2 of the publish protocol)."""
+    return [
+        {"src_partition": f"{table}/{b}", "state": SUPERSEDED} for b in batch_ids
+    ]
+
+
+@contextmanager
+def writer_lock(root: str):
+    """Hold the index root's exclusive writer lock for the block, waiting
+    for any other writer. The kernel drops a ``flock`` when its holder
+    dies, so a crash never blocks the root."""
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, ".lock"), "a") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        yield
 
 
 def commit_partitions(

@@ -3,6 +3,7 @@ transcripts, and a fully-ingested pipeline output reused across tests."""
 
 from __future__ import annotations
 
+import shutil
 import sys
 from pathlib import Path
 
@@ -60,3 +61,32 @@ def pipeline_out(spark, transcripts, dims, tmp_path_factory):
 def postings(spark, pipeline_out):
     cfg, _ = pipeline_out
     return spark.read.parquet(cfg.postings_path).cache()
+
+
+@pytest.fixture(scope="session")
+def halves(transcripts):
+    """The fixture transcripts before their middle date, and all of them:
+    two ingest batches."""
+    from pyspark.sql import functions as F
+
+    day = F.date_format("ts", "yyyy-MM-dd")
+    parts = sorted(r.p for r in transcripts.select(day.alias("p")).distinct().collect())
+    return transcripts.filter(day < parts[len(parts) // 2]), transcripts
+
+
+@pytest.fixture(scope="session")
+def first_half_root(spark, halves, dims, tmp_path_factory):
+    """An index root holding the first half, published; copy, don't write."""
+    cfg = PipelineConfig(output_root=str(tmp_path_factory.mktemp("half") / "idx"))
+    run_ingest(spark, halves[0], cfg, *dims)
+    return cfg.output_root
+
+
+@pytest.fixture(scope="session")
+def two_batch_root(spark, halves, dims, first_half_root, tmp_path_factory):
+    """``first_half_root`` plus the second half as a second batch; copy,
+    don't write."""
+    root = str(tmp_path_factory.mktemp("two") / "idx")
+    shutil.copytree(first_half_root, root)
+    run_ingest(spark, halves[1], PipelineConfig(output_root=root), *dims)
+    return root

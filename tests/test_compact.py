@@ -5,6 +5,7 @@ from __future__ import annotations
 from flow_indexer_spark.operators.compact import _parquet_file_count, compact_postings
 from flow_indexer_spark.operators.queries import search
 from tests.layout import assert_postings_layout
+from tests.published import publish
 from tests.query_paths import assert_query_paths_agree
 
 
@@ -17,11 +18,13 @@ def _counts(spark, path):
 
 
 def test_compact_preserves_content_and_reduces_files(spark, pipeline_out, tmp_path):
-    cfg, _ = pipeline_out
-    # fragment a copy of the postings table: rewrite with many partitions
-    frag = str(tmp_path / "postings_frag")
+    cfg, metrics = pipeline_out
+    # fragment a copy of the postings table: rewrite with many partitions,
+    # as the same batch, published in the copy's own manifest
+    frag = str(tmp_path / "postings")
     df = spark.read.parquet(cfg.postings_path)
-    df.repartition(24).write.partitionBy("entity_class").parquet(frag)
+    df.repartition(24).write.partitionBy("batch_id", "entity_class").parquet(frag)
+    publish(spark, str(tmp_path), metrics["run_id"])
     before_content = _counts(spark, frag)
     before_files = _parquet_file_count(frag)
 

@@ -10,6 +10,7 @@ from flow_indexer_spark.functions.extractors import extract_entities
 from flow_indexer_spark.operators.postings import build_postings, write_postings
 from flow_indexer_spark.operators import queries as Q
 from tests.oracle import extract_oracle, postings_oracle
+from tests.published import publish_postings
 from tests.query_paths import hit_tuples
 
 
@@ -37,12 +38,11 @@ def mini_postings(spark):
 
 
 @pytest.fixture(scope="module")
-def mini_files(mini_postings, tmp_path_factory):
-    """``mini_postings`` written as the postings table and opened for
+def mini_files(spark, mini_postings, tmp_path_factory):
+    """``mini_postings`` published as the postings table and opened for
     the in-process Arrow query path."""
-    path = str(tmp_path_factory.mktemp("mini") / "postings")
-    write_postings(mini_postings, path)
-    return Q.open_postings_files(path)
+    root = str(tmp_path_factory.mktemp("mini"))
+    return Q.open_postings_files(publish_postings(spark, mini_postings, root))
 
 
 QUERY_TABLE = [
@@ -172,14 +172,6 @@ def test_write_postings_rejects_other_layouts(mini_postings, tmp_path):
     assert not (tmp_path / "p").exists()
 
 
-def test_multi_entity_and_search(mini_postings):
-    got = [
-        (r.conv_id, r.turn_idx)
-        for r in Q.multi_entity_search(mini_postings, ["1.2.3.4", "5.6.7.8"]).collect()
-    ]
-    assert got == [("c1", 0)]
-
-
 def test_search_turns_roundtrip(spark, mini_postings):
     t = _mini_transcripts(spark)
     rows = Q.search_turns(mini_postings, t, "1.2.3.4").collect()
@@ -187,27 +179,6 @@ def test_search_turns_roundtrip(spark, mini_postings):
     # per-turn text equality under stable ordering (north_rule invariant)
     assert rows[0].text == "saw 1.2.3.4 and 5.6.7.8"
     assert rows[1].text == "also 1.2.3.4 plus v6 2001:db8::1"
-
-
-def test_any_entity_or_search(mini_postings):
-    got = [
-        (r.conv_id, r.turn_idx)
-        for r in Q.any_entity_search(
-            mini_postings, ["5.6.7.8", "100.111.99.58"]
-        ).collect()
-    ]
-    assert got == [("c1", 0), ("c2", 0)]
-
-
-def test_exclude_entity_not_search(mini_postings):
-    # all turns with 1.2.3.4 except those also containing 5.6.7.8
-    got = [
-        (r.conv_id, r.turn_idx)
-        for r in Q.exclude_entity_search(
-            mini_postings, "1.2.3.4", ["5.6.7.8"]
-        ).collect()
-    ]
-    assert got == [("c1", 1)]
 
 
 def test_class_entity_counts_approx_within_rsd(spark):

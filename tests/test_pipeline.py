@@ -335,7 +335,7 @@ def test_forget_conversations_purges_both_sinks(spark, transcripts, dims, tmp_pa
     # idempotent retry: nothing left to forget
     res2 = forget_conversations(spark, cfg, [victim])
     assert res2["n_routed_forgotten"] == 0
-    assert res2["n_partitions_rewritten"] == 0
+    assert res2["n_batches_rewritten"] == 0
     assert spark.read.parquet(cfg.routed_path).count() == before_rows - victim_rows
 
 
@@ -343,7 +343,7 @@ def test_forget_after_compaction_purges_compacted_postings(
     spark, transcripts, dims, tmp_path
 ):
     """Postings purge must be scoped by CONTENT: after compact_postings
-    rewrites everything under batch_id=compact-*, the routed table's
+    rewrites everything into one new postings batch, the routed table's
     batch_ids no longer name any postings partition — a routed-derived
     scope would match nothing and silently leak the forgotten entries."""
     from flow_indexer_spark.operators.compact import compact_postings
@@ -355,10 +355,11 @@ def test_forget_after_compaction_purges_compacted_postings(
 
     cfg = PipelineConfig(output_root=str(tmp_path / "idx"))
     tool_registry, role_taxonomy = dims
-    run_ingest(spark, transcripts, cfg, tool_registry, role_taxonomy)
+    m = run_ingest(spark, transcripts, cfg, tool_registry, role_taxonomy)
     compact_postings(spark, cfg.postings_path, min_files=1)
     post = spark.read.parquet(cfg.postings_path)
-    assert post.filter(~F.col("batch_id").startswith("compact-")).count() == 0
+    batches = {r["batch_id"] for r in post.select("batch_id").distinct().collect()}
+    assert len(batches) == 1 and m["run_id"] not in batches  # all compacted
 
     victim = post.select(
         F.explode("postings").alias("p")
@@ -385,9 +386,9 @@ def test_forget_after_compaction_purges_compacted_postings(
 
 def test_forget_purges_entity_free_turns(spark, transcripts, dims, tmp_path):
     """Entity-free turns route to the Hive null partition
-    (entity_class=__HIVE_DEFAULT_PARTITION__). concat_ws drops NULLs,
-    so an un-coalesced membership test skips those rows and the
-    forgotten turn's full text survives in the routed table."""
+    (entity_class=__HIVE_DEFAULT_PARTITION__). A purge that misses
+    null-class rows leaves the forgotten turn's full text in the routed
+    table."""
     from flow_indexer_spark.plans.pipeline import (
         PipelineConfig,
         forget_conversations,

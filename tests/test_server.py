@@ -14,8 +14,9 @@ import pytest
 
 from flow_indexer_spark.functions.keys import key_to_ip
 from flow_indexer_spark.operators import queries as Q
-from flow_indexer_spark.operators.postings import build_postings, write_postings
+from flow_indexer_spark.operators.postings import build_postings
 from flow_indexer_spark.server import make_server, open_indexer
+from tests.published import publish_postings
 
 
 def _serve(spark, indexers):
@@ -40,7 +41,8 @@ def hex_server(spark, tmp_path_factory):
     key of 222.173.190.239."""
     ts = datetime.datetime(2024, 1, 1)
     root = str(tmp_path_factory.mktemp("hex"))
-    write_postings(
+    publish_postings(
+        spark,
         build_postings(
             spark.createDataFrame(
                 [("tool", "deadbeef", "c0", 0, ts), ("ip", "deadbeef", "c0", 1, ts)],
@@ -48,7 +50,7 @@ def hex_server(spark, tmp_path_factory):
                 "turn_idx int, ts timestamp",
             )
         ),
-        f"{root}/postings",
+        root,
     )
     yield from _serve(spark, {"hex": open_indexer(spark, root)})
 
@@ -246,3 +248,64 @@ def test_concurrent_file_lookups_agree(server):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert got == [True] * 12
+
+
+def _assert_routes_answer(base, spark, root, transcripts, q, routes):
+    """Each route answers 200 with the library answer for the postings
+    table now on disk."""
+    from flow_indexer_spark.server import query_stat
+
+    post = spark.read.parquet(f"{root}/postings")
+    want = {
+        "/search": [f"{r['conv_id']}\t{r['turn_idx']}" for r in Q.search(post, q).collect()],
+        "/expandcidr": [key_to_ip(r["entity_key"]) for r in Q.expand(post, q).collect()],
+        "/dump": [r["text"] for r in Q.dump(post, transcripts, q).collect()],
+    }
+    for route in routes:
+        code, body = _get(f"{base}{route}?i=live&q={q}")
+        assert code == 200, (route, body)
+        if route == "/stats":
+            fresh = open_indexer(spark, root, transcripts)
+            assert json.loads(body) == query_stat(fresh, q, None)
+        else:
+            assert body.splitlines() == want[route], route
+
+
+def test_served_handle_survives_compaction_and_forget(
+    spark, two_batch_root, transcripts, tmp_path
+):
+    """A handle opened on a two-batch root keeps serving every route
+    after a compaction and then a forget delete the files it listed: the
+    first request through each reader reopens it on the live batches."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from flow_indexer_spark.operators.compact import compact_postings
+    from flow_indexer_spark.plans.pipeline import PipelineConfig, forget_conversations
+
+    cfg = PipelineConfig(output_root=str(tmp_path / "idx"))
+    shutil.copytree(two_batch_root, cfg.output_root)
+    serving = _serve(spark, {"live": open_indexer(spark, cfg.output_root, transcripts)})
+    base = next(serving)
+    try:
+        q = "10.0.0.1"
+        assert compact_postings(spark, cfg.postings_path, min_files=1)["compacted"]
+        _assert_routes_answer(  # the Arrow reader meets the deleted files first
+            base, spark, cfg.output_root, transcripts, q,
+            ["/search", "/expandcidr", "/stats", "/dump"],
+        )
+        victim = (
+            Q.search(open_indexer(spark, cfg.output_root).postings, q)
+            .select(F.min("conv_id")).first()[0]
+        )
+        assert forget_conversations(spark, cfg, [victim])["n_batches_rewritten"] > 0
+        _assert_routes_answer(  # now the Spark reader does
+            base, spark, cfg.output_root, transcripts, q,
+            ["/stats", "/dump", "/search", "/expandcidr"],
+        )
+        code, body = _get(f"{base}/search?i=live&q={q}")
+        assert code == 200 and body
+        assert not [ln for ln in body.splitlines() if ln.split("\t")[0] == victim]
+    finally:
+        next(serving, None)

@@ -6,9 +6,10 @@ import pandas as pd
 import pytest
 
 from flow_indexer_spark.functions.extractors import extract_entities
-from flow_indexer_spark.operators.postings import build_postings, write_postings
+from flow_indexer_spark.operators.postings import build_postings
 from flow_indexer_spark.operators import queries as Q
 from flow_indexer_spark.server import open_indexer, query_stat
+from tests.published import publish_postings
 
 
 @pytest.fixture(scope="module")
@@ -64,7 +65,7 @@ def test_query_stat_first_last(spark, stats_fixture, tmp_path):
     """hits / first / last of the /stats document, which
     ``query_job stats`` prints too."""
     postings, transcripts = stats_fixture
-    write_postings(postings, str(tmp_path / "postings"))
+    publish_postings(spark, postings, str(tmp_path))
     handle = open_indexer(spark, str(tmp_path), transcripts)
     stat = query_stat(handle, "7.7.7.7", None)
     assert stat["hits"] == 7
