@@ -188,7 +188,10 @@ def open_indexers(
     previous: dict[str, IndexerHandle] | None = None,
 ) -> dict[str, IndexerHandle]:
     """name -> IndexerHandle for the HTTP layer. The indexer's input
-    table doubles as the transcripts side of /stats and /dump. Re-call
+    parquet doubles as the transcripts side of /stats and /dump, without
+    its ``filter``: every hit is a turn the filter kept, so the semi-join
+    of hits to the whole input gives the filtered answer while
+    (conv_id, turn_idx) identifies one input row. Re-call
     after each ingest tick: a handle snapshots the parquet file listing
     when opened (RefreshStores analogue,
     /root/reference/flowindexer/flowindexer.go:281-316).
@@ -207,7 +210,7 @@ def open_indexers(
     previous = previous or {}
     for spec in cfg.indexers:
         try:
-            out[spec.name] = open_indexer(spark, spec.output, _read_input(spark, spec))
+            out[spec.name] = open_indexer(spark, spec.output, spec.input)
         except Exception as e:  # noqa: BLE001 - per-indexer isolation
             print(
                 f"open_indexers: indexer {spec.name!r} not readable "

@@ -11,13 +11,14 @@ Reference entry points re-expressed as DataFrame library functions:
            matched files, emit matching raw lines) — here a semi-join back
            to the transcripts table.
 
-Each of these returns a DataFrame (composable, lazily planned).
-``search`` and ``expand`` are the batch and composition path (resolution
-against transcripts) and the oracle for the interactive path:
-``search_files`` and ``expand_files`` answer the same queries in-process
-with pyarrow, straight from the key-sorted postings files, without a
-Spark job — the reference's LevelDB ``Get`` / range iterator. Both paths
-take their predicate from one parser, ``parse_query``.
+Each of these returns a DataFrame (composable, lazily planned). They
+are the batch and composition path and the oracle for the interactive
+path, which answers the same queries in-process with pyarrow and
+without a Spark job: ``search_files`` and ``expand_files`` read the
+key-sorted postings files (the reference's LevelDB ``Get`` / range
+iterator); ``search_turns_files`` resolves those hits against the
+transcripts files, and ``stats_buckets`` and ``dump_files`` build on it.
+Both paths take their predicate from one parser, ``parse_query``.
 """
 
 from __future__ import annotations
@@ -193,9 +194,11 @@ def search_files(files: ds.Dataset, query: str) -> pa.Table:
         filter=_arrow_filter(parse_query(query)),
         use_threads=False,
     )["postings"].combine_chunks()  # a miss yields no chunks at all
+    hits = pa.Table.from_struct_array(pc.list_flatten(chunks))
+    if hits.num_rows < 2:  # nothing to dedup or sort
+        return hits
     return (
-        pa.Table.from_struct_array(pc.list_flatten(chunks))
-        .group_by(["conv_id", "turn_idx"], use_threads=False)
+        hits.group_by(["conv_id", "turn_idx"], use_threads=False)
         .aggregate([])
         .sort_by(
             [("conv_id", "ascending"), ("turn_idx", "ascending")],
@@ -228,6 +231,14 @@ def search_turns(postings: DataFrame, transcripts: DataFrame, query: str) -> Dat
     ).orderBy("conv_id", "turn_idx")
 
 
+def _count_granularity(group_by: str, count: str | None) -> str:
+    """Validate a (group, count) granularity pair; returns the count
+    granularity, ``group_by``'s default when ``count`` is None."""
+    if group_by not in GRANULARITIES or count not in (*GRANULARITIES, None):
+        raise ValueError(f"bucket granularity must be one of {GRANULARITIES}")
+    return count or DEFAULT_COUNT_FOR[group_by]
+
+
 def stats(
     postings: DataFrame,
     transcripts: DataFrame,
@@ -244,10 +255,7 @@ def stats(
     Returns one row per coarse bucket: (bucket, hits); the matched total
     and first/last are ``server.query_stat``'s.
     """
-    if group_by not in GRANULARITIES or count not in (*GRANULARITIES, None):
-        raise ValueError(f"bucket granularity must be one of {GRANULARITIES}")
-    if count is None:
-        count = DEFAULT_COUNT_FOR[group_by]
+    count = _count_granularity(group_by, count)
     matched = search_turns(postings, transcripts, query)
     return (
         matched.groupBy(F.date_trunc(group_by, "ts").alias("bucket"))
@@ -265,4 +273,83 @@ def dump(
     rows = search_turns(postings, transcripts, query)
     if contains is not None:
         rows = rows.filter(F.col("text").contains(contains))
+    return rows
+
+
+# -- the in-process path for /stats and /dump ------------------------------
+
+
+def open_transcripts_files(path: str) -> ds.Dataset:
+    """The transcripts parquet at ``path`` as a pyarrow dataset for
+    ``search_turns_files``: its files listed once here, with any hive
+    partition columns, as ``spark.read.parquet`` discovers them."""
+    return ds.dataset(path, format="parquet", partitioning="hive")
+
+
+def search_turns_files(
+    files: ds.Dataset,
+    transcripts: ds.Dataset,
+    query: str,
+    columns: list[str] | None = None,
+) -> pa.Table:
+    """``search_turns`` answered in-process: the ``search_files`` hits,
+    the transcripts rows of the hit conversations (a ``conv_id`` ``isin``
+    filter), an Arrow left-semi join on (conv_id, turn_idx) and a sort.
+    ``columns`` (None: all) must include both join keys."""
+    keys = ["conv_id", "turn_idx"]
+    hits = search_files(files, query)
+    hits = hits.cast(pa.schema([transcripts.schema.field(k) for k in keys]))
+    rows = transcripts.to_table(
+        columns=columns,
+        filter=pc.field("conv_id").isin(pc.unique(hits["conv_id"])),
+        use_threads=False,
+    )
+    return rows.join(hits, keys=keys, join_type="left semi", use_threads=False).sort_by(
+        [(k, "ascending") for k in keys], null_placement="at_start"
+    )
+
+
+def utc_timestamps(ts: pa.Array | pa.ChunkedArray) -> pa.Array | pa.ChunkedArray:
+    """A timestamp column in either parquet encoding — Spark's naive
+    INT96, read in UTC wall time, or a zoned ``timestamp[us, UTC]`` — as
+    naive ``timestamp[us]`` in UTC, the session time zone Spark's
+    ``date_trunc`` works in."""
+    micros = pc.cast(pc.cast(ts, pa.timestamp("us", ts.type.tz)), pa.int64())
+    return pc.cast(micros, pa.timestamp("us"))
+
+
+def stats_buckets(
+    turns: pa.Table, group_by: str = "month", count: str | None = None
+) -> pa.Table:
+    """``stats``' (bucket, hits) rows computed in Arrow from the ``ts``
+    column of ``search_turns_files`` rows: per coarse bucket, the count
+    of distinct fine buckets. A null ``ts`` forms a null bucket with 0
+    hits, sorted first, as in Spark."""
+    count = _count_granularity(group_by, count)
+    ts = utc_timestamps(turns["ts"])
+    return (
+        pa.table({
+            "bucket": pc.floor_temporal(ts, unit=group_by),
+            "fine": pc.floor_temporal(ts, unit=count),
+        })
+        .group_by("bucket", use_threads=False)
+        .aggregate([("fine", "count_distinct")])
+        .select(["bucket", "fine_count_distinct"])
+        .rename_columns(["bucket", "hits"])
+        .sort_by("bucket", null_placement="at_start")
+    )
+
+
+def dump_files(
+    files: ds.Dataset,
+    transcripts: ds.Dataset,
+    query: str,
+    contains: str | None = None,
+    columns: list[str] | None = None,
+) -> pa.Table:
+    """``dump`` answered in-process: ``search_turns_files`` rows,
+    optionally re-filtered by substring of ``text``."""
+    rows = search_turns_files(files, transcripts, query, columns)
+    if contains is not None:
+        rows = rows.filter(pc.match_substring(rows["text"], contains))
     return rows

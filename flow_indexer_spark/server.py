@@ -30,23 +30,24 @@ parameter is a 400 ``Missing parameter: <name>`` (web.go:24-31); any
 engine error (unknown indexer, unparseable query, bad bucket
 granularity) is a 500 carrying the error text (web.go:33-42).
 
-Execution model: the daemon holds ONE long-lived SparkSession and, per
-indexer, an ``IndexerHandle`` opened once. ``/search`` and
-``/expandcidr`` run no Spark job: they read the key-sorted postings
-files in-process through the handle's pyarrow dataset — partition
-pruning on the entity class, footer min/max pruning on the key, then an
-Arrow flatten, dedup and sort (``queries.search_files`` /
-``expand_files``), like the reference's LevelDB ``Get`` and range
-iterator. ``/stats`` and ``/dump`` join hits back to the transcripts
-table, so each composes a lazy DataFrame and collects it at the API
-layer — the split SURVEY §2 K4 documents. Requests are served from a
-thread pool (``ThreadingHTTPServer``); Spark's scheduler interleaves
-concurrent actions, and a handle's DataFrames and dataset
-are immutable, so there is no shared mutable state beyond the JVM
-session itself. A handle lists the files of the live batches when it is
-opened; once a compaction or forget deletes batches it listed, the next
-request through it fails with a not-found error, and the daemon reopens
-the handle once and answers from the new one.
+Execution model: all four query routes run in-process on the handler's
+thread, through each indexer's ``IndexerHandle`` opened once, and start
+no Spark job. ``/search`` and ``/expandcidr`` read the key-sorted
+postings files through the handle's pyarrow dataset — partition pruning
+on the entity class, footer min/max pruning on the key, then an Arrow
+flatten, dedup and sort (``queries.search_files`` / ``expand_files``),
+like the reference's LevelDB ``Get`` and range iterator. ``/stats`` and
+``/dump`` resolve those hits against the handle's transcripts dataset —
+a ``conv_id`` filter, an Arrow left-semi join and a sort
+(``queries.search_turns_files``) — and aggregate or render the matched
+turns with Arrow kernels, no Python loop per row. The daemon's one
+SparkSession serves only ``/health``. Requests are served from a thread
+pool (``ThreadingHTTPServer``); a handle's datasets are immutable, so
+handler threads share no mutable state. A handle lists the files of the
+live batches when it is opened; once a compaction or forget deletes
+batches it listed, the next request through it fails with a not-found
+error, and the daemon reopens the handle once and answers from the new
+one.
 """
 
 from __future__ import annotations
@@ -58,7 +59,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 from flow_indexer_spark import health
 from flow_indexer_spark.functions.keys import key_to_ip
@@ -68,37 +70,43 @@ from flow_indexer_spark.sources.manifest import read_live
 
 @dataclass(frozen=True)
 class IndexerHandle:
-    """One registered indexer: its index root, its postings table opened
-    both as a DataFrame (/stats, /dump) and as a pyarrow dataset
-    (/search, /expandcidr), plus (optionally) the transcripts table that
-    /stats and /dump resolve hits against — the reference's Indexer
-    struct analogue (flowindexer/flowindexer.go:48-54)."""
+    """One registered indexer — the reference's Indexer struct analogue
+    (flowindexer/flowindexer.go:48-54): its index root, its postings
+    table as a pyarrow dataset (every route) and the transcripts parquet
+    path and dataset that /stats and /dump resolve hits against (None
+    without one). ``postings`` and ``transcripts``, the same tables as
+    Spark DataFrames, serve no route: they are the library-side oracle
+    of a served handle."""
 
     root: str
     postings: DataFrame
     postings_files: ds.Dataset
+    transcripts_path: str | None = None
     transcripts: DataFrame | None = None
+    transcripts_files: ds.Dataset | None = None
 
 
 def open_indexer(
     spark: SparkSession,
     index_root: str,
-    transcripts: str | DataFrame | None = None,
+    transcripts: str | None = None,
 ) -> IndexerHandle:
     """Open an ingest-job output directory as an IndexerHandle; the one
-    constructor of handles. ``transcripts`` is a parquet path or an
-    already-read DataFrame. The postings DataFrame and dataset each
-    snapshot the live batches' files (``manifest.live_batch_dirs``)
-    here, once, not per request. Raises if the postings table has no
-    live batch."""
+    constructor of handles. ``transcripts`` is the transcripts parquet
+    path. The postings DataFrame and dataset each snapshot the live
+    batches' files (``manifest.live_batch_dirs``), and the transcripts
+    DataFrame and dataset the files under ``transcripts``, here, once,
+    not per request. Raises if the postings table has no live batch."""
     postings_path = f"{index_root}/postings"
-    if isinstance(transcripts, str):
-        transcripts = spark.read.parquet(transcripts)
     return IndexerHandle(
         root=index_root,
         postings=read_live(spark, postings_path),
         postings_files=Q.open_postings_files(postings_path),
-        transcripts=transcripts,
+        transcripts_path=transcripts,
+        transcripts=None if transcripts is None else spark.read.parquet(transcripts),
+        transcripts_files=(
+            None if transcripts is None else Q.open_transcripts_files(transcripts)
+        ),
     )
 
 
@@ -113,9 +121,9 @@ def parse_bucket_param(bucket: str | None) -> tuple[str, str | None]:
     """``bucket`` query param -> (group, count) granularities —
     parseBucketParam semantics (/root/reference/flowindexer/
     util.go:119-145): empty -> month/day; one part -> its default count
-    pair; two parts -> as given. Validation happens in ``Q.stats``
-    (unknown granularity raises ValueError -> HTTP 500, matching the
-    reference's timeToBucket error path)."""
+    pair; two parts -> as given. Validation happens in
+    ``Q.stats_buckets`` (unknown granularity raises ValueError -> HTTP
+    500, matching the reference's timeToBucket error path)."""
     if not bucket:
         return "month", "day"
     parts = bucket.split("/")
@@ -137,55 +145,87 @@ def display_entity(query: str, key: str) -> str:
     return key_to_ip(key)
 
 
-def _doc_name_lines(hits: pa.Table) -> str:
-    """The /search body, one ``conv_id<TAB>turn_idx`` line per hit,
-    joined in Arrow: building a hot key's ~10^4 lines as Python strings
-    holds the interpreter lock for ~20 ms, which every concurrent request
-    waits out."""
-    names = pc.binary_join_element_wise(
-        hits["conv_id"], pc.cast(hits["turn_idx"], pa.string()), "\t"
-    ).combine_chunks()
-    if not len(names):
-        return ""
-    one_list = pa.ListArray.from_arrays([0, len(names)], names)
+#: Bodies of fewer lines are joined in Python. Each Arrow call releases
+#: and retakes the interpreter lock, and under concurrent requests each
+#: retake waits for another thread; below this size the Python join
+#: also costs less on its own.
+PY_JOIN_MAX_LINES = 64
+
+
+def _text_lines(lines: pa.ChunkedArray) -> str:
+    """A text/plain body, one line per string; a null renders as
+    ``None``, like ``str(None)``. Large bodies are joined in Arrow:
+    building a hot key's ~10^4 lines as Python strings holds the
+    interpreter lock for ~20 ms, which every concurrent request waits
+    out."""
+    if len(lines) < PY_JOIN_MAX_LINES:
+        return "".join(f"{s}\n" for s in lines.to_pylist())
+    lines = pc.fill_null(lines, "None").combine_chunks()
+    one_list = pa.ListArray.from_arrays([0, len(lines)], lines)
     return pc.binary_join(one_list, "\n")[0].as_py() + "\n"
 
 
-def query_stat(handle: IndexerHandle, query: str, bucket: str | None) -> dict:
+def _doc_name_lines(hits: pa.Table) -> str:
+    """The /search body, one ``conv_id<TAB>turn_idx`` line per hit."""
+    if hits.num_rows < PY_JOIN_MAX_LINES:
+        rows = zip(hits["conv_id"].to_pylist(), hits["turn_idx"].to_pylist())
+        return "".join(f"{c}\t{i}\n" for c, i in rows)
+    return _text_lines(pc.binary_join_element_wise(
+        hits["conv_id"], pc.cast(hits["turn_idx"], pa.string()), "\t"
+    ))
+
+
+def spark_datetimes(ts: pa.ChunkedArray | pa.Array) -> list:
+    """Timestamps -> the Python values Spark's ``collect`` gives for them
+    (``TimestampType.fromInternal``: local wall time, no zone), so that
+    ``str()`` renders them as the Spark path does."""
+    micros = pc.cast(Q.utc_timestamps(ts), pa.int64())
+    return [TimestampType().fromInternal(us) for us in micros.to_pylist()]
+
+
+def query_stat(
+    files: ds.Dataset, transcripts: ds.Dataset, query: str, bucket: str | None
+) -> dict:
     """The queryStat JSON document (/root/reference/flowindexer/
     flowindexer.go:66-80 json tags; :343-397 semantics): hits = matched
-    doc count, first/last = lexicographically first/last matched doc
-    name, first_time/last_time = their timestamps, buckets = two-level
-    coarse/fine counts. One aggregate job + the bucket query."""
-    if handle.transcripts is None:
-        raise ValueError("indexer has no transcripts table (stats needs one)")
+    turn count, first/last = lexicographically first/last matched doc
+    name, first_time/last_time = the earliest/latest non-null timestamp,
+    buckets = two-level coarse/fine counts. Computed in Arrow from one
+    ``search_turns_files`` read; Python touches only the few values of
+    the document itself."""
     group, count = parse_bucket_param(bucket)
-    matched = Q.search_turns(handle.postings, handle.transcripts, query)
-    doc = F.struct("conv_id", "turn_idx")
-    summary = matched.agg(
-        F.count("*").alias("hits"),
-        F.min(doc).alias("first"),
-        F.max(doc).alias("last"),
-        F.min("ts").alias("first_time"),
-        F.max("ts").alias("last_time"),
-    ).head()
-    buckets = Q.stats(handle.postings, handle.transcripts, query, group, count)
-
-    def _doc_name(row) -> str:
-        return f"{row['conv_id']}\t{row['turn_idx']}" if row else ""
-
+    turns = Q.search_turns_files(
+        files, transcripts, query, ["conv_id", "turn_idx", "ts"]
+    )
+    buckets = Q.stats_buckets(turns, group, count)
+    ends = turns.take([0, turns.num_rows - 1]) if turns.num_rows else turns
+    names = [f"{r['conv_id']}\t{r['turn_idx']}" for r in ends.to_pylist()]
+    span = pc.min_max(turns["ts"])
+    first_time, last_time = spark_datetimes(pa.array([span["min"], span["max"]]))
     return {
-        "hits": summary["hits"],
-        "first": _doc_name(summary["first"]),
-        "last": _doc_name(summary["last"]),
-        "first_time": str(summary["first_time"] or ""),
-        "last_time": str(summary["last_time"] or ""),
+        "hits": turns.num_rows,
+        "first": names[0] if names else "",
+        "last": names[-1] if names else "",
+        "first_time": str(first_time or ""),
+        "last_time": str(last_time or ""),
         "buckets": [
-            {"bucket": str(r["bucket"]), "hits": r["hits"]}
-            for r in buckets.collect()
+            {"bucket": str(b), "hits": n}
+            for b, n in zip(
+                spark_datetimes(buckets["bucket"]), buckets["hits"].to_pylist()
+            )
         ],
         "errors": [],
     }
+
+
+def dump_text(
+    files: ds.Dataset, transcripts: ds.Dataset, query: str, contains: str | None
+) -> str:
+    """The /dump body: each matched turn's text, one per line."""
+    turns = Q.dump_files(
+        files, transcripts, query, contains, ["conv_id", "turn_idx", "text"]
+    )
+    return _text_lines(turns["text"])
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -257,7 +297,7 @@ class _Handler(BaseHTTPRequestHandler):
             if not _file_gone(e):
                 raise
             # a compaction or forget superseded the handle's files
-            handle = open_indexer(self.spark, handle.root, handle.transcripts)
+            handle = open_indexer(self.spark, handle.root, handle.transcripts_path)
             self.indexers[name] = handle
             self._answer(route, handle, query, params)
 
@@ -267,18 +307,24 @@ class _Handler(BaseHTTPRequestHandler):
         if route == "/search":
             hits = Q.search_files(handle.postings_files, query)
             self._send(200, _doc_name_lines(hits), "text/plain")
-        elif route == "/expandcidr":
+            return
+        if route == "/expandcidr":
             keys = Q.expand_files(handle.postings_files, query)["entity_key"]
             self._lines(display_entity(query, k) for k in keys.to_pylist())
-        elif route == "/stats":
-            self._json(query_stat(handle, query, params.get("bucket")))
-        elif route == "/dump":
-            if handle.transcripts is None:
-                raise ValueError("indexer has no transcripts table (dump needs one)")
-            rows = Q.dump(
-                handle.postings, handle.transcripts, query, params.get("contains")
-            ).collect()
-            self._lines(r["text"] for r in rows)
+            return
+        if handle.transcripts_files is None:
+            raise ValueError(f"indexer has no transcripts table ({route[1:]} needs one)")
+        if route == "/stats":
+            self._json(query_stat(
+                handle.postings_files, handle.transcripts_files, query,
+                params.get("bucket"),
+            ))
+        else:  # /dump
+            body = dump_text(
+                handle.postings_files, handle.transcripts_files, query,
+                params.get("contains"),
+            )
+            self._send(200, body, "text/plain")
 
 
 def make_server(

@@ -156,38 +156,47 @@ def _batch_dirs(table_path: str) -> list[tuple[str, str]]:
     return sorted(out)
 
 
-def live_batch_dirs(table_path: str) -> list[str]:
-    """The directories of the table's live batches, per the manifest
-    next to the table (``<root>/manifest``), read with pyarrow: no JVM.
-    An unpublished ``compact-*`` directory holds a whole table that a
-    compaction from before this protocol swapped in: an error, not an
-    orphan."""
+def _publish_state(root: str) -> tuple[set[str], set[str]]:
+    """(published batch ids, superseded ``<table>/<batch_id>`` pairs) per
+    the manifest of the index root, read with pyarrow: no JVM."""
     import pyarrow.dataset as ds
 
-    root, table = os.path.split(os.path.abspath(table_path))
-    published: set[str] = set()
-    superseded: set[str] = set()
     mpath = os.path.join(root, "manifest")
-    if os.path.isdir(mpath):
-        rows = ds.dataset(mpath, format="parquet").to_table(
-            columns=["src_partition", "state", "run_id"]
-        ).to_pylist()
-        published = {r["run_id"] for r in rows if r["run_id"]}
-        superseded = {
-            r["src_partition"][len(table) + 1:]
-            for r in rows
-            if r["state"] == SUPERSEDED and r["src_partition"].startswith(table + "/")
-        }
-    live = []
+    if not os.path.isdir(mpath):
+        return set(), set()
+    rows = ds.dataset(mpath, format="parquet").to_table(
+        columns=["src_partition", "state", "run_id"]
+    ).to_pylist()
+    published = {r["run_id"] for r in rows if r["run_id"]}
+    superseded = {r["src_partition"] for r in rows if r["state"] == SUPERSEDED}
+    return published, superseded
+
+
+def _classify_batches(
+    table_path: str, state: tuple[set[str], set[str]]
+) -> list[tuple[str, str, bool]]:
+    """(batch_id, directory, live) of every batch directory of the table,
+    given its root's ``_publish_state``. An unpublished ``compact-*``
+    directory holds a whole table that a compaction from before this
+    protocol swapped in: an error, not an orphan."""
+    published, superseded = state
+    table = os.path.basename(os.path.abspath(table_path))
+    out = []
     for batch, d in _batch_dirs(table_path):
-        if batch in published and batch not in superseded:
-            live.append(d)
-        elif batch.startswith("compact-") and batch not in published:
+        if batch.startswith("compact-") and batch not in published:
             raise ValueError(
                 f"{d}: compacted before the manifest publish protocol; publish "
                 f"it with a manifest row whose run_id is {batch!r}, or re-ingest"
             )
-    return live
+        out.append((batch, d, batch in published and f"{table}/{batch}" not in superseded))
+    return out
+
+
+def live_batch_dirs(table_path: str) -> list[str]:
+    """The directories of the table's live batches, per the manifest
+    next to the table (``<root>/manifest``)."""
+    root = os.path.dirname(os.path.abspath(table_path))
+    return [d for _b, d, live in _classify_batches(table_path, _publish_state(root)) if live]
 
 
 def read_live(spark: SparkSession, table_path: str) -> DataFrame:
@@ -204,13 +213,17 @@ def clean_orphan_batches(
 ) -> list[str]:
     """Delete every batch directory under ``paths`` that is not live
     (unpublished crash leftovers, superseded batches); returns their ids.
-    ``committed``, a set of ids, also deletes batches outside it. On
+    ``committed``, a set of ids, also deletes batches outside it. Reads
+    each index root's manifest once and walks each table once. On
     Iceberg this is snapshot expiry / remove_orphan_files."""
     removed: list[str] = []
+    states: dict[str, tuple[set[str], set[str]]] = {}
     for path in paths:
-        live = set(live_batch_dirs(path))
-        for batch, d in _batch_dirs(path):
-            if d not in live or (committed is not None and batch not in committed):
+        root = os.path.dirname(os.path.abspath(path))
+        if root not in states:
+            states[root] = _publish_state(root)
+        for batch, d, live in _classify_batches(path, states[root]):
+            if not live or (committed is not None and batch not in committed):
                 shutil.rmtree(d, ignore_errors=True)
                 removed.append(batch)
     return removed

@@ -10,8 +10,9 @@
         dump tool:search --contains error
 
 Output: JSON lines on stdout (the web.go text/JSON responses analogue);
-``stats`` prints the daemon's /stats document. ``search`` and ``expand``
-read the postings files with pyarrow and start no Spark session.
+``stats`` prints the daemon's /stats document, ``dump`` the matched
+transcript rows. Every command answers in-process with pyarrow, through
+the same functions as the daemon, and starts no Spark session.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ def main() -> None:
     ap = argparse.ArgumentParser(description="flow_indexer_spark query CLI")
     ap.add_argument("--index", required=True, help="index root (output of ingest_job)")
     ap.add_argument("--transcripts", help="transcripts parquet (for stats/dump)")
-    ap.add_argument("--cpus", type=int, default=None)
     sub = ap.add_subparsers(dest="cmd", required=True)
     p = sub.add_parser("search"); p.add_argument("query")
     p = sub.add_parser("expand"); p.add_argument("query")
@@ -38,40 +38,38 @@ def main() -> None:
     p.add_argument("--contains", default=None)
     args = ap.parse_args()
 
+    import pyarrow as pa
+
     from flow_indexer_spark.operators import queries as Q
-    from flow_indexer_spark.server import display_entity
+    from flow_indexer_spark.server import display_entity, query_stat, spark_datetimes
 
     def out(rows):
         for r in rows:
             print(json.dumps(r, default=str))
 
-    # search/expand read the postings files in-process; no JVM starts
-    if args.cmd in ("search", "expand"):
-        files = Q.open_postings_files(f"{args.index}/postings")
-        if args.cmd == "search":
-            out(Q.search_files(files, args.query).to_pylist())
-        else:
-            keys = Q.expand_files(files, args.query)["entity_key"].to_pylist()
-            out([{"entity_key": k, "entity": display_entity(args.query, k)} for k in keys])
+    files = Q.open_postings_files(f"{args.index}/postings")
+    if args.cmd == "search":
+        out(Q.search_files(files, args.query).to_pylist())
+        return
+    if args.cmd == "expand":
+        keys = Q.expand_files(files, args.query)["entity_key"].to_pylist()
+        out([{"entity_key": k, "entity": display_entity(args.query, k)} for k in keys])
         return
 
     if not args.transcripts:
         ap.error(f"{args.cmd} requires --transcripts")
-    from flow_indexer_spark.server import open_indexer, query_stat
-    from flow_indexer_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="flow-indexer-query",
-        master=f"local[{args.cpus}]" if args.cpus else None,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    handle = open_indexer(spark, args.index, args.transcripts)
+    transcripts = Q.open_transcripts_files(args.transcripts)
     if args.cmd == "stats":
-        print(json.dumps(query_stat(handle, args.query, args.bucket)))
-    else:
-        rows = Q.dump(handle.postings, handle.transcripts, args.query, args.contains)
-        out([r.asDict() for r in rows.collect()])
-    spark.stop()
+        print(json.dumps(query_stat(files, transcripts, args.query, args.bucket)))
+        return
+    rows = Q.dump_files(files, transcripts, args.query, args.contains)
+    # timestamps print as the Spark path's collected values do
+    cols = {
+        c: spark_datetimes(rows[c]) if pa.types.is_timestamp(rows[c].type)
+        else rows[c].to_pylist()
+        for c in rows.column_names
+    }
+    out(dict(zip(cols, vals)) for vals in zip(*cols.values()))
 
 
 if __name__ == "__main__":

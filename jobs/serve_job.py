@@ -7,10 +7,10 @@ cmd/daemon.go): serve /indexers /search /stats /expandcidr /dump
         --name conn --port 8081
 
 Prints one JSON line ``{"listening": "host:port", "indexers": [...]}``
-on stdout once bound, then serves until interrupted. One long-lived
-SparkSession for /stats and /dump, which collect a lazy DataFrame at the
-API layer (SURVEY.md K4); /search and /expandcidr read the postings
-files in-process and run no Spark job.
+on stdout once bound, then serves until interrupted. Every query route
+answers in-process with pyarrow from the postings files and, for /stats
+and /dump, the ``--transcripts`` parquet, and runs no Spark job; the
+long-lived SparkSession opens the handles and serves only /health.
 """
 
 from __future__ import annotations

@@ -43,6 +43,15 @@ def transcripts(spark):
 
 
 @pytest.fixture(scope="session")
+def transcripts_path(transcripts, tmp_path_factory):
+    """``transcripts`` written as parquet (naive INT96 ``ts``), the form
+    the daemon's /stats and /dump read."""
+    path = str(tmp_path_factory.mktemp("transcripts") / "t")
+    transcripts.write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="session")
 def dims(spark):
     return make_dims(spark)
 

@@ -3,6 +3,7 @@ analogues, /root/reference/flowindexer/flowindexer.go:422-465)."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 
 import pytest
@@ -17,6 +18,7 @@ from flow_indexer_spark.config import (
 )
 from flow_indexer_spark.generator import make_transcripts
 from flow_indexer_spark.operators import queries as Q
+from tests.query_paths import assert_turn_paths_agree
 
 
 def _write_config(tmp_path, doc) -> str:
@@ -137,6 +139,21 @@ def test_filtered_indexer_indexes_only_its_rows(spark, multi_index):
         ).select("entity_key").distinct().collect()
     }
     assert "assistant" in full_roles
+
+
+def test_filtered_indexer_stats_and_dump_equal_filtered_answers(spark, multi_index):
+    """A filtered indexer's /stats and /dump semi-join its hits to the
+    whole input parquet; that equals the Spark answer over the filtered
+    input as long as (conv_id, turn_idx) identifies one input row."""
+    cfg, inp, _ = multi_index
+    spec = next(s for s in cfg.indexers if s.filter)
+    handle = open_indexers(spark, cfg)[spec.name]
+    assert handle.transcripts_path == inp
+    full = spark.read.parquet(inp)
+    assert full.count() == full.select("conv_id", "turn_idx").distinct().count()
+    oracle = dataclasses.replace(handle, transcripts=full.filter(spec.filter))
+    queries = ("10.0.0.0/8", "role:tool", "tool:*")
+    assert assert_turn_paths_agree(oracle, queries, (None, "day")) > 0
 
 
 def test_index_all_rerun_skips(spark, dims, multi_index):

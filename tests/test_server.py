@@ -17,6 +17,7 @@ from flow_indexer_spark.operators import queries as Q
 from flow_indexer_spark.operators.postings import build_postings
 from flow_indexer_spark.server import make_server, open_indexer
 from tests.published import publish_postings
+from tests.query_paths import spark_stat
 
 
 def _serve(spark, indexers):
@@ -30,9 +31,11 @@ def _serve(spark, indexers):
 
 
 @pytest.fixture(scope="module")
-def server(spark, pipeline_out, transcripts):
+def server(spark, pipeline_out, transcripts_path):
     cfg, _ = pipeline_out
-    yield from _serve(spark, {"conn": open_indexer(spark, cfg.output_root, transcripts)})
+    yield from _serve(
+        spark, {"conn": open_indexer(spark, cfg.output_root, transcripts_path)}
+    )
 
 
 @pytest.fixture(scope="module")
@@ -205,21 +208,25 @@ def _settled_job_ids(spark) -> set[int]:
 
 
 def test_fast_routes_run_no_spark_job(spark, server):
-    """/search and /expandcidr read the postings files in-process: a
-    burst of them starts no Spark job, while one /stats request does."""
+    """Every query route answers in-process from the postings and
+    transcripts files: a burst of all four starts no Spark job, while
+    one explicit Spark action does."""
     before = _settled_job_ids(spark)
     for q in ("10.0.0.1", "10.0.0.0/8", "0.0.0.0/0", "tool:*", "9.9.9.9"):
-        for route in ("search", "expandcidr", "v1/search"):
-            code, body = _get(f"{server}/{route}?i=conn&q={q}")
+        for route in (
+            "search", "expandcidr", "v1/search", "stats", "v1/stats",
+            "stats?bucket=day&", "dump", "v1/dump", "dump?contains=a&",
+        ):
+            sep = "" if route.endswith("&") else "?"
+            code, body = _get(f"{server}/{route}{sep}i=conn&q={q}")
             assert code == 200, body
     assert _settled_job_ids(spark) == before
-    code, _ = _get(f"{server}/stats?i=conn&q=10.0.0.1")
-    assert code == 200
-    assert _settled_job_ids(spark) - before, "the /stats witness ran no job"
+    assert spark.range(1).count() == 1
+    assert _settled_job_ids(spark) - before, "the Spark witness ran no job"
 
 
 def test_concurrent_file_lookups_agree(server):
-    """The handle's one Arrow dataset serves every handler thread: more
+    """The handle's Arrow datasets serve every handler thread: more
     threads than cores, with frequent thread switches, all get the
     single-threaded answer."""
     import sys
@@ -228,6 +235,8 @@ def test_concurrent_file_lookups_agree(server):
         f"{server}/search?i=conn&q=10.0.0.1",
         f"{server}/search?i=conn&q=10.0.0.0/8",
         f"{server}/expandcidr?i=conn&q=0.0.0.0/0",
+        f"{server}/stats?i=conn&q=10.0.0.0/8&bucket=day",
+        f"{server}/dump?i=conn&q=10.0.0.1",
     ]
     want = {u: _get(u) for u in urls}
     assert all(code == 200 and body for code, body in want.values())
@@ -236,7 +245,9 @@ def test_concurrent_file_lookups_agree(server):
     def hit(url):
         got.append(_get(url) == want[url])
 
-    threads = [threading.Thread(target=hit, args=(urls[i % 3],)) for i in range(12)]
+    threads = [
+        threading.Thread(target=hit, args=(urls[i % len(urls)],)) for i in range(15)
+    ]
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
@@ -247,14 +258,12 @@ def test_concurrent_file_lookups_agree(server):
     finally:
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
-    assert got == [True] * 12
+    assert got == [True] * 15
 
 
 def _assert_routes_answer(base, spark, root, transcripts, q, routes):
     """Each route answers 200 with the library answer for the postings
     table now on disk."""
-    from flow_indexer_spark.server import query_stat
-
     post = spark.read.parquet(f"{root}/postings")
     want = {
         "/search": [f"{r['conv_id']}\t{r['turn_idx']}" for r in Q.search(post, q).collect()],
@@ -265,14 +274,13 @@ def _assert_routes_answer(base, spark, root, transcripts, q, routes):
         code, body = _get(f"{base}{route}?i=live&q={q}")
         assert code == 200, (route, body)
         if route == "/stats":
-            fresh = open_indexer(spark, root, transcripts)
-            assert json.loads(body) == query_stat(fresh, q, None)
+            assert json.loads(body) == spark_stat(post, transcripts, q, None)
         else:
             assert body.splitlines() == want[route], route
 
 
 def test_served_handle_survives_compaction_and_forget(
-    spark, two_batch_root, transcripts, tmp_path
+    spark, two_batch_root, transcripts, transcripts_path, tmp_path
 ):
     """A handle opened on a two-batch root keeps serving every route
     after a compaction and then a forget delete the files it listed: the
@@ -286,12 +294,14 @@ def test_served_handle_survives_compaction_and_forget(
 
     cfg = PipelineConfig(output_root=str(tmp_path / "idx"))
     shutil.copytree(two_batch_root, cfg.output_root)
-    serving = _serve(spark, {"live": open_indexer(spark, cfg.output_root, transcripts)})
+    serving = _serve(
+        spark, {"live": open_indexer(spark, cfg.output_root, transcripts_path)}
+    )
     base = next(serving)
     try:
         q = "10.0.0.1"
         assert compact_postings(spark, cfg.postings_path, min_files=1)["compacted"]
-        _assert_routes_answer(  # the Arrow reader meets the deleted files first
+        _assert_routes_answer(  # /search meets the deleted files first
             base, spark, cfg.output_root, transcripts, q,
             ["/search", "/expandcidr", "/stats", "/dump"],
         )
@@ -300,7 +310,7 @@ def test_served_handle_survives_compaction_and_forget(
             .select(F.min("conv_id")).first()[0]
         )
         assert forget_conversations(spark, cfg, [victim])["n_batches_rewritten"] > 0
-        _assert_routes_answer(  # now the Spark reader does
+        _assert_routes_answer(  # now /stats does
             base, spark, cfg.output_root, transcripts, q,
             ["/stats", "/dump", "/search", "/expandcidr"],
         )
