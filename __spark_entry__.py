@@ -1727,58 +1727,6 @@ def _q_docs_not_search(spark, sf_dir):
 
 
 @_register(
-    "media_feature_plumbing",
-    """
-    WITH m AS (
-      SELECT printf('m%05d', i) AS media_id,
-             ['image','audio','video'][CAST(i % 3 AS INTEGER)+1] AS kind,
-             4 + CAST(i % 13 AS INTEGER) AS n_blocks
-      FROM range(96) t(i)
-    ),
-    p AS (
-      SELECT media_id, kind,
-             list_aggregate(list_transform(range(n_blocks),
-                 j -> md5(media_id || ':' || CAST(j AS VARCHAR))), 'string_agg', '')
-               AS payload_hex
-      FROM m
-    ),
-    b AS (
-      SELECT media_id, kind, payload_hex,
-             list_transform(range(length(payload_hex)//2),
-                 k -> CAST('0x'||substr(payload_hex, CAST(2*k+1 AS INTEGER), 2)
-                      AS INTEGER)) AS bytes
-      FROM p
-    )
-    SELECT media_id, kind,
-           CAST(len(bytes) AS BIGINT) AS n_bytes,
-           CAST(list_sum(bytes) AS DOUBLE) / len(bytes) AS mean_byte,
-           substr(payload_hex, 1, 16) AS head_hex,
-           CAST(list_sum(list_transform(range(len(bytes)),
-                k -> bytes[k+1] * (k+1))) AS BIGINT) AS weighted_sum
-    FROM b ORDER BY media_id
-    """,
-)
-def _q_media_features(spark, sf_dir):
-    """Multimodal binary-column plumbing, value-checked end to end: the
-    payloads are a REAL BinaryType column (md5-chain bytes built JVM-side
-    via unhex), the probe runs through the Arrow-batched mapInPandas
-    decode stage, and the DuckDB oracle recomputes every byte-level
-    feature from the same hex chain — proving bytes cross the Arrow
-    boundary intact (pcap-backend analogue,
-    /root/reference/backend/pcap.go:17-54). The environment-blocked real
-    codec remains a marked stub (operators/multimodal.py real_decoder);
-    determinism of the RNG fixture path stays covered by
-    tests/test_multimodal.py."""
-    from flow_indexer_spark.operators.multimodal import (
-        make_oracle_media,
-        media_probe_features,
-    )
-
-    media = make_oracle_media(spark, n=96)
-    return media_probe_features(media).orderBy("media_id")
-
-
-@_register(
     "telemetry_new_vs_returning",
     """
     WITH fs AS (
@@ -4348,1449 +4296,6 @@ def _q_sketch_hll_distinct(spark, sf_dir):
 
 
 @_register(
-    "media_real_decode",
-    """
-    WITH m AS (SELECT CAST(range AS INTEGER) AS i FROM range(48)),
-    a AS (
-      SELECT i, printf('m%05d', i) AS media_id,
-             4000 + (i % 4) * 2000 AS n
-      FROM m WHERE i % 2 = 0
-    ),
-    im AS (
-      SELECT i, printf('m%05d', i) AS media_id,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h,
-             (7 * i) % 256 AS r
-      FROM m WHERE i % 2 = 1
-    )
-    SELECT media_id, 'audio' AS kind,
-           CAST(44 + 2 * n AS BIGINT) AS n_bytes,
-           CAST(8000 AS INTEGER) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST(n // 8 AS BIGINT) AS duration_ms,
-           CAST(NULL AS INTEGER) AS width, CAST(NULL AS INTEGER) AS height,
-           CAST(NULL AS DOUBLE) AS mean_r, CAST(NULL AS DOUBLE) AS mean_g,
-           CAST(NULL AS DOUBLE) AS mean_b,
-           TRUE AS rms_ok, TRUE AS peak_ok, TRUE AS freq_ok, TRUE AS zcr_ok
-    FROM a
-    UNION ALL
-    SELECT media_id, 'image' AS kind,
-           CAST(5 + length(CAST(w AS VARCHAR)) + length(CAST(h AS VARCHAR))
-                + 4 + 3 * w * h AS BIGINT) AS n_bytes,
-           CAST(NULL AS INTEGER), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(w AS INTEGER), CAST(h AS INTEGER),
-           CAST(r AS DOUBLE), (w - 1) / 2.0, (h - 1) / 2.0,
-           NULL, NULL, NULL, NULL
-    FROM im
-    ORDER BY media_id
-    """,
-)
-def _q_media_real_decode(spark, sf_dir):
-    """REAL media decode, end to end: byte-real WAV tones and PPM images
-    synthesized on executors, parsed back by the genuine RIFF/PPM codecs
-    (operators/codecs.py) inside the same Arrow-batched mapInPandas
-    topology as the plumbing stage. The oracle re-derives every header
-    field (byte size, sample counts, dimensions) and the closed-form
-    pixel means from id arithmetic alone — exact equality proves the
-    writer and parser agree on the byte layout — while the signal
-    measurements (RMS, peak, dominant FFT bin, zero crossings) are gated
-    against whole-cycle sine theory. Compressed codecs remain the
-    documented NotImplementedError seam."""
-    from flow_indexer_spark.operators.codecs import (
-        AUDIO_AMP,
-        AUDIO_SR,
-        decode_real_media,
-        make_real_media,
-    )
-
-    d = decode_real_media(make_real_media(spark, 48))
-    i = F.substring("media_id", 2, 5).cast("int")
-    freq = (F.lit(200) * (F.lit(1) + i % 8)).cast("double")
-    is_audio = F.col("kind") == "audio"
-    rms_theory = F.lit(AUDIO_AMP) / F.sqrt(F.lit(2.0))
-    return d.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        "width",
-        "height",
-        "mean_r",
-        "mean_g",
-        "mean_b",
-        F.when(is_audio, F.abs(F.col("rms") - rms_theory) < 0.005).alias(
-            "rms_ok"
-        ),
-        F.when(
-            is_audio, F.abs(F.col("peak") - F.lit(AUDIO_AMP)) < 0.005
-        ).alias("peak_ok"),
-        F.when(is_audio, F.abs(F.col("dom_freq_hz") - freq) < 0.5).alias(
-            "freq_ok"
-        ),
-        F.when(
-            is_audio,
-            F.abs(F.col("zcr") - F.lit(2.0) * freq / AUDIO_SR) < 0.01,
-        ).alias("zcr_ok"),
-    ).orderBy("media_id")
-
-
-@_register(
-    "media_png_decode",
-    """
-    WITH m AS (SELECT CAST(range AS INTEGER) AS i FROM range(48)),
-    im AS (
-      SELECT i, printf('m%05d', i) AS media_id,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h,
-             (7 * i) % 256 AS r
-      FROM m
-    )
-    SELECT media_id, 'image' AS kind,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           CAST(r AS DOUBLE) AS mean_r,
-           (w - 1) / 2.0 AS mean_g, (h - 1) / 2.0 AS mean_b,
-           TRUE AS compressed_ok, TRUE AS edge_ok
-    FROM im
-    ORDER BY media_id
-    """,
-)
-def _q_media_png_decode(spark, sf_dir):
-    """Genuinely COMPRESSED media decode: real PNG files (zlib DEFLATE
-    IDAT, CRC-verified chunks, scanline filters 0-4 cycling by row) are
-    synthesized on executors and parsed back by the pure-stdlib PNG
-    codec (operators/codecs.py) in the same Arrow-batched mapInPandas
-    stage as the WAV/PPM path. The oracle re-derives dimensions and the
-    closed-form gradient-plane means from id arithmetic — exact equality
-    proves filter/unfilter and inflate round the bytes perfectly — while
-    compressed_ok gates that the file is genuinely smaller than raw
-    pixels and edge_ok gates the luma-gradient theory value
-    (0.587 + 0.114). Reference analogue: the pcap backend's binary
-    payload decode (/root/reference/backend/pcap.go:17-54), here for a
-    deflate-compressed container."""
-    from flow_indexer_spark.operators.codecs import (
-        decode_real_media,
-        make_png_media,
-    )
-
-    d = decode_real_media(make_png_media(spark, 48))
-    raw_bytes = F.col("width").cast("long") * F.col("height") * 3
-    return d.select(
-        "media_id",
-        "kind",
-        "width",
-        "height",
-        "mean_r",
-        "mean_g",
-        "mean_b",
-        (F.col("n_bytes") < raw_bytes).alias("compressed_ok"),
-        (F.abs(F.col("edge_energy") - F.lit(0.587 + 0.114)) < 1e-9).alias(
-            "edge_ok"
-        ),
-    ).orderBy("media_id")
-
-
-@_register(
-    "media_jpeg_decode",
-    """
-    WITH m AS (SELECT CAST(range AS INTEGER) AS i FROM range(48)),
-    im AS (
-      SELECT printf('m%05d', i) AS media_id,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM m
-    )
-    SELECT media_id, 'image' AS kind,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS edge_ok
-    FROM im
-    ORDER BY media_id
-    """,
-)
-def _q_media_jpeg_decode(spark, sf_dir):
-    """LOSSY media decode: real baseline-JFIF files (numpy 8x8 DCT,
-    quality-scaled Annex K quantization, canonical Huffman entropy
-    coding — operators/jpegcodec.py, no PIL) are synthesized on
-    executors and parsed back by the pure-numpy JPEG decoder in the
-    same Arrow-batched mapInPandas stage as the WAV/PPM/PNG paths.
-    Dimensions are exact header fields; the gradient-plane means and
-    edge energy are gated against closed-form theory within lossy-codec
-    tolerance (measured worst-case mean error 0.35 at quality 90 across
-    the fixture sweep; bit equality is a PNG property, not a JPEG one).
-    This shrinks the environment-blocked codec seam to MP4/H.264 only.
-    Reference analogue: /root/reference/backend/pcap.go:17-54."""
-    from flow_indexer_spark.operators.codecs import (
-        decode_real_media,
-        make_jpeg_media,
-    )
-
-    d = decode_real_media(make_jpeg_media(spark, 48))
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i) % 256).cast("double")
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "kind",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 0.75).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 0.75).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 0.75).alias("mean_b_ok"),
-        (F.abs(F.col("edge_energy") - F.lit(0.587 + 0.114)) < 0.15).alias(
-            "edge_ok"
-        ),
-    ).orderBy("media_id")
-
-
-@_register(
-    "media_mp4_frames",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'jpeg' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS edge_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_mp4_frames(spark, sf_dir):
-    """VIDEO frame sampling over a real container: MJPEG-in-MP4 files
-    (operators/mp4codec.py — spec-shaped ISO BMFF box tree with full
-    stts/stsc/stsz/stco sample tables, every frame an independent
-    baseline JFIF sample from the round-3 JPEG encoder) are synthesized
-    on executors, then every 2nd frame is sampled by walking the sample
-    tables and entropy-decoding ONLY the sampled byte extents (skipped
-    frames are never decoded — the sampling pushes down into the byte
-    walk, the video analogue of columnar projection pushdown). The
-    oracle re-derives the container fields (frame counts, timeline,
-    dimensions) from id arithmetic — exact equality proves writer and
-    parser agree on the box grammar and chunk-map expansion — while the
-    sampled frames' gradient means are gated within the measured lossy
-    JPEG tolerance. Inter-coded bitstreams (H.264) remain the one
-    documented NotImplementedError. Reference analogue:
-    /root/reference/backend/pcap.go:17-54."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_mp4_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_mp4_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 0.75).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 0.75).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 0.75).alias("mean_b_ok"),
-        (F.abs(F.col("edge_energy") - F.lit(0.587 + 0.114)) < 0.15).alias(
-            "edge_ok"
-        ),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_frames",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS edge_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_frames(spark, sf_dir):
-    """The H.264 half of the video seam, CLOSED for the subset this
-    environment can genuinely host: real ISO/IEC 14496-10 bitstreams
-    (NAL units with emulation prevention, Exp-Golomb SPS/PPS/slice
-    headers, avcC configuration records) whose IDR slices code every
-    macroblock as I_PCM — lossless raw 4:2:0 samples inside true AVC
-    syntax (operators/h264codec.py). Same container fixtures/pixel
-    theory as media_mp4_frames, codec 'avc1'; sampling decodes only
-    the sampled samples' extents. The remaining NotImplementedError is
-    now CLASSIFIED from the parsed bitstream itself — predicted
-    macroblocks, P/B slices, CABAC — not assumed from the fourcc."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 0.75).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 0.75).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 0.75).alias("mean_b_ok"),
-        # wider than the MJPEG gate (0.15): I_PCM luma is exact, but the
-        # features recompute luma from decoded RGB, and 4:2:0 chroma
-        # nearest-upsampling adds 2-px gradient steps the 4:4:4 JPEG
-        # path doesn't have (measured family max deviation 0.152)
-        (F.abs(F.col("edge_energy") - F.lit(0.587 + 0.114)) < 0.25).alias(
-            "edge_ok"
-        ),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_intra",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS flat_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_intra(spark, sf_dir):
-    """The intra-PREDICTED half of the H.264 seam (round-4 stretch,
-    VERDICT r3 #6): the same container/pixel family as
-    media_h264_frames, but every macroblock is Intra_16x16 (per-MB
-    mode-selected among vertical/horizontal/DC/plane, spec 8.3.3-8.3.4)
-    with CAVLC-coded DC residuals decoded through real spec-8.3/8.5/9.2
-    machinery — prediction chains across macroblocks, 4x4/2x2
-    inverse Hadamard, qP-dependent dequant, Table 9-5/9-7/9-9 VLCs
-    (operators/h264intra.py; bit layer round-trip-pinned in
-    tests/test_h264intra.py). The code is genuinely lossy (each MB is
-    flattened to its DC), so the oracle gates per-frame MEANS within
-    the measured family envelope (r<=1.0, g<=1.17, b<=2.5 — the B
-    slack is MB edge-padding on non-aligned heights) and pins the
-    flattening itself: edge_energy < 0.6, well below the true-gradient
-    0.70 the I_PCM family shows. Reference analogue: the pcap backend
-    decodes every packet format its library supports
-    (backend/pcap.go:17-54)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_intra_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_intra_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 1.5).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 3.0).alias("mean_b_ok"),
-        (F.col("edge_energy") < 0.6).alias("flat_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_multislice",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS flat_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_multislice(spark, sf_dir):
-    """Multi-slice pictures — the last intra-layer seam (VERDICT r3
-    missing #2 tail): the media_h264_intra pixel family re-coded with
-    every picture split into min(3, n_MBs) contiguous raster-run
-    slices (7.4.3 first_mb_in_slice), intra prediction /
-    predIntra4x4PredMode / 9.2.1 nC contexts all slice-scoped (6.4.8),
-    decoded through decode_idr_picture's contiguity + coverage-checked
-    slice walk (operators/h264intra.py; splice-independence and
-    bit-faithfulness pinned in tests/test_h264_multislice.py). Same
-    mean/flatness envelope as the single-slice family — the DC code's
-    loss profile is unchanged; only prediction reach shrinks at slice
-    boundaries. Reference analogue: flow-indexer indexes each log
-    chunk standalone (backend/bro.go chunked scan); a slice is the
-    bitstream's chunk."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_mslice_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_mslice_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 1.5).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 3.0).alias("mean_b_ok"),
-        (F.col("edge_energy") < 0.6).alias("flat_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_residual",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_residual(spark, sf_dir):
-    """The cbp != 0 span of the H.264 seam (closes VERDICT r3 missing
-    #2's last P-slice piece): IDR+P GOP streams whose P macroblocks
-    carry REAL CAVLC-coded prediction error — Table 9-4 inter
-    coded_block_pattern, full-scan 4x4 core-transform luma levels,
-    Hadamard-DC + AC chroma, mb_qp_delta — reconstructed as
-    prediction + residual through one shared integer routine
-    (operators/h264inter.py, operators/h264cavlc.py). The fixture's R
-    channel steps (7i + 11t) mod 256 EVERY frame: no motion vector can
-    represent a global luminance step, so a decoder that dropped the
-    residual would read R up to 33 grey levels stale at the GOP tail —
-    the +-1.5 mean_r gate is passable only by actually decoding cbp.
-    G/B translate (+2, +1) px per frame as in media_h264_gop, so
-    motion compensation and residual correction are exercised in the
-    SAME macroblocks. Reference analogue: the pcap backend decodes
-    every packet format its library supports (backend/pcap.go:17-54)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_res_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_res_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    dt = F.col("frame_idx") % 4
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0 + 2.0 * dt
-    mean_b_theory = (F.col("height") - 1) / 2.0 + dt
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 1.5).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 3.2).alias("mean_b_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_gop",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_gop(spark, sf_dir):
-    """The INTER-predicted span of the H.264 seam (round-4, after
-    media_h264_intra): IDR+P GOP streams whose P slices are P_Skip /
-    P_L0_16x16 macroblocks motion-compensated through the real spec
-    8.4 machinery — median MV prediction (8.4.1.3), P_Skip derivation
-    (8.4.1.1), quarter-sample 6-tap luma and eighth-sample bilinear
-    chroma interpolation (8.4.2.2), mb_skip_run slice coding — decoded
-    on executors via mapInPandas (operators/h264inter.py; kernels
-    differential-pinned against a scalar spec transcription in
-    tests/test_h264inter.py). The fixture scene TRANSLATES (+2, +1) px
-    per frame inside each GOP over a lossless I_PCM IDR, so the oracle
-    means move 2*dt / 1*dt per sampled frame: a decoder that skipped
-    motion compensation would sit up to 6 px of mean off the G theory,
-    far outside the measured envelope (r 0.50, g 1.14, b 2.71 across
-    the family — gates 1.0/1.5/3.2). Frame sampling is sync-aware:
-    stss marks the IDRs and sampled P frames roll forward from the
-    nearest sync (the container-minimal byte set for predicted
-    frames). Reference analogue: the pcap backend decodes every packet
-    format its library supports (backend/pcap.go:17-54)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_gop_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_gop_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    dt = F.col("frame_idx") % 4
-    g = (F.col("frame_idx") / 4).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * g) % 256).cast("double")
-    mean_g_theory = (F.col("width") - 1) / 2.0 + 2.0 * dt
-    mean_b_theory = (F.col("height") - 1) / 2.0 + dt
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 1.0).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 3.2).alias("mean_b_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_b",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_b(spark, sf_dir):
-    """The BI-predicted, REORDERED span of the H.264 seam (round-4,
-    after media_h264_residual): IBBP B-frame GOP streams whose
-    non-reference B slices bi-predict between the past and future
-    anchor pictures (spec 8.4.2.3 default-weighted averaging, per-list
-    8.4.1.3 median MV prediction, poc_type-0 POC syntax) and whose MP4
-    samples sit in DECODE order with a ctts box carrying the
-    composition-time reorder (ISO 14496-12 8.6.1.3) — frame sampling
-    walks presentation order, decodes each GOP's reference chain once,
-    and skips non-target B samples without entropy-decoding them
-    (operators/h264inter.py encode/decode_b_slice, mp4codec.py
-    _gop_frames). The fixture's R channel steps 11 grey levels per
-    DISPLAY frame, carried by CAVLC inter residuals: a reader that
-    ignored ctts would show the anchor P's R at B positions (>= 11
-    levels off), and one that dropped bi-prediction could not bracket
-    the step (B_Bi wins SAD selection on genuinely bracketed content)
-    — the +-2 mean_r gate passes only on presentation-ordered
-    bi-predictive decode (measured envelope r 0.60, g 0.40, b 0.67
-    across the 24-fixture family). Reference analogue: the pcap
-    backend decodes every packet format its library supports
-    (backend/pcap.go:17-54)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_b_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_b_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    dt = F.col("frame_idx") % 6
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0 + dt
-    mean_b_theory = (F.col("height") - 1) / 2.0 + dt
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 2.0).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 1.5).alias("mean_b_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_tdirect",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_tdirect(spark, sf_dir):
-    """TEMPORAL direct mode (spec 8.4.1.2.3) — the round-5 slice of
-    the H.264 seam after media_h264_b's spatial-direct GOPs: the same
-    IBBP/ctts track family coded with direct_spatial_mv_pred_flag = 0,
-    so every B_Skip / B_Direct_16x16 macroblock's motion is the
-    co-located anchor's L0 motion scaled by picture-order-count
-    distances (tb/td, DistScaleFactor — trunc-division tx, arithmetic
-    shifts) instead of the spatial median; the GopDecoder tracks POC
-    from the slice headers and the decoder CLASSIFIES when that
-    context is missing rather than silently decoding temporal streams
-    against spatial motion (the round-4 CABAC-qp bug class, closed the
-    same way).  The content translates (+1, +1) px per display frame,
-    so the POC ratio scales the anchor's (gap, gap) MVs to exactly
-    each B's displacement: temporal direct wins SAD selection for
-    real, asserted on the wire by tests/test_h264_tdirect.py.
-    Reference analogue: backend/pcap.go:17-54.
-    operators/h264inter.py temporal_direct, mp4codec.py
-    make_h264_tdirect_bytes."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_tdirect_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_tdirect_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    dt = F.col("frame_idx") % 6
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0 + dt
-    mean_b_theory = (F.col("height") - 1) / 2.0 + dt
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 2.0).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 1.5).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 1.5).alias("mean_b_ok"),
-    ).orderBy("media_id", "frame_idx")
-
-
-@_register(
-    "media_h264_bparts",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_bparts(spark, sf_dir):
-    """PARTITIONED B macroblocks (round-5, after media_h264_tdirect):
-    the part_scene opposing-motion four-region content inside an IBBP
-    B-GOP, so straddling macroblocks code as the Table 7-14 16x8/8x16
-    two-partition B types with per-partition LIST choice — the bytes
-    builder itself fails unless the mode decision genuinely emitted
-    partitioned B mb_types (min_part_mbs=1), and decode runs
-    per-partition per-list MV prediction on the per-list 4x4 Motion4
-    grids with the 8.4.1.3 directional rules and the 6.4.11.7
-    partition fill order (partition 1's predictor reads partition 0's
-    freshly decoded cells).  The oracle gates each sampled frame's
-    channel means against the deterministic source scene, computed
-    in-query and broadcast-joined (the media_h264_parts discipline).
-    Reference analogue: backend/pcap.go:17-54.
-    operators/h264inter.py (_B_PART_MODES, _predict_b_parts),
-    mp4codec.py make_h264_bparts_bytes."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_bparts_media,
-        part_scene,
-        video_frame_features,
-        video_params,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = part_scene(i, t, gop=4)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_bparts_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 1.0).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 1.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 1.0).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_parts",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_parts(spark, sf_dir):
-    """The PARTITIONED-motion span of the H.264 seam (round-4, after
-    media_h264_b): GOP streams whose straddling macroblocks code as
-    P_L0_L0_16x8 / P_L0_L0_8x16 / P_8x8 — the fixture scene splits the
-    picture at mid-macroblock 8-px boundaries into four regions
-    translating in OPPOSING directions, and the bytes builder asserts
-    per frame that the mode decision genuinely emitted partitioned
-    mb_types (operators/mp4codec.py make_h264_part_bytes). Decode runs
-    per-partition MV prediction on the spec's 4x4 block grid with the
-    8.4.1.3 directional rules (top<-B / bottom<-A / left<-A /
-    right<-C) and per-partition quarter-sample motion compensation
-    (operators/h264inter.py Motion4 / mv_pred_part; byte-exact
-    encode/decode parity + an MB-granularity byte-stability pin in
-    tests/test_h264_parts.py). The oracle gates each sampled frame's
-    channel means against the SOURCE scene's means (driver-computed
-    from the same deterministic generator, broadcast-joined): a
-    decoder that mispredicted any partition MV reconstructs the
-    straddling MBs from the wrong reference area and GOP-chains the
-    error (measured family envelope r 0.44 / g 0.25 / b 0.43 — gates
-    1.0). Reference analogue: the pcap backend decodes every packet
-    format its library supports (backend/pcap.go:17-54)."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_part_media,
-        part_scene,
-        video_frame_features,
-        video_params,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = part_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_part_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 1.0).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 1.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 1.0).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_listmod",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_listmod(spark, sf_dir):
-    """Reference picture LIST MODIFICATION (round-5, after
-    media_h264_bparts): the mref two-phase scene — content that
-    predicts well only from TWO frames back — coded with the 7.3.3.1
-    modification commands instead of ref_idx 1: each P slice replays
-    8.2.4.3.1 (picNumL0Pred chaining, PicNum wrap, move-and-filter)
-    to put the older picture at list position 0 and then codes plain
-    ref_idx 0 everywhere; the bytes builder FAILS unless ref_idx 0
-    genuinely carried the prediction and ref_idx 1 went unused.  A
-    decoder that skipped the replay would motion-compensate the wrong
-    phase entirely — the per-frame channel-mean gates (vs the
-    deterministic source scene, broadcast-joined) catch it.  Long-term
-    commands classify. Reference analogue: backend/pcap.go:17-54.
-    operators/h264inter.py _apply_l0_modification /
-    _l0_modification_commands, mp4codec.py make_h264_listmod_bytes."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_listmod_media,
-        mref_scene,
-        video_frame_features,
-        video_params,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = mref_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_listmod_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 2.0).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 2.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 2.0).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_wbipred",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_wbipred(spark, sf_dir):
-    """EXPLICIT weighted BI-prediction (round-5, after
-    media_h264_listmod): IBP GOPs whose single B per GOP is the EXACT
-    6:2 weighted mix of its bright/dark anchors, coded under a
-    weighted_bipred_idc-1 PPS with the B pred_weight_table (denoms +
-    per-list entries) — prediction applies 8.4.2.3.2's
-    ((p0*w0 + p1*w1 + 2^logWD) >> (logWD+1)) + offset mid-rounding
-    AFTER interpolation, across 16x16, partitioned, and B_8x8 modes.
-    A decoder that ignored the table and default-averaged would miss
-    every B frame's channel means by ~15 grey levels against the +-2
-    gates (means broadcast-joined from the deterministic scene).
-    Implicit weighting (idc 2) classifies.  Reference analogue:
-    backend/pcap.go:17-54. operators/h264inter.py _wp_bi_block /
-    _parse_pred_weight_table_b, mp4codec.py make_h264_wbipred_bytes."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_wbipred_media,
-        video_frame_features,
-        video_params,
-        wbipred_scene,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = wbipred_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_wbipred_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 2.0).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 2.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 2.0).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_wbimplicit",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_wbimplicit(spark, sf_dir):
-    """IMPLICIT weighted BI-prediction (round-5, after
-    media_h264_wbipred — the idc-2 half of 8.4.2.3.1): IBBP GOPs with
-    NO weight syntax anywhere; each B's (w0, w1) derives from
-    picture-order-count distances (the DistScaleFactor recursion with
-    the 32/32 fallback outside [-64, 128]) — the B one frame after its
-    past anchor mixes 43:21 toward it, the next 22:42 toward the
-    future.  GopDecoder supplies the POCs it tracks from the slice
-    headers; the decoder CLASSIFIES without that context.  A
-    default-averaging decoder misses every B's means by ~10 grey
-    levels against the +-2 gates.  Implicit weights apply ONLY to
-    bi-predicted partitions (single-list stays default), matching the
-    spec's scope.  Reference analogue: backend/pcap.go:17-54.
-    operators/h264inter.py implicit_bi_weights,
-    mp4codec.py make_h264_wbimplicit_bytes."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_wbimplicit_media,
-        video_frame_features,
-        video_params,
-        wbimplicit_scene,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = wbimplicit_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_wbimplicit_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 2.0).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 2.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 2.0).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_mref",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_mref(spark, sf_dir):
-    """The MULTI-REFERENCE span of the H.264 seam (round-4, after
-    media_h264_parts): GOP streams whose P slices override
-    num_ref_idx_l0_active to 2 and signal per-partition ref_idx_l0 as
-    te(v), motion-compensating from list0[ref_idx] over a two-deep
-    sliding reference window (operators/h264inter.py; GopDecoder keeps
-    the window and hands the list in PicNum order). The fixture scene
-    ALTERNATES between two structurally different phases, so only the
-    two-frames-back picture matches — the bytes builder asserts every
-    two-ref P frame genuinely signalled ref_idx 1 (min_ref1_mbs), and
-    a decoder that ignored ref_idx would reconstruct the wrong phase
-    entirely (whole ramps of difference, vs the measured family
-    envelope r 0.58 / g 0.45 / b 0.64 — gates 1.2). Oracle gates each
-    sampled frame's means against the source generator's
-    (driver-computed, broadcast-joined). Reference analogue: the pcap
-    backend decodes every packet format its library supports
-    (backend/pcap.go:17-54)."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_mref_media,
-        mref_scene,
-        video_frame_features,
-        video_params,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = mref_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_mref_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 1.2).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 1.2).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 1.2).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_wp",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_wp(spark, sf_dir):
-    """The WEIGHTED-PREDICTION span of the H.264 seam (round-4, after
-    media_h264_mref): the PPS sets weighted_pred_flag, each P slice
-    carries an explicit pred_weight_table, and every inter prediction
-    — including P_Skip — applies Clip1(((p*w + 2^(logWD-1)) >> logWD)
-    + o) after interpolation (spec 7.3.3.2 / 8.4.2.3;
-    operators/h264inter.py _parse_pred_weight_table/_wp_block,
-    GopDecoder resolves the flag from the avcC's PPS). The fixture is
-    a grayscale scene halving/doubling brightness every frame with
-    EXACTLY representable weights (even texture values, luma w 16/64
-    at denom 5, chroma offset +64/-128 keeping the 128 axis fixed), so
-    the bytes builder asserts macroblocks genuinely SKIPPED under
-    weighted prediction — a decoder that ignored the weight table
-    would reconstruct every odd frame at double brightness (~60 grey
-    levels of mean error vs the measured family envelope 0.066; gates
-    0.5). Oracle gates sampled-frame means against the source
-    generator (driver-computed, broadcast-joined). Reference analogue:
-    the pcap backend decodes every packet format its library supports
-    (backend/pcap.go:17-54)."""
-    import pandas as pd
-
-    from flow_indexer_spark.operators.mp4codec import (
-        fade_scene,
-        make_h264_fade_media,
-        video_frame_features,
-        video_params,
-    )
-
-    rows = []
-    for i in range(24):
-        n, _, _ = video_params(i)
-        for t in range(0, n, 2):
-            src = fade_scene(i, t)
-            rows.append(
-                {
-                    "media_id": f"v{i:05d}",
-                    "frame_idx": t,
-                    "exp_r": float(src[:, :, 0].mean()),
-                    "exp_g": float(src[:, :, 1].mean()),
-                    "exp_b": float(src[:, :, 2].mean()),
-                }
-            )
-    exp = spark.createDataFrame(pd.DataFrame(rows))
-    d = video_frame_features(make_h264_fade_media(spark, 24), every_n=2)
-    return (
-        d.join(F.broadcast(exp), ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "duration_ms",
-            "frame_idx",
-            "t_ms",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - F.col("exp_r")) < 0.5).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - F.col("exp_g")) < 0.5).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - F.col("exp_b")) < 0.5).alias("mean_b_ok"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
-    "media_h264_i4",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           frame_idx,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS sharper_than_i16
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_i4(spark, sf_dir):
-    """The finest-grained intra tool of the H.264 seam (round-4):
-    I_4x4 macroblocks — sixteen spatially-predicted 4x4 luma blocks
-    per MB, all nine spec-8.3.1.2 modes searched by the encoder,
-    predIntra4x4PredMode (8.3.1.1) most-probable-mode signalling, and
-    a per-4x4 DC LumaLevel4x4 residual (operators/h264intra.py;
-    decoder pinned bit-faithful to the encoder recon in
-    tests/test_h264_i4.py). The discriminating gate is PAIRED: both
-    this family and the Intra_16x16 family are decoded from identical
-    source pixels, joined per (media_id, frame_idx), and the oracle
-    asserts I_4x4 preserves strictly more horizontal gradient than
-    I_16x16 on every frame (measured margin >=0.098 across all 112
-    sampled frames; gate edge_i4 > edge_i16 + 0.05) — a decoder that
-    fell back to 16x16 DC flattening would fail every row. Means are
-    gated within the measured family envelope (r<=0.85, g<=0.60,
-    b<=2.60 -> gates 1.2/1.0/3.0). Reference analogue: the pcap
-    backend decodes every packet format its library supports
-    (backend/pcap.go:17-54)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_i4_media,
-        make_h264_intra_media,
-        video_frame_features,
-    )
-
-    d4 = video_frame_features(make_h264_i4_media(spark, 24), every_n=2)
-    d16 = video_frame_features(make_h264_intra_media(spark, 24), every_n=2).select(
-        "media_id",
-        "frame_idx",
-        F.col("edge_energy").alias("edge_i16"),
-    )
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return (
-        d4.join(d16, ["media_id", "frame_idx"])
-        .select(
-            "media_id",
-            "codec",
-            "n_frames",
-            "frame_idx",
-            "width",
-            "height",
-            (F.abs(F.col("mean_r") - red) < 1.2).alias("mean_r_ok"),
-            (F.abs(F.col("mean_g") - mean_g_theory) < 1.0).alias("mean_g_ok"),
-            (F.abs(F.col("mean_b") - mean_b_theory) < 3.0).alias("mean_b_ok"),
-            (F.col("edge_energy") > F.col("edge_i16") + 0.05).alias(
-                "sharper_than_i16"
-            ),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register(
     "heavy_hitter_users",
     """
     SELECT user_id, COUNT(*) AS cnt
@@ -6013,44 +4518,6 @@ def _q_corpus_validation(spark, sf_dir):
 
 
 @_register(
-    "image_phash_neardup",
-    """
-    SELECT printf('m%05d', 2 * CAST(range AS INTEGER)) AS id_a,
-           printf('m%05d', 2 * CAST(range AS INTEGER) + 1) AS id_b,
-           TRUE AS dist_ok
-    FROM range(24)
-    ORDER BY id_a
-    """,
-)
-def _q_image_phash_neardup(spark, sf_dir):
-    """Perceptual-hash near-duplicate IMAGE detection, end to end
-    (operators/imagehash.py): 48 real PNG payloads (24 seeded smooth
-    images + their dense-noise twins) synthesized and DEFLATE-encoded on
-    executors, decoded back through the genuine PNG parser, DCT-hashed
-    to 63 bits in the Arrow batch, then paired by the banded-Hamming
-    join (4x16-bit band buckets -> equi-join -> exact bit_count verify,
-    same topology and bucket cap as the text simhash path,
-    operators/dedup.py). Ground truth is exact: the fixture family
-    measures twin distance <= 2 and unrelated distance >= 16, so the
-    oracle pins the full (2k, 2k+1) pair list — any missed twin or any
-    false pair breaks the row/hash match."""
-    from flow_indexer_spark.operators.imagehash import (
-        image_phash,
-        make_phash_media,
-        phash_near_pairs,
-    )
-
-    h = image_phash(make_phash_media(spark, 24))
-    return (
-        phash_near_pairs(h, max_dist=8)
-        .select(
-            "id_a", "id_b", (F.col("dist") <= 8).alias("dist_ok")
-        )
-        .orderBy("id_a")
-    )
-
-
-@_register(
     "source_drift_psi",
     """
     WITH edges AS (
@@ -6116,41 +4583,6 @@ def _q_source_drift_psi(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return distribution_drift(docs, "n_chars", "source").orderBy("source")
-
-
-@_register(
-    "audio_fp_neardup",
-    """
-    SELECT printf('m%05d', 2 * CAST(range AS INTEGER)) AS id_a,
-           printf('m%05d', 2 * CAST(range AS INTEGER) + 1) AS id_b,
-           TRUE AS dist_ok
-    FROM range(24)
-    ORDER BY id_a
-    """,
-)
-def _q_audio_fp_neardup(spark, sf_dir):
-    """Spectral audio near-duplicate detection, end to end
-    (operators/audiohash.py): 48 real WAV payloads (24 seeded
-    colored-noise clips + additive-noise twins) synthesized on
-    executors, decoded by the genuine RIFF parser, fingerprinted to 64
-    adjacent-log-band-difference bits in the Arrow batch, then paired
-    by the SAME banded-Hamming join the image pHash path uses (4x16-bit
-    band buckets, exact bit_count verify, bucket cap). Fixture family
-    measures twin distance <= 2 vs unrelated >= 22, so the oracle pins
-    the full (2k, 2k+1) ground-truth pair list — any missed twin or
-    false pair breaks the match."""
-    from flow_indexer_spark.operators.audiohash import (
-        audio_fingerprint,
-        audio_near_pairs,
-        make_audiofp_media,
-    )
-
-    fp = audio_fingerprint(make_audiofp_media(spark, 24))
-    return (
-        audio_near_pairs(fp, max_dist=8)
-        .select("id_a", "id_b", (F.col("dist") <= 8).alias("dist_ok"))
-        .orderBy("id_a")
-    )
 
 
 @_register(
@@ -9890,72 +8322,6 @@ def _q_topic_doc_mixture(spark, sf_dir):
     return theta.select(
         F.col("doc").alias("doc_id"), "th1", "th2", "th3"
     ).orderBy("doc_id")
-
-
-@_register(
-    "media_h264_cabac",
-    """
-    WITH v AS (SELECT CAST(range AS INTEGER) AS i FROM range(24)),
-    p AS (
-      SELECT i, printf('v%05d', i) AS media_id,
-             6 + (i % 3) * 3 AS n_frames,
-             16 + (i % 5) * 8 AS w, 12 + (i % 3) * 8 AS h
-      FROM v
-    ),
-    f AS (
-      SELECT p.*, CAST(r.range AS INTEGER) AS frame_idx
-      FROM p, range(12) r
-      WHERE r.range < p.n_frames AND r.range % 2 = 0
-    )
-    SELECT media_id, 'avc1' AS codec,
-           CAST(n_frames AS INTEGER) AS n_frames,
-           CAST(n_frames * 100 AS BIGINT) AS duration_ms,
-           frame_idx, CAST(frame_idx * 100 AS BIGINT) AS t_ms,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           TRUE AS mean_r_ok, TRUE AS mean_g_ok, TRUE AS mean_b_ok,
-           TRUE AS edge_ok
-    FROM f
-    ORDER BY media_id, frame_idx
-    """,
-)
-def _q_media_h264_cabac(spark, sf_dir):
-    """The CABAC arm of the H.264 seam: the same lossless I_PCM pixel
-    family as media_h264_frames, but the slice layer is genuinely
-    arithmetic-coded — spec 9.3 range coder (Table 9-44/9-45 state
-    machine, context-modeled mb_type bins, terminate + EncodeFlush,
-    engine re-init around PCM payloads), encoded AND decoded on
-    executors (operators/h264cabac.py).  Same container fixtures, same
-    tolerance gates; 'CABAC raises NotImplementedError' is no longer
-    blanket-true — only prediction/residual syntax under CABAC
-    classifies now."""
-    from flow_indexer_spark.operators.mp4codec import (
-        make_h264_cabac_media,
-        video_frame_features,
-    )
-
-    d = video_frame_features(make_h264_cabac_media(spark, 24), every_n=2)
-    i = F.substring("media_id", 2, 5).cast("int")
-    red = ((F.lit(7) * i + F.lit(11) * F.col("frame_idx")) % 256).cast(
-        "double"
-    )
-    mean_g_theory = (F.col("width") - 1) / 2.0
-    mean_b_theory = (F.col("height") - 1) / 2.0
-    return d.select(
-        "media_id",
-        "codec",
-        "n_frames",
-        "duration_ms",
-        "frame_idx",
-        "t_ms",
-        "width",
-        "height",
-        (F.abs(F.col("mean_r") - red) < 0.75).alias("mean_r_ok"),
-        (F.abs(F.col("mean_g") - mean_g_theory) < 0.75).alias("mean_g_ok"),
-        (F.abs(F.col("mean_b") - mean_b_theory) < 0.75).alias("mean_b_ok"),
-        (F.abs(F.col("edge_energy") - F.lit(0.587 + 0.114)) < 0.25).alias(
-            "edge_ok"
-        ),
-    ).orderBy("media_id", "frame_idx")
 
 
 # --- containment dedup / b-bit minhash / priority sampling ------------------

@@ -447,24 +447,14 @@ BENCH_QUERY_NAMES = [
     "sketch_hll_distinct_users",
     "sketch_theta_returning",
     "sketch_kll_value_ranks",
-    "media_real_decode",
-    "media_png_decode",
-    "media_jpeg_decode",
-    "media_mp4_frames",
     "skew_salted_join",
     "preference_pairs_docs",
     "corpus_validation",
-    "image_phash_neardup",
     "source_drift_psi",
-    "audio_fp_neardup",
     "corpus_report_cube",
     "entity_pagerank",
     "ip_block_enrich",
-    "media_h264_frames",
-    "media_h264_intra",
     "heavy_hitter_users",
-    "media_h264_residual",
-    "media_h264_b",
     "dedup_segment_removal",
     "trajectory_dedup",
     "trajectory_path_forks",
@@ -491,7 +481,6 @@ BENCH_QUERY_NAMES = [
     "eval_bleu_rouge_pairs",
     "source_js_divergence",
     "topic_word_dist",
-    "media_h264_cabac",
     "dedup_containment",
     "dedup_bbit_minhash",
     "curation_priority_sample",
@@ -513,13 +502,8 @@ BENCH_QUERY_NAMES = [
     "graph_modularity",
     "sketch_hll_distinct",
     "graph_connected_components",
-    "media_h264_tdirect",
-    "media_h264_bparts",
-    "media_h264_listmod",
-    "media_h264_wbipred",
     "tool_loop_detection",
     "routing_rendezvous_churn",
-    "media_h264_wbimplicit",
 ]
 
 

@@ -41,8 +41,8 @@ like the reference's LevelDB ``Get`` and range iterator. ``/stats`` and
 a ``conv_id`` filter, an Arrow left-semi join and a sort
 (``queries.search_turns_files``) — and aggregate or render the matched
 turns with Arrow kernels, no Python loop per row. The daemon's one
-SparkSession serves only ``/health``. Requests are served from a thread
-pool (``ThreadingHTTPServer``); a handle's datasets are immutable, so
+SparkSession serves only ``/health``. ``ThreadingHTTPServer`` starts a
+new thread for each request; a handle's datasets are immutable, so
 handler threads share no mutable state. A handle lists the files of the
 live batches when it is opened; once a compaction or forget deletes
 batches it listed, the next request through it fails with a not-found
@@ -107,13 +107,6 @@ def open_indexer(
         transcripts_files=(
             None if transcripts is None else Q.open_transcripts_files(transcripts)
         ),
-    )
-
-
-def _file_gone(e: Exception) -> bool:
-    """Whether a read failed on a deleted file (pyarrow or Spark)."""
-    return isinstance(e, FileNotFoundError) or any(
-        s in str(e) for s in ("FILE_NOT_EXIST", "FileNotFoundException")
     )
 
 
@@ -293,9 +286,7 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             self._answer(route, handle, query, params)
-        except Exception as e:
-            if not _file_gone(e):
-                raise
+        except FileNotFoundError:
             # a compaction or forget superseded the handle's files
             handle = open_indexer(self.spark, handle.root, handle.transcripts_path)
             self.indexers[name] = handle
