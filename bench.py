@@ -447,13 +447,21 @@ BENCH_QUERY_NAMES = [
     "sketch_hll_distinct_users",
     "sketch_theta_returning",
     "sketch_kll_value_ranks",
+    "media_real_decode",
+    "media_png_decode",
+    "media_jpeg_decode",
+    "media_mp4_frames",
     "skew_salted_join",
     "preference_pairs_docs",
     "corpus_validation",
+    "image_phash_neardup",
     "source_drift_psi",
+    "audio_fp_neardup",
     "corpus_report_cube",
     "entity_pagerank",
     "ip_block_enrich",
+    "media_h264_frames",
+    "media_h264_intra",
     "heavy_hitter_users",
     "dedup_segment_removal",
     "trajectory_dedup",
@@ -481,6 +489,7 @@ BENCH_QUERY_NAMES = [
     "eval_bleu_rouge_pairs",
     "source_js_divergence",
     "topic_word_dist",
+    "media_h264_cabac",
     "dedup_containment",
     "dedup_bbit_minhash",
     "curation_priority_sample",

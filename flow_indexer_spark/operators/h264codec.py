@@ -29,10 +29,10 @@ trips carry only the 4:2:0 chroma-subsample + color-matrix rounding
 
 What still raises ``NotImplementedError`` — now CLASSIFIED from real
 parsing instead of assumed from the fourcc: AC residual blocks, I_8x8,
-B slices, and CABAC streams (the intra prediction stack itself lives
-in :mod:`operators.h264intra` — I_16x16 all modes + I_4x4 all nine
-modes — and motion-compensated P slices in
-:mod:`operators.h264inter`).
+P and B slices (inter prediction is not implemented), and CABAC
+streams (the intra prediction stack itself lives in
+:mod:`operators.h264intra` — I_16x16 all modes + I_4x4 all nine
+modes).
 Corrupt bitstreams raise ``ValueError`` (classifiable, like the JPEG/
 MP4 codecs' ``_need`` guards).
 
@@ -188,28 +188,14 @@ def nal_to_rbsp(nal: bytes) -> tuple[int, bytes]:
 # --- SPS / PPS --------------------------------------------------------------
 
 
-def make_sps(
-    width: int,
-    height: int,
-    ref_frames: int = 0,
-    poc_type: int = 2,
-    log2_max_poc_lsb: int = 6,
-) -> bytes:
-    """Baseline SPS NAL for frame_mbs_only 4:2:0 video of the given
-    display dimensions (even-valued; cropping expresses non-multiples
-    of 16 — crop units are 2 luma px in 4:2:0). ``ref_frames`` sets
-    max_num_ref_frames (1 for IDR+P GOP streams, 2 for B-frame GOPs,
-    h264inter.py). ``poc_type`` 2 (decode order == output order) for
-    I/P-only streams; 0 (explicit pic_order_cnt_lsb per slice, width
-    ``log2_max_poc_lsb`` bits) when B frames reorder output — type 2
-    PROHIBITS reordering (spec 8.2.1.3 constraint), so the B-GOP
-    encoder must use 0."""
+def make_sps(width: int, height: int) -> bytes:
+    """Baseline SPS NAL for frame_mbs_only 4:2:0 all-IDR video of the
+    given display dimensions (even-valued; cropping expresses
+    non-multiples of 16 — crop units are 2 luma px in 4:2:0).
+    pic_order_cnt_type 2: decode order == output order, and no
+    reference frames."""
     if width % 2 or height % 2 or width <= 0 or height <= 0:
         raise ValueError("dimensions must be positive and even")
-    if poc_type not in (0, 2):
-        raise ValueError("only pic_order_cnt_type 0 and 2 are writable")
-    if not 4 <= log2_max_poc_lsb <= 16:
-        raise ValueError("log2_max_poc_lsb out of the spec range [4, 16]")
     mb_w = (width + 15) // 16
     mb_h = (height + 15) // 16
     crop_r = (mb_w * 16 - width) // 2
@@ -220,10 +206,8 @@ def make_sps(
     w.u(30, 8)  # level_idc 3.0
     w.ue(0)  # seq_parameter_set_id
     w.ue(0)  # log2_max_frame_num_minus4 -> frame_num is u(4)
-    w.ue(poc_type)  # pic_order_cnt_type (2: no POC syntax)
-    if poc_type == 0:
-        w.ue(log2_max_poc_lsb - 4)
-    w.ue(ref_frames)  # max_num_ref_frames
+    w.ue(2)  # pic_order_cnt_type (2: no POC syntax)
+    w.ue(0)  # max_num_ref_frames
     w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
     w.ue(mb_w - 1)  # pic_width_in_mbs_minus1
     w.ue(mb_h - 1)  # pic_height_in_map_units_minus1
@@ -290,11 +274,7 @@ def parse_sps(nal: bytes) -> dict:
     }
 
 
-def make_pps(
-    weighted_pred: bool = False, weighted_bipred_idc: int = 0
-) -> bytes:
-    if weighted_bipred_idc not in (0, 1, 2):
-        raise ValueError("weighted_bipred_idc must be 0, 1 or 2")
+def make_pps() -> bytes:
     w = _BitWriter()
     w.ue(0)  # pic_parameter_set_id
     w.ue(0)  # seq_parameter_set_id
@@ -303,8 +283,8 @@ def make_pps(
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0)  # num_ref_idx_l0_default_active_minus1
     w.ue(0)  # num_ref_idx_l1_default_active_minus1
-    w.u(1 if weighted_pred else 0, 1)  # weighted_pred_flag
-    w.u(weighted_bipred_idc, 2)  # weighted_bipred_idc
+    w.u(0, 1)  # weighted_pred_flag
+    w.u(0, 2)  # weighted_bipred_idc
     w.se(0)  # pic_init_qp_minus26
     w.se(0)  # pic_init_qs_minus26
     w.se(0)  # chroma_qp_index_offset

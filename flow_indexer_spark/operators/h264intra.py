@@ -50,17 +50,15 @@ whose required neighbours are unavailable (e.g. vertical in MB row 0)
 is a non-conformant stream and classifies as ``ValueError``, matching
 the corruption contract.
 
-Round 4 (cont.): P slices with real motion compensation live in
-:mod:`operators.h264inter`, which reuses this module's I-macroblock
-encode/decode for intra-refresh MBs. **Intra_4x4 macroblocks now
-decode too**: all nine spec-8.3.1.2 prediction modes per 4x4 block,
-predIntra4x4PredMode most-probable-mode signalling (8.3.1.1), Z-scan
+Round 4 (cont.): **Intra_4x4 macroblocks now decode too**: all nine
+spec-8.3.1.2 prediction modes per 4x4 block, predIntra4x4PredMode
+most-probable-mode signalling (8.3.1.1), Z-scan
 neighbour availability (6.4.3), Table 9-4 intra coded_block_pattern,
 and a per-block DC LumaLevel4x4 residual dequantized through the full
 8.5.12 position-dependent LevelScale + inverse-core-transform chain.
 Still classified from parsed syntax (the remaining seam): luma AC
 residuals (the TotalCoeff>1 CAVLC contexts), chroma AC (cbp chroma 2),
-I_8x8 (High profile), B slices, and CABAC.
+I_8x8 (High profile), P and B slices (inter prediction), and CABAC.
 
 Reference analogue: the pcap backend decodes every packet format its
 library supports (/root/reference/backend/pcap.go:17-54); this is the
@@ -835,13 +833,11 @@ def _chroma_full_mb(cb, cr, rcb, rcr, cmode, mx, my, qpc, first_mb=0):
 
 def encode_i16_mb(
     w, y, cb, cr, ry, rcb, rcr, mx, my, qp, qpc,
-    mode_nums=(0, 1, 2, 3), cmode_nums=(0, 1, 2, 3), mb_type_base: int = 0,
+    mode_nums=(0, 1, 2, 3), cmode_nums=(0, 1, 2, 3),
     nzc: NzcCtx | None = None, residual: str = "dc", first_mb: int = 0,
 ) -> None:
     """Encode one Intra_16x16 macroblock layer (mb_type through the
-    residuals) at MB (mx, my) and update the recon planes. Shared by the
-    IDR encoder and by intra-refresh macroblocks inside P slices, whose
-    mb_type is offset by 5 (Table 7-13): pass ``mb_type_base=5``.
+    residuals) at MB (mx, my) and update the recon planes.
 
     ``residual="dc"`` reproduces the round-4 DC-only code bit-for-bit
     (single mean-matching coefficient per plane, cbp luma 0);
@@ -882,7 +878,7 @@ def encode_i16_mb(
             cb, cr, rcb, rcr, cmode, mx, my, qpc, first_mb
         )
         w.ue(
-            mb_type_base + 1 + lmode + 4 * cbp_chroma
+            1 + lmode + 4 * cbp_chroma
             + (12 if cbp_luma else 0)
         )
         w.ue(cmode)
@@ -914,7 +910,7 @@ def encode_i16_mb(
 
     if nzc is None:
         nzc = NzcCtx.for_planes(y)
-    w.ue(mb_type_base + 1 + lmode + 4)  # mb_type: Intra_16x16_{lmode}_1_0
+    w.ue(1 + lmode + 4)  # mb_type: Intra_16x16_{lmode}_1_0
     w.ue(cmode)  # intra_chroma_pred_mode
     w.se(0)  # mb_qp_delta
     # luma: mode prediction + single-coefficient DC residual. The
@@ -992,8 +988,8 @@ def decode_idr_picture(
         nal_type = header & 0x1F
         if nal_type == 1:
             raise NotImplementedError(
-                "non-IDR slice: needs a reference picture — decode "
-                "through h264inter.decode_p_slice / GopDecoder"
+                "non-IDR slice: needs a reference picture — inter "
+                "prediction is not implemented"
             )
         if nal_type != 5:
             raise ValueError(f"not a coded-slice NAL (type {nal_type})")
@@ -1007,8 +1003,8 @@ def decode_idr_picture(
         slice_type = r.ue("slice_type")
         if slice_type % 5 != 2:
             raise NotImplementedError(
-                "P/B slice in an IDR NAL: inter prediction is stateful "
-                "— decode through h264inter"
+                "P/B slice in an IDR NAL: inter prediction is not "
+                "implemented"
             )
         r.ue("pic_parameter_set_id")
         r.u(sps["log2_max_frame_num"], "frame_num")
@@ -1568,8 +1564,7 @@ def decode_i4_mb(
 
 def encode_i4_mb(
     w, y, cb, cr, ry, rcb, rcr, mx, my, qp, qpc, modes,
-    mb_type_base: int = 0, nzc: NzcCtx | None = None, residual: str = "dc",
-    first_mb: int = 0,
+    nzc: NzcCtx | None = None, residual: str = "dc", first_mb: int = 0,
 ) -> None:
     """Encode one I_4x4 macroblock: per-block SSE-best prediction mode
     after the optimal DC correction (ties prefer the predicted mode,
@@ -1588,7 +1583,7 @@ def encode_i4_mb(
     elif residual != "dc":
         raise ValueError(f"unknown residual mode {residual!r}")
     mb_w = modes.shape[1] // 4
-    w.ue(mb_type_base + 0)  # mb_type: I_4x4 (I slice) / offset 5 in P
+    w.ue(0)  # mb_type: I_4x4
     mode_bits = []
     luma_coeffs = []
     for z, (bx, by) in enumerate(_Z4):

@@ -17,21 +17,16 @@ and is not real:
 - FRAME DECODE is real for codec ``jpeg`` (Motion JPEG: every sample
   is a baseline JFIF image, decoded by :mod:`operators.jpegcodec`) and
   for ``avc1`` across the implemented H.264 subset: I_PCM / Intra_16x16
-  / I_4x4 IDR slices (:mod:`operators.h264codec` /
-  :mod:`operators.h264intra`), P slices with every Table 7-13 inter
-  mb_type (P_Skip, 16x16, 16x8/8x16/8x8 partitions), CAVLC inter
-  residuals, multi-reference lists, explicit weighted prediction, and
-  B slices with ctts reorder (:mod:`operators.h264inter`) in GOPs
-  marked by a real stss sync-sample box. The ``NotImplementedError``
-  seam is CLASSIFIED from the parsed bitstream: B sub-partitions,
-  temporal direct, I_8x8, and CABAC raise it, as do other codec
-  fourccs (hev1 etc).
+  / I_4x4 IDR slices, CAVLC or (I_PCM) CABAC
+  (:mod:`operators.h264codec` / :mod:`operators.h264intra` /
+  :mod:`operators.h264cabac`). Every sample is an independent
+  picture. The ``NotImplementedError`` seam is CLASSIFIED from the
+  parsed bitstream: P and B slices (inter prediction) and I_8x8 raise
+  it, as do other codec fourccs (hev1 etc).
 - Frame SAMPLING pushes down into the byte walk: requesting every Nth
   frame touches only those samples' byte ranges; skipped frames are
-  never entropy-decoded. For GOP tracks the unit of skip is the
-  container-correct one — a sampled P frame decodes from its nearest
-  preceding stss sync sample forward. At scale that is the difference
-  between reading ~1/N of the mdat and decoding all of it — the same
+  never entropy-decoded. At scale that is the difference between
+  reading ~1/N of the mdat and decoding all of it — the same
   projection-pushdown argument as a columnar scan.
 
 Spark-side the stage is the usual iterator ``mapInPandas`` (one Arrow
@@ -206,294 +201,15 @@ def encode_mp4_h264_i4(
     )
 
 
-def encode_mp4_h264_gop(
-    frames: list[np.ndarray],
-    fps: int = VIDEO_FPS,
-    qp: int = 12,
-    gop: int = 4,
-    search_range: int = 8,
-    idr: str = "ipcm",
-    code_residual: bool = False,
-    partitions: bool = False,
-    min_part_mbs: int = 0,
-    quarter: bool = True,
-    n_refs: int = 1,
-    min_ref1_mbs: int = 0,
-    weights_for=None,
-    min_skip_mbs: int = 0,
-    l0_reorder_for=None,
-) -> bytes:
-    """Write frames as a real IDR+P H.264 GOP: every ``gop``-th frame
-    is an IDR (``idr='ipcm'`` lossless, or ``'i16'`` intra-predicted,
-    h264intra.py), the rest are P slices whose macroblocks are P_Skip /
-    P_L0_16x16 motion-compensated against the previous RECONSTRUCTION
-    (h264inter.py) — so encoder and decoder drift never diverges. The
-    stss box marks the IDR samples; frame sampling seeks to the nearest
-    sync and rolls forward. ``code_residual=True`` additionally
-    quantizes and CAVLC-codes each P macroblock's prediction error
-    (cbp != 0 streams, Table 9-4 inter). ``partitions=True`` turns on
-    the partitioned inter modes (P_16x8 / P_8x16 / P_8x8, Table
-    7-13/7-17) with ``min_part_mbs`` asserting every P frame genuinely
-    coded at least that many partitioned macroblocks — a fixture guard
-    against the mode decision silently degenerating to 16x16.
-    ``n_refs > 1`` keeps a sliding window of that many reference
-    reconstructions and lets each P slice signal per-partition
-    ref_idx_l0 (the window refills from the IDR, so the first P after
-    a sync codes against fewer references); ``min_ref1_mbs`` asserts
-    every P frame with two available references genuinely used
-    ref_idx 1 at least that many times. ``weights_for(k, n_active)``
-    returns an explicit pred_weight_table dict per P frame (the PPS
-    then sets weighted_pred_flag); ``min_skip_mbs`` asserts every P
-    frame genuinely skipped at least that many macroblocks — the fade
-    fixture's witness that the weighted prediction was exact."""
-    from flow_indexer_spark.operators import h264codec as h264
-    from flow_indexer_spark.operators.h264inter import encode_frame_sample_p
-    from flow_indexer_spark.operators.h264intra import encode_idr_i16
-
-    if gop < 1:
-        raise ValueError("gop must be >= 1")
-    if idr not in ("ipcm", "i16"):
-        raise ValueError("idr must be 'ipcm' or 'i16'")
-    h, w = frames[0].shape[:2]
-    if any(f.shape != frames[0].shape for f in frames):
-        raise ValueError("all frames must share one geometry")
-    if not 1 <= n_refs <= 2:
-        # encode_p_slice handles up to 16, but GopDecoder's sliding
-        # reference window is 2-deep (matching the B-GOP layout)
-        raise ValueError("n_refs must be 1 or 2")
-    samples, sync = [], []
-    recon = None
-    window: list[tuple] = []  # reference reconstructions, oldest first
-    for k, f in enumerate(frames):
-        if k % gop == 0:
-            y, cb, cr = h264.frame_to_planes(f)
-            if idr == "ipcm":
-                nal = h264.encode_idr_ipcm(y, cb, cr, idr_pic_id=k % 65536)
-                recon = (y, cb, cr)  # I_PCM is lossless in YCbCr
-            else:
-                nal, recon = encode_idr_i16(
-                    y, cb, cr, qp=qp, idr_pic_id=k % 65536, return_recon=True
-                )
-            samples.append(len(nal).to_bytes(4, "big") + nal)
-            sync.append(k)
-            window = [recon]  # IDR resets the reference window
-        else:
-            ref_list = list(reversed(window))[:n_refs]
-            weights = (
-                weights_for(k, len(ref_list))
-                if weights_for is not None
-                else None
-            )
-            sample, recon, stats = encode_frame_sample_p(
-                f, ref_list, frame_num=k % gop, qp=qp,
-                search_range=search_range, code_residual=code_residual,
-                partitions=partitions, return_stats=True, quarter=quarter,
-                weights=weights,
-                l0_reorder=(
-                    l0_reorder_for(k, len(ref_list))
-                    if l0_reorder_for is not None
-                    else None
-                ),
-            )
-            n_part = sum(stats["mb_types"].get(t, 0) for t in (1, 2, 3))
-            if n_part < min_part_mbs:
-                raise AssertionError(
-                    f"frame {k}: only {n_part} partitioned MBs "
-                    f"(< {min_part_mbs}); fixture content no longer "
-                    f"drives the partition mode decision: {stats}"
-                )
-            if stats["skip"] < min_skip_mbs:
-                raise AssertionError(
-                    f"frame {k}: only {stats['skip']} skipped MBs "
-                    f"(< {min_skip_mbs}); the weighted prediction is no "
-                    f"longer exact on the fade fixture: {stats}"
-                )
-            if len(ref_list) > 1 and stats["ref_idx"].get(1, 0) < min_ref1_mbs:
-                raise AssertionError(
-                    f"frame {k}: ref_idx 1 used "
-                    f"{stats['ref_idx'].get(1, 0)} times "
-                    f"(< {min_ref1_mbs}); fixture content no longer "
-                    f"drives multi-reference selection: {stats}"
-                )
-            samples.append(sample)
-            window = (window + [recon])[-n_refs:]
-    avcc = _box(
-        b"avcC",
-        h264.make_avcc(
-            h264.make_sps(w, h, ref_frames=max(1, n_refs)),
-            h264.make_pps(weighted_pred=weights_for is not None),
-        ),
-    )
-    return _encode_mp4(
-        samples,
-        w,
-        h,
-        fps,
-        _visual_entry(b"avc1", w, h, b"h264 gop", avcc),
-        sync_samples=sync,
-    )
-
-
-def encode_mp4_h264_bgop(
-    frames: list[np.ndarray],
-    fps: int = VIDEO_FPS,
-    qp: int = 12,
-    gop: int = 6,
-    b_frames: int = 2,
-    search_range: int = 8,
-    idr: str = "ipcm",
-    code_residual: bool = False,
-    quarter: bool = True,
-    direct: bool = True,
-    direct_mode: str = "spatial",
-    min_part_mbs: int = 0,
-    partitions: bool = False,
-    bi_weights: dict | None = None,
-    implicit_bi: bool = False,
-) -> bytes:
-    """Write frames as a B-frame H.264 GOP (IBBP...): within each
-    closed ``gop``-frame GOP, anchor pictures sit every ``b_frames``+1
-    display positions (the first is an IDR, the rest P slices
-    referencing the previous anchor) and the frames between two
-    anchors are non-reference B slices bi-predicting from BOTH
-    (h264inter.encode_b_slice; with ``direct=True`` — the default —
-    the spatial direct derivation competes per macroblock, yielding
-    B_Skip runs and MVD-free B_Direct_16x16 where neighbour motion
-    already explains the content). Samples are written in DECODE order
-    (anchor before the Bs it closes) with a ctts box carrying the
-    composition-time mapping (offsets: 1 for the IDR, the anchor gap
-    for each P, 0 for Bs — the one-frame-delay convention) and a
-    poc_type-0 SPS (pic_order_cnt_lsb = 2 x display offset; type 2
-    prohibits reordering). The stss box marks the IDRs; frame
-    sampling decodes each GOP's reference chain once and skips
-    non-target Bs entirely (_gop_frames)."""
-    from flow_indexer_spark.operators import h264codec as h264
-    from flow_indexer_spark.operators.h264inter import (
-        encode_frame_sample_b,
-        encode_frame_sample_p,
-    )
-    from flow_indexer_spark.operators.h264intra import encode_idr_i16
-
-    if direct_mode not in ("spatial", "temporal"):
-        raise ValueError("direct_mode must be 'spatial' or 'temporal'")
-    poc_bits = 6
-    if not 1 <= gop <= (1 << poc_bits) // 2:
-        raise ValueError("gop must be in [1, 32]: POC lsb is 6 bits")
-    if b_frames < 1:
-        raise ValueError(
-            "b_frames must be >= 1 (encode_mp4_h264_gop writes P-only GOPs)"
-        )
-    if idr not in ("ipcm", "i16"):
-        raise ValueError("idr must be 'ipcm' or 'i16'")
-    if not frames:
-        raise ValueError("need at least one frame")
-    h, w = frames[0].shape[:2]
-    if any(f.shape != frames[0].shape for f in frames):
-        raise ValueError("all frames must share one geometry")
-    n = len(frames)
-    samples: list[bytes] = []
-    ct_offsets: list[int] = []
-    sync: list[int] = []
-    b_stats: dict = {}
-    for g0 in range(0, n, gop):
-        length = min(gop, n - g0)
-        anchors = [0]
-        while anchors[-1] < length - 1:
-            anchors.append(min(anchors[-1] + b_frames + 1, length - 1))
-        recon: dict[int, tuple] = {}
-        y, cb, cr = h264.frame_to_planes(frames[g0])
-        if idr == "ipcm":
-            nal = h264.encode_idr_ipcm(
-                y, cb, cr, idr_pic_id=g0 % 65536, poc=(0, poc_bits)
-            )
-            recon[0] = (y, cb, cr)  # I_PCM is lossless in YCbCr
-        else:
-            nal, recon[0] = encode_idr_i16(
-                y, cb, cr, qp=qp, idr_pic_id=g0 % 65536,
-                return_recon=True, poc=(0, poc_bits),
-            )
-        sync.append(len(samples))
-        samples.append(len(nal).to_bytes(4, "big") + nal)
-        ct_offsets.append(1)
-        for m in range(1, len(anchors)):
-            ap, ac = anchors[m - 1], anchors[m]
-            sample, recon[ac], anchor_motion = encode_frame_sample_p(
-                frames[g0 + ac], recon[ap], frame_num=m % 16, qp=qp,
-                search_range=search_range, code_residual=code_residual,
-                poc=(2 * ac, poc_bits), quarter=quarter, return_motion=True,
-            )
-            samples.append(sample)
-            ct_offsets.append(ac - ap)
-            for d in range(ap + 1, ac):
-                samples.append(
-                    encode_frame_sample_b(
-                        frames[g0 + d], recon[ap], recon[ac],
-                        frame_num=(m + 1) % 16, poc=(2 * d, poc_bits),
-                        qp=qp, search_range=search_range,
-                        code_residual=code_residual, quarter=quarter,
-                        direct=direct, col_motion=anchor_motion,
-                        direct_temporal=direct_mode == "temporal",
-                        # POC = 2 x display offset throughout this GOP
-                        ref_pocs=(2 * ap, 2 * ac),
-                        stats=b_stats,
-                        partitions=partitions,
-                        weights=bi_weights,
-                        implicit_bi=implicit_bi,
-                    )
-                )
-                ct_offsets.append(0)
-            del recon[ap]  # 2-deep reference window: the past anchor retires
-    if b_stats.get("part_mbs", 0) < min_part_mbs:
-        raise ValueError(
-            f"fixture demanded >= {min_part_mbs} partitioned B macroblocks "
-            f"but the mode decision emitted {b_stats.get('part_mbs', 0)}: "
-            "the scene does not exercise B partitions"
-        )
-    avcc = _box(
-        b"avcC",
-        h264.make_avcc(
-            h264.make_sps(
-                w, h, ref_frames=2, poc_type=0, log2_max_poc_lsb=poc_bits
-            ),
-            h264.make_pps(
-                weighted_bipred_idc=(
-                    2 if implicit_bi else 1 if bi_weights is not None else 0
-                )
-            ),
-        ),
-    )
-    return _encode_mp4(
-        samples,
-        w,
-        h,
-        fps,
-        _visual_entry(b"avc1", w, h, b"h264 bgop", avcc),
-        sync_samples=sync,
-        ct_offsets=ct_offsets,
-    )
-
-
 def _encode_mp4(
     samples: list[bytes],
     w: int,
     h: int,
     fps: int,
     entry: bytes,
-    sync_samples: list[int] | None = None,
-    ct_offsets: list[int] | None = None,
 ) -> bytes:
-    """``sync_samples``: 0-based indices of random-access samples; when
-    given, an stss box is written (its absence means every sample is a
-    sync sample, spec 8.6.2 — correct for the all-IDR/MJPEG tracks).
-    ``ct_offsets``: per-sample composition-time offsets (decode-order,
-    media timescale units, non-negative) -> a version-0 ctts box; B
-    frames make composition order differ from decode order and this is
-    the box that encodes the mapping (spec 8.6.1.3)."""
     sizes = [len(s) for s in samples]
     n = len(samples)
-    if ct_offsets is not None:
-        if len(ct_offsets) != n or any(o < 0 for o in ct_offsets):
-            raise ValueError("ct_offsets must be one non-negative int per sample")
 
     ftyp = _box(b"ftyp", b"isom", struct.pack(">I", 512), b"isom", b"mp41")
     mdat = _box(b"mdat", *samples)
@@ -517,16 +233,6 @@ def _encode_mp4(
 
     duration_movie = n * 1000 // fps  # mvhd/tkhd use timescale 1000
 
-    def _runs(vals: list[int]) -> list[tuple[int, int]]:
-        out: list[tuple[int, int]] = []
-        for v in vals:
-            if out and out[-1][1] == v:
-                out[-1] = (out[-1][0] + 1, v)
-            else:
-                out.append((1, v))
-        return out
-
-    ctts_runs = _runs(ct_offsets) if ct_offsets is not None else None
 
     stbl = _box(
         b"stbl",
@@ -552,38 +258,6 @@ def _encode_mp4(
             0,
             struct.pack(">I", len(chunk_offsets)),
             *(struct.pack(">I", o) for o in chunk_offsets),
-        ),
-        *(
-            [
-                _full(
-                    b"stss",
-                    0,
-                    0,
-                    struct.pack(">I", len(sync_samples)),
-                    *(
-                        struct.pack(">I", k + 1)  # stss is 1-based
-                        for k in sync_samples
-                    ),
-                )
-            ]
-            if sync_samples is not None
-            else []
-        ),
-        *(
-            [
-                _full(
-                    b"ctts",
-                    0,
-                    0,
-                    struct.pack(">I", len(ctts_runs)),
-                    *(
-                        struct.pack(">II", cnt, off)
-                        for cnt, off in ctts_runs
-                    ),
-                )
-            ]
-            if ctts_runs is not None
-            else []
         ),
     )
     minf = _box(
@@ -802,25 +476,6 @@ def parse_mp4(payload: bytes) -> dict:
     if len(offsets) != n_samples:
         raise ValueError("stsc/stco cover fewer samples than stsz declares")
 
-    # stss (optional): 1-based sync-sample numbers; absent means every
-    # sample is a random-access point (spec 8.6.2)
-    sync = None
-    try:
-        s, e = _child(buf, *stbl, b"stss")
-    except ValueError:
-        pass
-    else:
-        p = _full_body(buf, s)
-        _need(p + 4 <= e, "stss too short")
-        (n_sync,) = struct.unpack_from(">I", buf, p)
-        _need(p + 4 + 4 * n_sync <= e, "stss overruns its box")
-        sync = [
-            struct.unpack_from(">I", buf, p + 4 + 4 * k)[0] - 1
-            for k in range(n_sync)
-        ]
-        _need(all(0 <= k < n_samples for k in sync), "stss sample out of range")
-        _need(sync == sorted(set(sync)), "stss not strictly increasing")
-
     # expand stts -> per-sample start times (media timescale units)
     starts: list[int] = []
     t = 0
@@ -833,45 +488,6 @@ def parse_mp4(payload: bytes) -> dict:
     if len(starts) != n_samples:
         raise ValueError("stts covers fewer samples than stsz declares")
 
-    # ctts (optional): composition-time offsets; absent means
-    # composition order == decode order. Version 0 (unsigned) only.
-    ct_offsets = None
-    try:
-        s, e = _child(buf, *stbl, b"ctts")
-    except ValueError:
-        pass
-    else:
-        if buf[s] != 0:
-            raise NotImplementedError("ctts version 1 (signed offsets)")
-        p = _full_body(buf, s)
-        _need(p + 4 <= e, "ctts too short")
-        (n_runs,) = struct.unpack_from(">I", buf, p)
-        _need(p + 4 + 8 * n_runs <= e, "ctts overruns its box")
-        ct_offsets = []
-        for k in range(n_runs):
-            cnt, off = struct.unpack_from(">II", buf, p + 4 + 8 * k)
-            if cnt > n_samples - len(ct_offsets):
-                raise ValueError("ctts covers more samples than stsz declares")
-            ct_offsets.extend([off] * cnt)
-        if len(ct_offsets) != n_samples:
-            raise ValueError("ctts covers fewer samples than stsz declares")
-
-    # presentation order: samples sorted by composition time (stable);
-    # identity when no ctts. Composition times must be a permutation of
-    # decode times for a constant-rate track — reject overlap/holes so
-    # downstream frame indexing stays dense.
-    if ct_offsets is not None:
-        cts = [starts[k] + ct_offsets[k] for k in range(n_samples)]
-        presentation = sorted(range(n_samples), key=lambda k: (cts[k], k))
-        norm = sorted(c - min(cts) for c in cts)
-        if norm != sorted(starts):
-            raise ValueError(
-                "ctts composition times are not a shifted permutation of "
-                "the decode timeline"
-            )
-    else:
-        presentation = list(range(n_samples))
-
     return {
         "codec": codec,
         "width": int(width),
@@ -883,31 +499,20 @@ def parse_mp4(payload: bytes) -> dict:
         "offsets": offsets,
         "starts": starts,
         "avcc": avcc,
-        "sync": sync,
-        "ct_offsets": ct_offsets,
-        "presentation": presentation,
     }
 
 
 def mp4_frames(
     payload: bytes, every_n: int = 1
 ) -> Iterator[tuple[int, int, np.ndarray]]:
-    """Yield (frame_idx, t_ms, pixels) for every Nth frame in
-    PRESENTATION order (ctts composition times; decode order when
-    there is no ctts). Only the needed samples' byte ranges are
-    entropy-decoded — the skip is real, not decode-then-drop (for GOP
-    tracks the unit is the sync-to-target reference chain, with
-    non-target B samples skipped outright). Decodable codecs: ``jpeg``
+    """Yield (frame_idx, t_ms, pixels) for every Nth frame in decode
+    order. Only the needed samples' byte ranges are entropy-decoded —
+    the skip is real, not decode-then-drop. Decodable codecs: ``jpeg``
     (Motion JPEG) and ``avc1`` over the implemented H.264 subset —
-    I_PCM / Intra_16x16 / I_4x4 IDR slices, P_Skip / P_L0_16x16 P
-    slices, and B slices — B_Skip / B_Direct_16x16 under spatial OR
-    temporal direct, 16x16 modes, the Table 7-14 16x8/8x16
-    two-partition types, and B_8x8 with Table 7-18 sub_mb_types 1..12,
-    under default, EXPLICIT (idc 1) or IMPLICIT (idc 2) weighted
-    bi-prediction (operators/h264codec + h264intra + h264inter; the
-    classifier parses the real NAL/slice syntax, so B_Direct_8x8,
-    B-list modification and CABAC raise NotImplementedError from the
-    bitstream itself, not the fourcc)."""
+    I_PCM / Intra_16x16 / I_4x4 IDR slices (operators/h264codec +
+    h264intra; the classifier parses the real NAL/slice syntax, so a
+    P or B slice raises NotImplementedError from the bitstream itself,
+    not the fourcc)."""
     from flow_indexer_spark.operators.jpegcodec import _jpeg_pixels
 
     info = parse_mp4(payload)
@@ -922,13 +527,6 @@ def mp4_frames(
         if info["avcc"] is None:
             raise ValueError("avc1 track without avcC configuration")
         avcc = info["avcc"]
-        if info["sync"] is not None:
-            # IDR+P GOP track: a sampled frame decodes from its nearest
-            # preceding sync sample forward (the container-minimal byte
-            # set for a predicted frame); runs between targets that
-            # share a GOP are decoded once, not per-target.
-            yield from _gop_frames(buf, info, every_n)
-            return
         decode = lambda b: decode_frame_sample_any(b, avcc)  # noqa: E731
     else:
         raise NotImplementedError(
@@ -940,79 +538,6 @@ def mp4_frames(
         t_ms = round(1000 * info["starts"][k] / info["timescale"])
         yield k, t_ms, decode(buf[off : off + size])
 
-
-def _sample_is_ref(sample: bytes) -> bool:
-    """True when the sample's first coded-slice NAL has nal_ref_idc
-    != 0 — i.e. decoding it changes reference state. Non-reference
-    samples (the B frames this repo writes) can be SKIPPED outright
-    when they are not themselves sampling targets."""
-    pos = 0
-    while pos + 4 <= len(sample):
-        ln = int.from_bytes(sample[pos : pos + 4], "big")
-        pos += 4
-        if ln == 0 or pos + ln > len(sample):
-            break
-        hdr = sample[pos]
-        if hdr & 0x1F in (1, 5):
-            return (hdr >> 5) != 0
-        pos += ln
-    return True  # unparseable: decode it rather than corrupt state
-
-
-def _gop_frames(
-    buf: bytes, info: dict, every_n: int
-) -> Iterator[tuple[int, int, np.ndarray]]:
-    """Sampled GOP decode in PRESENTATION order: target j is the j-th
-    frame by composition time (ctts; decode order when there is no
-    ctts box). Samples are fed to the decoder strictly in DECODE
-    order, one sync-to-sync span at a time — within a span every
-    REFERENCE sample from the sync forward decodes (it shapes later
-    predictions), while non-reference (B) samples that are not
-    themselves targets are skipped without entropy decoding. Targets
-    land in a per-span stash (bounded by the GOP length — the same
-    bound a real player's reorder buffer has) and are emitted in
-    presentation order."""
-    import bisect
-    from itertools import groupby
-
-    from flow_indexer_spark.operators.h264inter import GopDecoder
-
-    sync = info["sync"]
-    if not sync or sync[0] != 0:
-        raise ValueError("GOP track whose first sample is not a sync sample")
-    n, pres = info["n_frames"], info["presentation"]
-    starts, ct = info["starts"], info["ct_offsets"]
-    if ct is not None:
-        cts0 = min(starts[k] + ct[k] for k in range(n))
-    dec = GopDecoder(info["avcc"])
-    targets = [(j, pres[j]) for j in range(0, n, every_n)]
-    # closed GOPs: composition never straddles a sync span, so the
-    # targets of one span are contiguous in presentation order
-    for _, group in groupby(
-        targets, key=lambda t: bisect.bisect_right(sync, t[1]) - 1
-    ):
-        group = list(group)
-        need = {k for _, k in group}
-        first = sync[bisect.bisect_right(sync, min(need)) - 1]
-        stash: dict[int, np.ndarray] = {}
-        for i in range(first, max(need) + 1):
-            off, size = info["offsets"][i], info["sizes"][i]
-            sample = buf[off : off + size]
-            if i in need:
-                stash[i] = dec.decode(sample)
-            elif _sample_is_ref(sample):
-                dec.decode(sample)
-        for j, k in group:
-            if ct is None:
-                t_ms = round(1000 * starts[k] / info["timescale"])
-            else:
-                t_ms = round(
-                    1000 * (starts[k] + ct[k] - cts0) / info["timescale"]
-                )
-            yield j, t_ms, stash[k]
-
-
-# --- deterministic fixtures -------------------------------------------------
 
 def video_params(i: int) -> tuple[int, int, int]:
     """(n_frames, width, height) for video index i — dimensions shared
@@ -1119,248 +644,6 @@ def make_h264_i4_bytes(i: int, qp: int = 12) -> bytes:
     return encode_mp4_h264_i4(frames, fps=VIDEO_FPS, qp=qp)
 
 
-def make_h264_gop_bytes(i: int, qp: int = 12, gop: int = 4) -> bytes:
-    """A real IDR+P GOP stream with closed-form MOTION: within a GOP
-    the scene translates by (+2, +1) luma px per frame (G = x + 2*dt,
-    B = y + dt with dt = t mod gop), while R holds the per-GOP constant
-    (7i + 11*(t div gop)) mod 256 — representable exactly by the
-    zero-residual P encoder over the LOSSLESS I_PCM IDR reference, so a
-    decoder that skipped motion compensation would miss the per-frame
-    +2/+1 mean drift by far more than the oracle tolerance."""
-    n, w, h = video_params(i)
-    frames = []
-    for t in range(n):
-        dt = t % gop
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + 11 * (t // gop)) % 256
-        px[:, :, 1] = (np.arange(w, dtype=np.uint16) + 2 * dt).astype(
-            np.uint8
-        )[None, :]
-        px[:, :, 2] = (np.arange(h, dtype=np.uint16) + dt).astype(np.uint8)[
-            :, None
-        ]
-        frames.append(px)
-    return encode_mp4_h264_gop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, search_range=4
-    )
-
-
-def make_h264_res_bytes(i: int, qp: int = 10, gop: int = 4) -> bytes:
-    """The residual-coding GOP family: G/B translate (+2, +1) px per
-    frame inside each GOP exactly like make_h264_gop_bytes, but R
-    changes EVERY frame ((7i + 11t) mod 256) — a luminance step no
-    motion vector can represent, carried only by coded prediction
-    error. A decoder that parsed cbp but dropped the residual would
-    hold R at the GOP's IDR value (up to 33 grey levels stale), far
-    outside the oracle gate; the real cbp != 0 path tracks it within
-    quantization error."""
-    n, w, h = video_params(i)
-    frames = []
-    for t in range(n):
-        dt = t % gop
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + 11 * t) % 256
-        px[:, :, 1] = (np.arange(w, dtype=np.uint16) + 2 * dt).astype(
-            np.uint8
-        )[None, :]
-        px[:, :, 2] = (np.arange(h, dtype=np.uint16) + dt).astype(np.uint8)[
-            :, None
-        ]
-        frames.append(px)
-    return encode_mp4_h264_gop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, search_range=4,
-        code_residual=True,
-    )
-
-
-def part_scene_splits(w: int, h: int) -> tuple[int, int]:
-    """(split_x, split_y) for the partition fixture: 8-aligned but NOT
-    16-aligned, so the motion boundary runs through the middle of a
-    macroblock column/row and 8x16 / 16x8 / 8x8 partitions are the
-    exact fit the mode decision should find."""
-    sx = (w // 2) // 8 * 8
-    if sx % 16 == 0:
-        sx += 8
-    sy = (h // 2) // 8 * 8
-    if sy % 16 == 0:
-        sy += 8
-    return sx, sy
-
-
-def part_scene(i: int, t: int, gop: int = 4) -> np.ndarray:
-    """Frame t of partition-fixture video i: the picture is split into
-    four regions at :func:`part_scene_splits` whose G/B ramp textures
-    translate in OPPOSING directions (left +2dt / right -2dt px
-    horizontally, top +dt / bottom -dt vertically within each GOP), so
-    a macroblock straddling a split can only be predicted well by a
-    partitioned mode. R steps (7i + 11t) mod 256 per frame — flat
-    luminance no motion vector can follow, carried by coded residuals
-    exactly as in the residual fixture family."""
-    n, w, h = video_params(i)
-    sx, sy = part_scene_splits(w, h)
-    dt = t % gop
-    xs = np.arange(w, dtype=np.int64)[None, :]
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    left = xs < sx
-    top = ys < sy
-    px = np.empty((h, w, 3), dtype=np.uint8)
-    px[:, :, 0] = (7 * i + 11 * t) % 256
-    g = np.where(left, (xs - 2 * dt) * 3, (xs + 2 * dt) * 3 + 64) % 256
-    b = np.where(top, (ys - dt) * 5, (ys + dt) * 5 + 32) % 256
-    px[:, :, 1] = np.broadcast_to(g % 256, (h, w))
-    px[:, :, 2] = np.broadcast_to(b % 256, (h, w))
-    return px
-
-
-def make_h264_part_bytes(i: int, qp: int = 10, gop: int = 4) -> bytes:
-    """The partitioned-motion GOP family: four regions translating in
-    opposing directions across mid-macroblock splits (part_scene), so
-    the straddling macroblocks code as P_L0_L0_8x16 / P_L0_L0_16x8 /
-    P_8x8 — asserted per frame via ``min_part_mbs`` — while R's
-    per-frame step rides the inter residuals. A decoder whose
-    per-partition MV prediction or sub-macroblock motion compensation
-    was wrong would reconstruct the straddling MBs from the wrong
-    reference area and drift the means far outside the oracle gates
-    (and fail the byte-exact pytest round trip first)."""
-    n, w, h = video_params(i)
-    frames = [part_scene(i, t, gop) for t in range(n)]
-    # the scene translates by whole pixels — full-pel search keeps the
-    # 41-block-per-MB mode decision affordable (same trade as the
-    # B-GOP fixture family)
-    return encode_mp4_h264_gop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, search_range=6,
-        code_residual=True, partitions=True, min_part_mbs=1, quarter=False,
-    )
-
-
-def mref_scene(i: int, t: int) -> np.ndarray:
-    """Frame t of multi-reference-fixture video i: the scene ALTERNATES
-    between two structurally different phases (even frames carry an
-    x-frequency-3 G ramp and y-frequency-5 B ramp; odd frames
-    x-frequency-5 / y-frequency-2 — no translation maps one phase onto
-    the other), and R steps (7i + 11t) mod 256 per frame. A P frame
-    therefore predicts well ONLY from two frames back (ref_idx 1): the
-    encoder must pick it, and a decoder that ignored ref_idx_l0 would
-    reconstruct the wrong phase entirely. (The phases deliberately do
-    NOT translate — on the family's 16-px-wide members the
-    edge-innovation of a moving ramp would rival the phase mismatch;
-    motion is the gop/parts fixtures' job, reference selection is
-    this one's.)"""
-    _, w, h = video_params(i)
-    phase = t % 2
-    xs = np.arange(w, dtype=np.int64)[None, :]
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    fx, fy = (3, 5) if phase == 0 else (5, 2)
-    px = np.empty((h, w, 3), dtype=np.uint8)
-    px[:, :, 0] = (7 * i + 11 * t) % 256
-    px[:, :, 1] = np.broadcast_to((xs * fx) % 256, (h, w))
-    px[:, :, 2] = np.broadcast_to((ys * fy) % 256, (h, w))
-    return px
-
-
-def make_h264_mref_bytes(i: int, qp: int = 10, gop: int = 6) -> bytes:
-    """Multi-reference GOP family over :func:`mref_scene`: two-deep
-    reference window, per-frame assertion that every P frame with two
-    available references genuinely signalled ref_idx 1 (min_ref1_mbs)."""
-    n, w, h = video_params(i)
-    frames = [mref_scene(i, t) for t in range(n)]
-    return encode_mp4_h264_gop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, search_range=6,
-        code_residual=True, quarter=False, n_refs=2, min_ref1_mbs=1,
-    )
-
-
-def fade_scene(i: int, t: int) -> np.ndarray:
-    """Frame t of fade-fixture video i: a fixed grayscale EVEN-valued
-    texture at full brightness on even frames and exactly half on odd
-    frames, plus one 8x8 'beacon' square whose (even) value changes
-    every frame so at least one macroblock still codes residuals.
-    Grayscale keeps chroma exactly flat 128, and even values make the
-    0.5x / 2x fade EXACTLY representable by explicit weights (luma
-    w=16 or 64 at denom 5, chroma offset 64 / -128) — so weighted
-    prediction is exact and macroblocks genuinely skip."""
-    _, w, h = video_params(i)
-    xs = np.arange(w, dtype=np.int64)[None, :]
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    base = (((xs * 6 + ys * 10 + 4 * i) % 256) // 2) * 2
-    v = base if t % 2 == 0 else base // 2
-    v = np.broadcast_to(v, (h, w)).copy()
-    if w > 16 or h > 16:
-        # beacon only when another MB remains free to skip (the
-        # family's 16x12 members are a single macroblock)
-        v[2:10, 2:10] = ((64 + 32 * t) % 128) * 2
-    px = np.empty((h, w, 3), dtype=np.uint8)
-    px[:, :, 0] = px[:, :, 1] = px[:, :, 2] = v
-    return px
-
-
-def _fade_weights(k: int, n_active: int) -> dict:
-    """Exact pred_weight_table for the fade fixture: odd frames halve
-    the previous (ratio 1/2: luma 16/32, chroma axis-preserving offset
-    +64), even P frames double it (ratio 2: luma 64/32, offset -128)."""
-    if k % 2 == 1:
-        entry = (16, 0, (16, 16), (64, 64))
-    else:
-        entry = (64, 0, (16, 16), (64, 64))
-    # chroma is flat 128 either way: 128*16/32 + 64 = 128 exactly
-    return {"luma_denom": 5, "chroma_denom": 5, "refs": [entry] * n_active}
-
-
-def make_h264_fade_bytes(i: int, qp: int = 10, gop: int = 6) -> bytes:
-    """Weighted-prediction GOP family over :func:`fade_scene`: the PPS
-    sets weighted_pred_flag, each P slice carries the exact fade
-    weights, and the builder asserts per frame that macroblocks
-    genuinely SKIPPED (exact weighted prediction) while the beacon
-    macroblock still coded residuals — a decoder that ignored the
-    weight table would reconstruct every odd frame at double
-    brightness."""
-    n, w, h = video_params(i)
-    frames = [fade_scene(i, t) for t in range(n)]
-    return encode_mp4_h264_gop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, search_range=4,
-        code_residual=True, quarter=False, weights_for=_fade_weights,
-        min_skip_mbs=1,
-    )
-
-
-def make_h264_b_bytes(
-    i: int, qp: int = 10, gop: int = 6, b_frames: int = 2
-) -> bytes:
-    """The B-frame (IBBP + ctts) fixture family. Display position t
-    carries R = (7i + 11t) mod 256 — a luminance step EVERY frame —
-    while G/B translate (+1, +1) px per frame inside the GOP. Samples
-    are stored in DECODE order with the ctts box carrying the
-    reorder, so the R channel is the discriminator: a reader that
-    ignored composition times would show the anchor P's R at display
-    position 1 (22 grey levels off) and a reader that dropped the B
-    residual would hold R at an anchor's value (>= 11 levels off),
-    both far outside the +-2 oracle gate, while the real
-    presentation-ordered bi-predictive decode stays within
-    quantization error. Bi-prediction is picked for a real reason
-    here: a B midway between anchors has L0/L1 DC errors of 11/22 but
-    a bi-average error under 6, so SAD mode selection lands B_Bi on
-    genuinely bracketed content."""
-    n, w, h = video_params(i)
-    frames = []
-    for t in range(n):
-        dt = t % gop
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + 11 * t) % 256
-        px[:, :, 1] = (np.arange(w, dtype=np.uint16) + dt).astype(np.uint8)[
-            None, :
-        ]
-        px[:, :, 2] = (np.arange(h, dtype=np.uint16) + dt).astype(np.uint8)[
-            :, None
-        ]
-        frames.append(px)
-    # integer fixture motion: full-pel search (quarter-pel refinement
-    # would triple the synthesis cost and, by construction, never win)
-    return encode_mp4_h264_bgop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, b_frames=b_frames,
-        search_range=4, code_residual=True, quarter=False,
-    )
-
-
 def _media_gen(spark, n: int, prefix: str, make_bytes) -> DataFrame:
     schema = StructType(
         [
@@ -1407,11 +690,6 @@ def make_h264_intra_media(spark, n: int = 24) -> DataFrame:
     return _media_gen(spark, n, "v", make_h264_intra_bytes)
 
 
-def make_h264_gop_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of IDR+P motion-compensated GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_gop_bytes)
-
-
 def make_h264_i4_media(spark, n: int = 24) -> DataFrame:
     """Executor-side synthesis of I_4x4 spatially-predicted payloads."""
     return _media_gen(spark, n, "v", make_h264_i4_bytes)
@@ -1420,282 +698,6 @@ def make_h264_i4_media(spark, n: int = 24) -> DataFrame:
 def make_h264_mslice_media(spark, n: int = 24) -> DataFrame:
     """Executor-side synthesis of multi-slice intra H.264 payloads."""
     return _media_gen(spark, n, "v", make_h264_mslice_bytes)
-
-
-def make_h264_res_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of residual-coded (cbp != 0) GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_res_bytes)
-
-
-def make_h264_part_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of partitioned-motion GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_part_bytes)
-
-
-def make_h264_listmod_bytes(i: int, qp: int = 10, gop: int = 6) -> bytes:
-    """Reference-LIST-MODIFICATION GOP family over :func:`mref_scene`:
-    the same two-phase content that predicts well only from two frames
-    back — but instead of signalling ref_idx 1, every P slice with two
-    stored references carries the 7.3.3.1 modification commands that
-    move the older picture to list position 0 (``l0_reorder=(1, 0)``)
-    and codes plain ref_idx 0.  The builder asserts per frame that
-    ref_idx 0 genuinely carried the prediction and ref_idx 1 went
-    unused: a decoder that skipped the 8.2.4.3.1 replay would
-    motion-compensate the WRONG PHASE entirely (the oracle's mean
-    gates catch it downstream)."""
-    n, w, h = video_params(i)
-    frames = [mref_scene(i, t) for t in range(n)]
-    from flow_indexer_spark.operators import h264codec as h264
-    from flow_indexer_spark.operators.h264inter import encode_frame_sample_p
-    from flow_indexer_spark.operators.h264intra import encode_idr_i16
-
-    samples, sync = [], []
-    recon = None
-    window: list[tuple] = []
-    for k, f in enumerate(frames):
-        if k % gop == 0:
-            y, cb, cr = h264.frame_to_planes(f)
-            nal = h264.encode_idr_ipcm(y, cb, cr, idr_pic_id=k % 65536)
-            recon = (y, cb, cr)
-            samples.append(len(nal).to_bytes(4, "big") + nal)
-            sync.append(k)
-            window = [recon]
-        else:
-            ref_list = list(reversed(window))[:2]
-            reorder = (1, 0) if len(ref_list) == 2 else None
-            sample, recon, stats = encode_frame_sample_p(
-                f, ref_list, frame_num=k % gop, qp=qp, search_range=6,
-                code_residual=True, return_stats=True, quarter=False,
-                l0_reorder=reorder,
-            )
-            if reorder is not None:
-                used0 = stats["ref_idx"].get(0, 0)
-                used1 = stats["ref_idx"].get(1, 0)
-                if used0 < 1 or used1 > 0:
-                    raise AssertionError(
-                        f"frame {k}: modified-list ref_idx usage "
-                        f"{{0: {used0}, 1: {used1}}} — the reorder no "
-                        f"longer carries the prediction: {stats}"
-                    )
-            samples.append(sample)
-            window = (window + [recon])[-2:]
-    avcc = _box(
-        b"avcC",
-        h264.make_avcc(h264.make_sps(w, h, ref_frames=2), h264.make_pps()),
-    )
-    return _encode_mp4(
-        samples, w, h, VIDEO_FPS,
-        _visual_entry(b"avc1", w, h, b"h264 lmod", avcc),
-        sync_samples=sync,
-    )
-
-
-_WBIPRED_WEIGHTS = {
-    "luma_denom": 2,
-    "chroma_denom": 2,
-    "l0": (6, 0, (6, 6), (0, 0)),
-    "l1": (2, 0, (2, 2), (0, 0)),
-}
-
-
-def wbipred_scene(i: int, t: int) -> np.ndarray:
-    """Frame t of the weighted-bi fixture video i (gop 3, IBP): GOP
-    start anchors carry a +60-brightness ramp scene, end anchors the
-    same ramps at +0, and the single B between them is the EXACT
-    6:2 weighted mix (spec 8.4.2.3.2 with logWD 2, zero offsets) of
-    the two anchor scenes — 45 levels above the dark anchor where the
-    DEFAULT bi average sits at 30: a decoder that ignored the weight
-    table misses the B frames' means by ~15 grey levels, far outside
-    the +-2 oracle gate."""
-    from flow_indexer_spark.operators.h264inter import _wp_bi_block
-
-    n, w, h = video_params(i)
-
-    def _anchor(shift: int) -> np.ndarray:
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + shift) % 256
-        px[:, :, 1] = ((np.arange(w, dtype=np.int64) * 3 + shift) % 256)[
-            None, :
-        ].astype(np.uint8)
-        px[:, :, 2] = ((np.arange(h, dtype=np.int64) * 5 + shift) % 256)[
-            :, None
-        ].astype(np.uint8)
-        return px
-
-    r = t % 3
-    if r == 0:
-        return _anchor(60)
-    if r == 2:
-        return _anchor(0)
-    a, b = _anchor(60), _anchor(0)
-    out = np.empty_like(a)
-    for c in range(3):
-        out[:, :, c] = _wp_bi_block(
-            a[:, :, c], b[:, :, c], (6, 0), (2, 0), 2
-        )
-    return out
-
-
-def make_h264_wbipred_bytes(i: int, qp: int = 10) -> bytes:
-    """Weighted-BI-prediction GOP family over :func:`wbipred_scene`:
-    IBP GOPs (gop 3, one B per GOP) coded with the explicit 6:2 weight
-    table — the B content IS the weighted mix of its anchors, so the
-    weighted prediction is exact where the default average is ~15
-    levels off."""
-    n, w, h = video_params(i)
-    frames = [wbipred_scene(i, t) for t in range(n)]
-    return encode_mp4_h264_bgop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=3, b_frames=2,
-        search_range=4, code_residual=True, quarter=False,
-        bi_weights=_WBIPRED_WEIGHTS,
-    )
-
-
-def wbimplicit_scene(i: int, t: int) -> np.ndarray:
-    """Frame t of the IMPLICIT weighted-bi fixture (gop 4, IBBP):
-    bright (+60) start anchors, dark end anchors, and each B carries
-    the POC-IMPLICIT mix of its anchors — B at display offset 1 mixes
-    43:21 toward the past anchor, offset 2 mixes 22:42 toward the
-    future (implicit_bi_weights(2d, 0, 6)).  A default-averaging
-    decoder is ~10 grey levels off on every B; an explicit-table
-    decoder has no table to read (idc 2 codes none)."""
-    from flow_indexer_spark.operators.h264inter import (
-        _wp_bi_block,
-        implicit_bi_weights,
-    )
-
-    n, w, h = video_params(i)
-
-    def _anchor(shift: int) -> np.ndarray:
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + shift) % 256
-        px[:, :, 1] = ((np.arange(w, dtype=np.int64) * 3 + shift) % 256)[
-            None, :
-        ].astype(np.uint8)
-        px[:, :, 2] = ((np.arange(h, dtype=np.int64) * 5 + shift) % 256)[
-            :, None
-        ].astype(np.uint8)
-        return px
-
-    r = t % 4
-    if r == 0:
-        return _anchor(60)
-    if r == 3:
-        return _anchor(0)
-    w0, w1 = implicit_bi_weights(2 * r, 0, 6)
-    a, b = _anchor(60), _anchor(0)
-    out = np.empty_like(a)
-    for c in range(3):
-        out[:, :, c] = _wp_bi_block(
-            a[:, :, c], b[:, :, c], (w0, 0), (w1, 0), 5
-        )
-    return out
-
-
-def make_h264_wbimplicit_bytes(i: int, qp: int = 10) -> bytes:
-    """Implicit weighted-bi GOP family over :func:`wbimplicit_scene`:
-    IBBP GOPs under a weighted_bipred_idc-2 PPS — no weight syntax
-    anywhere; both encoder and decoder derive the per-B weights from
-    the POCs the GopDecoder tracks."""
-    n, w, h = video_params(i)
-    frames = [wbimplicit_scene(i, t) for t in range(n)]
-    return encode_mp4_h264_bgop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=4, b_frames=2,
-        search_range=4, code_residual=True, quarter=False,
-        implicit_bi=True,
-    )
-
-
-def make_h264_wbimplicit_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of implicit weighted-bi payloads."""
-    return _media_gen(spark, n, "v", make_h264_wbimplicit_bytes)
-
-
-def make_h264_wbipred_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of weighted-bi GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_wbipred_bytes)
-
-
-def make_h264_listmod_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of list-modification GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_listmod_bytes)
-
-
-def make_h264_mref_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of multi-reference GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_mref_bytes)
-
-
-def make_h264_fade_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of weighted-prediction fade payloads."""
-    return _media_gen(spark, n, "v", make_h264_fade_bytes)
-
-
-def make_h264_b_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of B-frame (IBBP + ctts) GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_b_bytes)
-
-
-def make_h264_tdirect_bytes(
-    i: int, qp: int = 10, gop: int = 6, b_frames: int = 2
-) -> bytes:
-    """The TEMPORAL-direct B-frame fixture family: the same
-    stepped-R / translating-G/B content as make_h264_b_bytes, coded
-    with direct_spatial_mv_pred_flag = 0 — every direct/skip
-    macroblock's motion comes from POC-scaled co-located anchor motion
-    (8.4.1.2.3), not the spatial median.  The content translates (+1,
-    +1) px per display frame, so the P anchor's co-located MVs are
-    (gap, gap) full-pel and the POC ratio tb/td scales them to exactly
-    the B's own displacement — temporal direct predicts the
-    translation with ZERO motion bits and wins SAD selection for
-    real, which tests/test_h264_tdirect.py asserts on the wire."""
-    n, w, h = video_params(i)
-    frames = []
-    for t in range(n):
-        dt = t % gop
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + 11 * t) % 256
-        px[:, :, 1] = (np.arange(w, dtype=np.uint16) + dt).astype(np.uint8)[
-            None, :
-        ]
-        px[:, :, 2] = (np.arange(h, dtype=np.uint16) + dt).astype(np.uint8)[
-            :, None
-        ]
-        frames.append(px)
-    return encode_mp4_h264_bgop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, b_frames=b_frames,
-        search_range=4, code_residual=True, quarter=False,
-        direct_mode="temporal",
-    )
-
-
-def make_h264_tdirect_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of temporal-direct B-GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_tdirect_bytes)
-
-
-def make_h264_bparts_bytes(i: int, qp: int = 10, gop: int = 4) -> bytes:
-    """The PARTITIONED B-frame family: the part_scene four-region
-    opposing-motion content inside an IBBP GOP, so macroblocks
-    straddling the mid-macroblock splits code as Table 7-14 16x8/8x16
-    two-partition B types — ``min_part_mbs=1`` makes the builder FAIL
-    if the mode decision didn't genuinely emit one (the
-    make_h264_part_bytes discipline, lifted to B slices).  A decoder
-    whose per-partition per-LIST MV prediction or partition fill order
-    was wrong reconstructs the straddling MBs from the wrong reference
-    area of the wrong list and GOP-chains the error."""
-    n, w, h = video_params(i)
-    frames = [part_scene(i, t, gop) for t in range(n)]
-    return encode_mp4_h264_bgop(
-        frames, fps=VIDEO_FPS, qp=qp, gop=gop, b_frames=2,
-        search_range=6, code_residual=True, quarter=False,
-        min_part_mbs=1, partitions=True,
-    )
-
-
-def make_h264_bparts_media(spark, n: int = 24) -> DataFrame:
-    """Executor-side synthesis of partitioned-B GOP payloads."""
-    return _media_gen(spark, n, "v", make_h264_bparts_bytes)
 
 
 # --- the Spark stage --------------------------------------------------------

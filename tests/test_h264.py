@@ -116,8 +116,8 @@ def test_classifies_unsupported_coding_tools():
         H.decode_idr_ipcm(H.rbsp_to_nal(0x65, w.rbsp_trailing()), sps)
     # CABAC PPS: parsing now SUCCEEDS (operators/h264cabac.py decodes
     # CABAC I_PCM IDR slices); the flag routes slice decoding, and the
-    # CAVLC-only paths classify on it (test_h264_cabac.py pins both
-    # the decode route and the GopDecoder classification)
+    # CAVLC-only paths classify on it (test_h264_cabac.py pins the
+    # decode route)
     assert H.parse_pps(H.make_pps())["cabac"] is False
     cab = H._BitWriter()
     cab.ue(0)

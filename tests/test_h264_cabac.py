@@ -64,16 +64,10 @@ def test_mp4_cabac_decodes_identical_to_cavlc():
         assert (cav[k] == cab[k]).all()
 
 
-def test_pps_flag_and_inter_classification():
+def test_pps_cabac_flag():
     pps = H.parse_pps(make_pps_cabac())
     assert pps["cabac"] is True
     assert H.parse_pps(H.make_pps())["cabac"] is False
-    # inter decoding under a CABAC PPS classifies at the context layer
-    from flow_indexer_spark.operators.h264inter import GopDecoder
-
-    avcc = H.make_avcc(H.make_sps(16, 16), make_pps_cabac())
-    with pytest.raises(NotImplementedError, match="CABAC"):
-        GopDecoder(avcc)
 
 
 def _header_writer():

@@ -132,16 +132,14 @@ def test_contiguity_and_coverage_enforced():
         I.decode_idr_picture([nals[2]], _sps(1, 1))
 
 
-def test_sample_layer_and_gop_decoder_accept_multislice():
+def test_sample_layer_accepts_multislice():
     """encode_frame_sample_i16(slices=3) packs three length-prefixed
-    NALs into one sample; both decode_frame_sample_any and the
-    stateful GopDecoder must decode it."""
+    NALs into one sample; decode_frame_sample_any must decode it."""
     from flow_indexer_spark.operators.h264codec import (
         frame_to_planes,
         make_avcc,
         planes_to_frame,
     )
-    from flow_indexer_spark.operators.h264inter import GopDecoder
 
     rng = np.random.default_rng(3)
     px = rng.integers(0, 256, (48, 64, 3), dtype=np.uint8)
@@ -154,7 +152,6 @@ def test_sample_layer_and_gop_decoder_accept_multislice():
     _, recon = I.encode_idr_i16(y, cb, cr, qp=40, slices=3, return_recon=True)
     expect = planes_to_frame(*recon, 64, 48)
     assert np.array_equal(out, expect)
-    assert np.array_equal(GopDecoder(avcc).decode(sample), expect)
 
 
 def test_multislice_fuzz_classifies():

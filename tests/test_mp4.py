@@ -170,49 +170,3 @@ def test_corrupt_tables_fail_classifiably():
         except (ValueError, NotImplementedError):
             pass
 
-
-def test_h264_residual_gop_tracks_per_frame_luminance():
-    """make_h264_res_bytes: R steps (7i+11t) mod 256 EVERY frame — only
-    coded residual (cbp != 0) can carry a global luminance step. The
-    residual stream tracks it within quant error; the no-residual
-    control on the SAME frames goes stale between IDRs (the
-    discriminator the media_h264_residual oracle relies on)."""
-    from flow_indexer_spark.operators.mp4codec import (
-        encode_mp4_h264_gop,
-        make_h264_res_bytes,
-        mp4_frames,
-        video_params,
-    )
-
-    i = 5
-    n, w, h = video_params(i)
-    data = make_h264_res_bytes(i)
-    worst = 0.0
-    for idx, t_ms, px in mp4_frames(data, every_n=1):
-        want_r = (7 * i + 11 * idx) % 256
-        worst = max(worst, abs(float(px[:, :, 0].mean()) - want_r))
-        dt = idx % 4
-        assert abs(float(px[:, :, 1].mean()) - ((w - 1) / 2 + 2 * dt)) < 1.5
-        assert abs(float(px[:, :, 2].mean()) - ((h - 1) / 2 + dt)) < 3.2
-    assert worst < 1.5
-
-    # control: identical frames, residual coding OFF -> stale R at the
-    # GOP tail (the per-frame step accumulates ~11 levels per P frame)
-    frames = []
-    for t in range(n):
-        dt = t % 4
-        px = np.empty((h, w, 3), dtype=np.uint8)
-        px[:, :, 0] = (7 * i + 11 * t) % 256
-        px[:, :, 1] = (np.arange(w, dtype=np.uint16) + 2 * dt).astype(
-            np.uint8
-        )[None, :]
-        px[:, :, 2] = (np.arange(h, dtype=np.uint16) + dt).astype(
-            np.uint8
-        )[:, None]
-        frames.append(px)
-    ctrl = encode_mp4_h264_gop(frames, qp=10, gop=4, search_range=4)
-    stale = 0.0
-    for idx, t_ms, px in mp4_frames(ctrl, every_n=1):
-        want_r = (7 * i + 11 * idx) % 256
-        stale = max(stale, abs(float(px[:, :, 0].mean()) - want_r))
-    assert stale > 8.0  # the no-residual twin CANNOT pass the gate

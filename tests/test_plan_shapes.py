@@ -322,6 +322,23 @@ def test_sketch_rollup_is_one_exchange_objhash(spark):
     assert _shuffles(rollup_estimates(r)) == 2
 
 
+def test_video_frame_sampling_is_narrow_arrow_stage(spark):
+    """mp4codec.video_frame_features: one Arrow-batched mapInPandas over
+    the payload table's existing partitioning — zero Exchanges (a video's
+    frames never leave its task) and no row-at-a-time Python."""
+    from flow_indexer_spark.operators.mp4codec import (
+        make_mp4_media,
+        video_frame_features,
+    )
+
+    out = video_frame_features(make_mp4_media(spark, 8), every_n=2)
+    # the fixture generator's repartition is the input's layout, not the
+    # operator's: the frame stage itself must add no Exchange beyond it
+    assert _shuffles(out) == 1  # make_mp4_media's own repartition only
+    assert _count(out, "MapInPandas") == 2  # synth + frame stage
+    assert _count(out, "BatchEvalPython") == 0
+
+
 def test_rrf_topk_is_take_ordered(spark):
     """rrf_fuse with topk must compile to TakeOrderedAndProject, never
     a global Sort of the fused table."""
