@@ -2,10 +2,17 @@ PY ?= python
 
 .PHONY: test bench package smoke
 
-# the ROADMAP tier-1 command: same env, timeout and flags as the gate
+# the ROADMAP tier-1 command: same env, timeout and flags as the gate; then
+# its wall time and the CPU-seconds stolen from this host's CPUs meanwhile
+# (/proc/stat's steal column), and the suite's exit status
+STEAL = awk '/^cpu /{print $$9}' /proc/stat
 test:
+	@steal0=$$($(STEAL)); t0=$$(date +%s); \
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
-	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider; \
+	rc=$$?; steal1=$$($(STEAL)); t1=$$(date +%s); \
+	echo "tier-1 wall $$((t1 - t0)) s, steal $$(( (steal1 - steal0) / $$(getconf CLK_TCK) )) CPU-s"; \
+	exit $$rc
 
 # one seeded run of each workload in BENCHMARK.json; prints one JSON line each
 bench:

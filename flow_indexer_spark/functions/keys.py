@@ -40,10 +40,17 @@ def ip_to_key(ip: str) -> str | None:
 
 
 def key_to_ip(key: str) -> str:
-    """Inverse of ip_to_key — hex key back to canonical display form."""
+    """Inverse of ip_to_key — hex key back to canonical display form.
+    IPv4 renders from the octets directly, with no ``ipaddress`` object
+    (an /expandcidr body renders hundreds); IPv6 goes through
+    ``ipaddress`` for its canonical ``::`` compression. Bad hex or a bad
+    length raises ValueError."""
     n = len(key)
     if n == V4_KEY_LEN:
-        return str(ipaddress.IPv4Address(bytes.fromhex(key)))
+        octets = bytes.fromhex(key)
+        if len(octets) != 4:  # fromhex skips whitespace
+            raise ValueError(f"bad IPv4 key {key!r}")
+        return ".".join(map(str, octets))
     if n == V6_KEY_LEN:
         return str(ipaddress.IPv6Address(bytes.fromhex(key)))
     raise ValueError(f"bad key length {n}")

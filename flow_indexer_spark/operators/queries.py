@@ -14,21 +14,31 @@ Reference entry points re-expressed as DataFrame library functions:
 Each of these returns a DataFrame (composable, lazily planned). They
 are the batch and composition path and the oracle for the interactive
 path, which answers the same queries in-process with pyarrow and
-without a Spark job: ``search_files`` and ``expand_files`` read the
-key-sorted postings files (the reference's LevelDB ``Get`` / range
-iterator); ``search_turns_files`` resolves those hits against the
-transcripts files, and ``stats_buckets`` and ``dump_files`` build on it.
+without a Spark job: ``search_files`` and ``expand_files``
+binary-search decoded row groups of the key-sorted postings files, held
+in a bounded process-wide cache (the reference's LevelDB ``Get`` / range
+iterator over its block cache); ``search_turns_files`` resolves those
+hits against the transcripts files, and ``stats_buckets`` and
+``dump_files`` build on it.
 Both paths take their predicate from one parser, ``parse_query``.
 """
 
 from __future__ import annotations
 
+import bisect
 import os
+import sys
+import threading
+from collections import OrderedDict
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, functions as F
 
 from flow_indexer_spark.functions.keys import (
@@ -116,21 +126,6 @@ def _spark_filter(q: KeyQuery) -> Column:
     return (F.col("entity_class") == q.klass) & pred
 
 
-def _arrow_filter(q: KeyQuery) -> pc.Expression:
-    """KeyQuery -> pyarrow dataset filter, the same predicate as
-    ``_spark_filter``: partition pruning on entity_class, row-group
-    min/max pruning on entity_key."""
-    key = pc.field("entity_key")
-    if q.point is not None:
-        pred = key == q.point
-    elif q.prefix is not None:
-        pred = pc.starts_with(key, q.prefix)
-    else:
-        lo, hi, key_len = q.key_range
-        pred = (key >= lo) & (key <= hi) & (pc.utf8_length(key) == key_len)
-    return (pc.field("entity_class") == q.klass) & pred
-
-
 def search(postings: DataFrame, query: str) -> DataFrame:
     """entity (point or CIDR range) -> distinct (conv_id, turn_idx), sorted.
 
@@ -160,40 +155,193 @@ def expand(postings: DataFrame, cidr: str) -> DataFrame:
     )
 
 
-def open_postings_files(path: str) -> ds.Dataset:
-    """The postings table at ``path`` as a pyarrow dataset for
-    ``search_files`` / ``expand_files``: the files of its live batches
-    (``manifest.live_batch_dirs``), listed once here, with their hive
-    partition columns. Like a DataFrame, the dataset keeps the file
-    listing it was opened with. Raises ValueError when the table has no
-    live batch."""
+# -- the in-process path for /search and /expandcidr -----------------------
+
+#: Decoded bytes of postings row groups kept in memory, summed over every
+#: postings reader of the process. A row group larger than this is
+#: decoded for its request and not kept.
+BLOCK_CACHE_BYTES = 256 << 20
+
+
+@dataclass(frozen=True)
+class Block:
+    """One decoded postings row group, sorted by ``entity_key``: the
+    (entity_key, postings) rows, their keys as Python strings for
+    ``bisect``, and the bytes both take."""
+
+    rows: pa.RecordBatch
+    keys: list[str]
+    nbytes: int
+
+
+class BlockCache:
+    """A least-recently-used map of decoded row groups, bounded by
+    ``BLOCK_CACHE_BYTES``. The lock guards only the bookkeeping: a miss
+    decodes outside it, so threads that miss on one row group together
+    each decode it, and only the first insert is kept."""
+
+    def __init__(self) -> None:
+        self.blocks: OrderedDict[tuple, Block] = OrderedDict()
+        self.nbytes = 0
+        self.lock = threading.Lock()
+
+    def get(self, key: tuple, decode: Callable[[], Block]) -> Block:
+        with self.lock:
+            block = self.blocks.get(key)
+            if block is not None:
+                self.blocks.move_to_end(key)
+                return block
+        block = decode()
+        with self.lock:
+            if block.nbytes <= BLOCK_CACHE_BYTES and key not in self.blocks:
+                self.blocks[key] = block
+                self.nbytes += block.nbytes
+                while self.nbytes > BLOCK_CACHE_BYTES:
+                    self.nbytes -= self.blocks.popitem(last=False)[1].nbytes
+        return block
+
+
+#: the one cache of the process; keys are (path, row group, size,
+#: mtime_ns), so a rewritten file never answers from its old blocks
+BLOCK_CACHE = BlockCache()
+
+
+@dataclass(frozen=True)
+class PostingsFile:
+    """One postings file: its path, the entity class of its partition
+    directory, and each row group's (min, max) ``entity_key`` from the
+    footer (None where the footer has no statistics)."""
+
+    path: str
+    entity_class: str
+    key_ranges: tuple[tuple[str, str] | None, ...]
+
+
+@dataclass(frozen=True)
+class PostingsFiles:
+    """The postings table as ``search_files`` / ``expand_files`` read it:
+    its files, listed once, and the schema of the (entity_key, postings)
+    rows they return."""
+
+    files: tuple[PostingsFile, ...]
+    schema: pa.Schema
+
+
+def _postings_file(table_path: str, path: str) -> PostingsFile:
+    """Read ``path``'s footer: its row groups' key ranges."""
+    meta = pq.read_metadata(path)
+    col = next(
+        j for j in range(meta.num_columns) if meta.schema.column(j).path == "entity_key"
+    )
+    ranges = []
+    for i in range(meta.num_row_groups):
+        stats = meta.row_group(i).column(col).statistics
+        has = stats is not None and stats.has_min_max
+        ranges.append((stats.min, stats.max) if has else None)
+    parts = dict(
+        seg.split("=", 1)
+        for seg in os.path.relpath(os.path.dirname(path), table_path).split(os.sep)
+        if "=" in seg
+    )
+    return PostingsFile(path, unquote(parts["entity_class"]), tuple(ranges))
+
+
+def open_postings_files(path: str) -> PostingsFiles:
+    """The postings table at ``path`` for ``search_files`` /
+    ``expand_files``: the files of its live batches
+    (``manifest.live_batch_dirs``), listed once here, each with the
+    entity class of its ``entity_class=`` directory and its row groups'
+    key ranges from the footer. Like a DataFrame, the reader keeps the
+    file listing it was opened with. Raises ValueError when the table
+    has no live batch or no file."""
     dirs = live_batch_dirs(path)
     if not dirs:
         raise ValueError(f"no live batches under {path}")
     files = [
-        os.path.join(root, f)
+        _postings_file(path, os.path.join(root, f))
         for d in dirs
         for root, _dirs, names in os.walk(d)
         for f in names
         if f.endswith(".parquet")
     ]
-    return ds.dataset(
-        files, format="parquet", partitioning="hive", partition_base_dir=path
+    if not files:
+        raise ValueError(f"no postings files under {path}")
+    schema = pq.read_schema(files[0].path)
+    return PostingsFiles(
+        tuple(files), pa.schema([schema.field("entity_key"), schema.field("postings")])
     )
 
 
-def search_files(files: ds.Dataset, query: str) -> pa.Table:
+def _decode(path: str, row_group: int) -> Block:
+    """Read one row group's entity_key and postings, sorted by key: files
+    written before the key-sorted layout are unsorted. Python orders
+    strings by code point, as Arrow orders UTF-8 bytes."""
+    with pq.ParquetFile(path) as f:
+        rows = f.read_row_group(row_group, ["entity_key", "postings"], use_threads=False)
+    keys = rows["entity_key"].to_pylist()
+    if keys != sorted(keys):
+        rows = rows.sort_by("entity_key")
+        keys = rows["entity_key"].to_pylist()
+    batch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in rows.columns], schema=rows.schema
+    )
+    # the Python strings cost more than the Arrow keys; count both
+    nbytes = batch.nbytes + sum(map(sys.getsizeof, keys)) + 8 * len(keys)
+    return Block(batch, keys, nbytes)
+
+
+def _matching_rows(files: PostingsFiles, query: str) -> pa.Table:
+    """The (entity_key, postings) rows ``query`` matches. Row groups of
+    other classes, and those whose footer key range misses the query,
+    are skipped; each file still needed is ``os.stat``-ed, so a file a
+    compaction or forget deleted raises FileNotFoundError even when its
+    blocks are cached; each row group comes from ``BLOCK_CACHE`` and is
+    binary-searched."""
+    q = parse_query(query)
+    if q.point is not None:
+        lo = hi = q.point
+        width = None
+    elif q.prefix is not None:
+        lo = hi = q.prefix
+        width = len(q.prefix)  # compare keys cut to the prefix's length
+    else:
+        lo, hi, key_len = q.key_range
+        width = None
+    cut = None if width is None else (lambda k: k[:width])
+    batches = []
+    for f in files.files:
+        if f.entity_class != q.klass:
+            continue
+        groups = [
+            i for i, r in enumerate(f.key_ranges)
+            if r is None or (r[0][:width] <= hi and r[1][:width] >= lo)
+        ]
+        if not groups:
+            continue
+        stat = os.stat(f.path)
+        for i in groups:
+            block = BLOCK_CACHE.get(
+                (f.path, i, stat.st_size, stat.st_mtime_ns), partial(_decode, f.path, i)
+            )
+            start = bisect.bisect_left(block.keys, lo, key=cut)
+            stop = bisect.bisect_right(block.keys, hi, start, key=cut)
+            if start == stop:
+                continue
+            rows = block.rows.slice(start, stop - start)
+            if q.key_range is not None:  # the family-length guard
+                rows = rows.filter(pc.equal(pc.utf8_length(rows["entity_key"]), key_len))
+            batches.append(rows)
+    return pa.Table.from_batches(batches, files.schema)
+
+
+def search_files(files: PostingsFiles, query: str) -> pa.Table:
     """``search`` answered in-process from the postings files: the
     distinct (conv_id, turn_idx) hits as an Arrow table, sorted in byte
-    order like ``search``'s ``orderBy``. Reads only the ``postings``
-    column of rows that survive partition and row-group pruning, on the
-    calling thread: a lookup touches a few KB, and the daemon already
-    serves requests concurrently."""
-    chunks = files.to_table(
-        columns=["postings"],
-        filter=_arrow_filter(parse_query(query)),
-        use_threads=False,
-    )["postings"].combine_chunks()  # a miss yields no chunks at all
+    order like ``search``'s ``orderBy``. The matching rows come from
+    decoded row groups held in ``BLOCK_CACHE``, on the calling thread:
+    a cached lookup is a binary search, and the daemon already serves
+    requests concurrently."""
+    chunks = _matching_rows(files, query)["postings"].combine_chunks()
     hits = pa.Table.from_struct_array(pc.list_flatten(chunks))
     if hits.num_rows < 2:  # nothing to dedup or sort
         return hits
@@ -207,16 +355,12 @@ def search_files(files: ds.Dataset, query: str) -> pa.Table:
     )
 
 
-def expand_files(files: ds.Dataset, cidr: str) -> pa.Table:
+def expand_files(files: PostingsFiles, cidr: str) -> pa.Table:
     """``expand`` answered in-process from the postings files: the
     distinct matching ``entity_key``s as an Arrow table, sorted."""
-    keys = files.to_table(
-        columns=["entity_key"],
-        filter=_arrow_filter(parse_query(cidr)),
-        use_threads=False,
-    )
     return (
-        keys.group_by("entity_key", use_threads=False)
+        _matching_rows(files, cidr).select(["entity_key"])
+        .group_by("entity_key", use_threads=False)
         .aggregate([])
         .sort_by("entity_key")
     )
@@ -287,7 +431,7 @@ def open_transcripts_files(path: str) -> ds.Dataset:
 
 
 def search_turns_files(
-    files: ds.Dataset,
+    files: PostingsFiles,
     transcripts: ds.Dataset,
     query: str,
     columns: list[str] | None = None,
@@ -341,7 +485,7 @@ def stats_buckets(
 
 
 def dump_files(
-    files: ds.Dataset,
+    files: PostingsFiles,
     transcripts: ds.Dataset,
     query: str,
     contains: str | None = None,

@@ -33,21 +33,28 @@ granularity) is a 500 carrying the error text (web.go:33-42).
 Execution model: all four query routes run in-process on the handler's
 thread, through each indexer's ``IndexerHandle`` opened once, and start
 no Spark job. ``/search`` and ``/expandcidr`` read the key-sorted
-postings files through the handle's pyarrow dataset — partition pruning
-on the entity class, footer min/max pruning on the key, then an Arrow
-flatten, dedup and sort (``queries.search_files`` / ``expand_files``),
-like the reference's LevelDB ``Get`` and range iterator. ``/stats`` and
-``/dump`` resolve those hits against the handle's transcripts dataset —
-a ``conv_id`` filter, an Arrow left-semi join and a sort
+postings files through the handle's ``queries.PostingsFiles`` reader
+(``queries.search_files`` / ``expand_files``): row groups of other
+entity classes, or whose footer key range misses the query, are
+skipped; the others come decoded and key-sorted from one process-wide
+LRU cache bounded by decoded bytes (``queries.BLOCK_CACHE_BYTES``) and
+are binary-searched, then the hits are flattened, deduplicated and
+sorted in Arrow — like the reference's LevelDB ``Get`` and range
+iterator over its block cache. ``/stats`` and ``/dump`` resolve those
+hits, through the same cache, against the handle's transcripts dataset
+— a ``conv_id`` filter, an Arrow left-semi join and a sort
 (``queries.search_turns_files``) — and aggregate or render the matched
 turns with Arrow kernels, no Python loop per row. The daemon's one
 SparkSession serves only ``/health``. ``ThreadingHTTPServer`` starts a
-new thread for each request; a handle's datasets are immutable, so
-handler threads share no mutable state. A handle lists the files of the
-live batches when it is opened; once a compaction or forget deletes
-batches it listed, the next request through it fails with a not-found
-error, and the daemon reopens the handle once and answers from the new
-one.
+new thread for each request. A handle and its readers are immutable;
+the cache is the one state handler threads share, and one lock guards
+its bookkeeping while misses decode outside it. A handle lists the
+files of the live batches when it is opened; each request ``os.stat``s
+the files it reads, so once a compaction or forget deletes batches it
+listed, the next request through it fails with a not-found error, even
+where their row groups are cached, and the daemon reopens the handle
+once and answers from the new one. A cached row group is keyed by its
+file's path, size and mtime, so it never answers for a rewritten file.
 """
 
 from __future__ import annotations
@@ -72,15 +79,15 @@ from flow_indexer_spark.sources.manifest import read_live
 class IndexerHandle:
     """One registered indexer — the reference's Indexer struct analogue
     (flowindexer/flowindexer.go:48-54): its index root, its postings
-    table as a pyarrow dataset (every route) and the transcripts parquet
-    path and dataset that /stats and /dump resolve hits against (None
-    without one). ``postings`` and ``transcripts``, the same tables as
+    table as a ``queries.PostingsFiles`` reader (every route) and the
+    transcripts parquet path and dataset that /stats and /dump resolve
+    hits against (None without one). ``postings`` and ``transcripts``, the same tables as
     Spark DataFrames, serve no route: they are the library-side oracle
     of a served handle."""
 
     root: str
     postings: DataFrame
-    postings_files: ds.Dataset
+    postings_files: Q.PostingsFiles
     transcripts_path: str | None = None
     transcripts: DataFrame | None = None
     transcripts_files: ds.Dataset | None = None
@@ -93,7 +100,7 @@ def open_indexer(
 ) -> IndexerHandle:
     """Open an ingest-job output directory as an IndexerHandle; the one
     constructor of handles. ``transcripts`` is the transcripts parquet
-    path. The postings DataFrame and dataset each snapshot the live
+    path. The postings DataFrame and reader each snapshot the live
     batches' files (``manifest.live_batch_dirs``), and the transcripts
     DataFrame and dataset the files under ``transcripts``, here, once,
     not per request. Raises if the postings table has no live batch."""
@@ -177,7 +184,7 @@ def spark_datetimes(ts: pa.ChunkedArray | pa.Array) -> list:
 
 
 def query_stat(
-    files: ds.Dataset, transcripts: ds.Dataset, query: str, bucket: str | None
+    files: Q.PostingsFiles, transcripts: ds.Dataset, query: str, bucket: str | None
 ) -> dict:
     """The queryStat JSON document (/root/reference/flowindexer/
     flowindexer.go:66-80 json tags; :343-397 semantics): hits = matched
@@ -212,7 +219,7 @@ def query_stat(
 
 
 def dump_text(
-    files: ds.Dataset, transcripts: ds.Dataset, query: str, contains: str | None
+    files: Q.PostingsFiles, transcripts: ds.Dataset, query: str, contains: str | None
 ) -> str:
     """The /dump body: each matched turn's text, one per line."""
     turns = Q.dump_files(

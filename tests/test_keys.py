@@ -75,3 +75,20 @@ def test_cidr_nonstrict_host_bits():
 def test_key_to_ip_bad_length():
     with pytest.raises(ValueError):
         key_to_ip("0a00")
+
+
+def test_v4_key_to_ip_equals_ipaddress():
+    import ipaddress
+    import random
+
+    rng = random.Random(7)
+    keys = ["00000000", "ffffffff", "0a000001", "FFFFFFFF"]
+    keys += [f"{rng.getrandbits(32):08x}" for _ in range(2000)]
+    for k in keys:
+        assert key_to_ip(k) == str(ipaddress.IPv4Address(bytes.fromhex(k))), k
+
+
+@pytest.mark.parametrize("key", ["0a00000g", "0a 00 01", "zzzzzzzz", "0a0000", "0" * 31])
+def test_key_to_ip_bad_hex_or_length(key):
+    with pytest.raises(ValueError):
+        key_to_ip(key)

@@ -225,28 +225,30 @@ def test_fast_routes_run_no_spark_job(spark, server):
     assert _settled_job_ids(spark) - before, "the Spark witness ran no job"
 
 
-def test_concurrent_file_lookups_agree(server):
-    """The handle's Arrow datasets serve every handler thread: more
-    threads than cores, with frequent thread switches, all get the
-    single-threaded answer."""
+#: one URL per route shape, all over the ``ip`` row groups
+CONCURRENT_URLS = (
+    "/search?i=conn&q=10.0.0.1",
+    "/search?i=conn&q=10.0.0.0/8",
+    "/expandcidr?i=conn&q=0.0.0.0/0",
+    "/stats?i=conn&q=10.0.0.0/8&bucket=day",
+    "/dump?i=conn&q=10.0.0.1",
+)
+
+
+def _burst(base: str, want: dict[str, tuple[int, str]], n: int = 15) -> list[bool]:
+    """``n`` threads, started together with frequent thread switches,
+    each GET one of ``want``'s URLs under ``base``; True where the
+    answer equals ``want``'s."""
     import sys
 
-    urls = [
-        f"{server}/search?i=conn&q=10.0.0.1",
-        f"{server}/search?i=conn&q=10.0.0.0/8",
-        f"{server}/expandcidr?i=conn&q=0.0.0.0/0",
-        f"{server}/stats?i=conn&q=10.0.0.0/8&bucket=day",
-        f"{server}/dump?i=conn&q=10.0.0.1",
-    ]
-    want = {u: _get(u) for u in urls}
-    assert all(code == 200 and body for code, body in want.values())
+    urls = list(want)
     got: list[bool] = []
 
     def hit(url):
-        got.append(_get(url) == want[url])
+        got.append(_get(f"{base}{url}") == want[url])
 
     threads = [
-        threading.Thread(target=hit, args=(urls[i % len(urls)],)) for i in range(15)
+        threading.Thread(target=hit, args=(urls[i % len(urls)],)) for i in range(n)
     ]
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -258,7 +260,55 @@ def test_concurrent_file_lookups_agree(server):
     finally:
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
-    assert got == [True] * 15
+    return got
+
+
+def test_concurrent_file_lookups_agree(server):
+    """The handle's readers serve every handler thread: more threads
+    than cores, with frequent thread switches, all get the
+    single-threaded answer."""
+    want = {u: _get(f"{server}{u}") for u in CONCURRENT_URLS}
+    assert all(code == 200 and body for code, body in want.values())
+    assert _burst(server, want) == [True] * 15
+
+
+def test_cold_concurrent_misses_agree(
+    spark, server, pipeline_out, transcripts_path, tmp_path, monkeypatch
+):
+    """A freshly opened handle on a copy of the index, whose row groups
+    no request has decoded yet, gets 15 requests at once. A decode made
+    slow widens the miss window, so threads that miss on one row group
+    decode it side by side: every answer equals the single-threaded
+    one, and the cache's byte count stays the sum of the blocks it
+    keeps (one copy each)."""
+    import collections
+    import shutil
+
+    cfg, _ = pipeline_out
+    root = str(tmp_path / "idx")
+    shutil.copytree(cfg.output_root, root)
+    want = {u: _get(f"{server}{u}") for u in CONCURRENT_URLS}
+    assert all(code == 200 and body for code, body in want.values())
+    decodes = collections.Counter()
+    decode = Q._decode
+
+    def slow_decode(path, row_group):
+        decodes[path, row_group] += 1
+        time.sleep(0.05)
+        return decode(path, row_group)
+
+    monkeypatch.setattr(Q, "_decode", slow_decode)
+    cold = _serve(spark, {"conn": open_indexer(spark, root, transcripts_path)})
+    base = next(cold)
+    try:
+        assert _burst(base, want) == [True] * 15
+    finally:
+        next(cold, None)
+    assert max(decodes.values()) > 1, "no two threads missed together"
+    with Q.BLOCK_CACHE.lock:
+        blocks = Q.BLOCK_CACHE.blocks
+        assert {k[:2] for k in blocks if k[0].startswith(root)} == set(decodes)
+        assert Q.BLOCK_CACHE.nbytes == sum(b.nbytes for b in blocks.values())
 
 
 def _assert_routes_answer(base, spark, root, transcripts, q, routes):
